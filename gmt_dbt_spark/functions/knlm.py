@@ -60,6 +60,7 @@ from gmt_dbt_spark.catalog import table
 from gmt_dbt_spark.functions.text import _DUCK_TOKENS
 from gmt_dbt_spark.operators.dedup import tokens_col
 from gmt_dbt_spark.registry import query
+from gmt_dbt_spark.session import checkpoint
 
 KN_SCALE = 4096  # fixed-point log2 resolution (the ilog2 contract)
 _P31 = 2_147_483_647  # the shingle_hash Mersenne modulus
@@ -207,12 +208,13 @@ def text_kn_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     score. Every shuffled row is fixed-width ints."""
     docs = table(spark, sf_dir, "documents")
     bgs = _kn_bigrams(docs)
-    bg = (
-        bgs.groupBy("vh", "wh")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)  # 3 stats consumers + the join
+    # checkpointed for 3 stats consumers + the join; N11 is observed
+    # by the same job
+    bg, obs = checkpoint(
+        bgs.groupBy("vh", "wh").agg(F.count(F.lit(1)).alias("c")),
+        n11=F.count(F.lit(1)),
     )
-    n11 = bg.count()
+    n11 = obs.n11
     if n11 == 0:
         return docs.select(
             "doc_id",

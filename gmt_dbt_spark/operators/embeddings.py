@@ -192,15 +192,17 @@ def assert_embed_dims(df: DataFrame, col: str = "qv") -> DataFrame:
     SparkRuntimeException naming the offending width the moment a
     foreign-width vector reaches an unrolled consumer. Cost: one
     size() compare per row, inside the same codegen stage."""
+    # a NULL vector reports size -1, so it too gets the message
+    size = F.coalesce(F.size(F.col(col)), F.lit(-1))
     return df.filter(
         F.coalesce(
             F.assert_true(
-                F.size(F.col(col)) == EMBED_DIMS,
+                size == EMBED_DIMS,
                 F.concat(
                     F.lit(
                         f"EMBED_DIMS contract violated: size({col}) = "
                     ),
-                    F.size(F.col(col)).cast("string"),
+                    size.cast("string"),
                     F.lit(f" != {EMBED_DIMS} (embeddings table contract)"),
                 ),
             ),
@@ -370,6 +372,9 @@ def lloyd_centroids(q: DataFrame) -> list:
         else list(prev[c])
         for c in range(k)
     ]
+    # round 1 is fused into the init above, so a budget of 0 rounds
+    # (return the raw seeds) is not expressible here
+    assert KMEANS_ITERS >= 1, KMEANS_ITERS
     for _ in range(KMEANS_ITERS - 1):
         cents = kmeans_recompute(kmeans_assign(q, cents), dims, cents)
     return cents

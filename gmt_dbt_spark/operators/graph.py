@@ -13,7 +13,10 @@ member), linear in group size rather than quadratic cliques; the
 component labels converge by iterative min-label propagation over
 shuffled equi-joins — O(diameter) rounds, each a key-partitioned
 join, with `localCheckpoint` truncating the growing lineage (the
-classic Spark iterative-algorithm pitfall). At 100 TB the same loop
+classic Spark iterative-algorithm pitfall). The convergence test rides
+that checkpoint job (`session.checkpoint` observes the count of
+lowered labels, or the star loop's edge count), so a round launches no
+separate job to decide whether to stop. At 100 TB the same loop
 holds because state per round is |V| labels + |E| edges, both
 key-partitioned; for pathological diameters switch to the
 large-star/small-star algorithm (Kiveris et al., "Connected
@@ -34,67 +37,61 @@ from pyspark.sql.window import Window
 
 from gmt_dbt_spark.catalog import table
 from gmt_dbt_spark.registry import query
+from gmt_dbt_spark.session import checkpoint
+
+
+# Round budgets. Propagation needs O(diameter) rounds, so past
+# CC_MAX_ITER it raises and points at star contraction, whose
+# O(log² n) rounds STAR_MAX_ROUNDS bounds with a wide margin.
+CC_MAX_ITER = 25
+STAR_MAX_ROUNDS = 50
 
 
 def connected_components(
-    nodes: DataFrame,
-    edges: DataFrame,
-    id_col: str = "id",
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 25,
+    nodes: DataFrame, edges: DataFrame, id_col: str = "id"
 ) -> DataFrame:
-    """Min-label propagation: every node's component label converges
-    to the smallest node id reachable from it. Returns (id, comp).
+    """Min-label propagation over undirected (src, dst) edges: every
+    node's component label converges to the smallest node id
+    reachable from it. Returns (id, comp).
 
     Each round: one equi-join (neighbor labels) + one aggregation
     (min per node) + one left join (label update) — all shuffles on
-    the node id, so a cluster co-partitions them. Early-exits when a
-    round changes no label; raises if max_iter rounds don't converge
-    (diameter > max_iter ⇒ use large-star/small-star instead).
+    the node id, so a cluster co-partitions them. The round's
+    checkpoint job also counts the labels it lowered, and the loop
+    exits on a round that lowers none; raises if CC_MAX_ITER rounds
+    don't converge (diameter > CC_MAX_ITER ⇒ use
+    `connected_components_star` instead).
     """
-    sym = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).union(edges.select(F.col(dst).alias("src"), F.col(src).alias("dst")))
+    sym = edges.select("src", "dst").union(edges.select("dst", "src"))
     sym = sym.filter(F.col("src") != F.col("dst")).distinct().localCheckpoint(eager=True)
 
     labels = nodes.select(F.col(id_col).alias("id"), F.col(id_col).alias("comp"))
     labels = labels.localCheckpoint(eager=True)
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ITER):
         nbr = (
             sym.join(labels, sym["dst"] == labels["id"])
             .groupBy("src")
             .agg(F.min("comp").alias("nbr_comp"))
         )
-        new_labels = (
-            labels.join(nbr, labels["id"] == nbr["src"], "left")
-            .select(
+        # `prev` keeps the round's input label so the checkpoint job
+        # itself can count the labels this round lowered
+        labels, obs = checkpoint(
+            labels.join(nbr, labels["id"] == nbr["src"], "left").select(
                 labels["id"],
                 F.least(
                     labels["comp"], F.coalesce(nbr["nbr_comp"], labels["comp"])
                 ).alias("comp"),
-            )
-            .localCheckpoint(eager=True)
+                labels["comp"].alias("prev"),
+            ),
+            changed=F.count_if(F.col("comp") < F.col("prev")),
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), F.col("n.id") == F.col("o.id"))
-            .filter(F.col("n.comp") < F.col("o.comp"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            return labels
-    raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+        if obs.changed == 0:
+            return labels.select("id", "comp")
+    raise RuntimeError(f"connected_components did not converge in {CC_MAX_ITER} rounds")
 
 
 def connected_components_star(
-    nodes: DataFrame,
-    edges: DataFrame,
-    id_col: str = "id",
-    src: str = "src",
-    dst: str = "dst",
-    max_rounds: int = 50,
+    nodes: DataFrame, edges: DataFrame, id_col: str = "id"
 ) -> DataFrame:
     """Connected components via alternating LARGE-STAR / SMALL-STAR
     rounds (Kiveris et al., "Connected Components in MapReduce and
@@ -113,11 +110,11 @@ def connected_components_star(
     node id; lineage truncated per round with localCheckpoint).
     Returns (id, comp) with comp = component-minimum node id.
     """
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    e, obs = checkpoint(
+        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        n=F.count(F.lit(1)),
     )
 
     def large_star(cur: DataFrame) -> DataFrame:
@@ -153,28 +150,24 @@ def connected_components_star(
             .distinct()
         )
 
-    prev_n = e.count()
-    for _ in range(max_rounds):
-        nxt = small_star(large_star(e)).localCheckpoint(eager=True)
-        # cheap gate first: a changed edge COUNT proves non-convergence
-        # with one lightweight job; the exact two-sided exceptAll check
-        # (two shuffles) runs only when counts match — so most rounds
-        # pay one count() and only the candidate-final rounds pay the
+    for _ in range(STAR_MAX_ROUNDS):
+        prev_n = obs.n
+        nxt, obs = checkpoint(small_star(large_star(e)), n=F.count(F.lit(1)))
+        # cheap gate first: a changed edge COUNT (observed by the
+        # round's checkpoint job) proves non-convergence for free; the
+        # exact two-sided exceptAll check (two shuffles) runs only when
+        # counts match — so only the candidate-final rounds pay the
         # full set comparison (exactness preserved: equal counts with
         # different sets still fail the exceptAll test).
-        n = nxt.count()
-        if n == prev_n:
-            changed = (
-                nxt.exceptAll(e).limit(1).count() + e.exceptAll(nxt).limit(1).count()
-            )
-        else:
-            changed = 1
-        e, prev_n = nxt, n
-        if changed == 0:
+        changed = obs.n != prev_n or (
+            nxt.exceptAll(e).limit(1).count() + e.exceptAll(nxt).limit(1).count()
+        )
+        e = nxt
+        if not changed:
             break
     else:
         raise RuntimeError(
-            f"star contraction did not converge in {max_rounds} rounds"
+            f"star contraction did not converge in {STAR_MAX_ROUNDS} rounds"
         )
 
     # fixpoint reached: the edge set is a forest of depth-1 stars
@@ -428,11 +421,14 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
            WHERE p_size <= 2"""
     )
     a, b = ps.alias("a"), ps.alias("b")
-    edges = (
+    # the checkpoint job also counts the edges: the count sizes the
+    # broadcast guard below AND is the query's n_edges output column,
+    # so neither costs a job of its own
+    edges, obs = checkpoint(
         a.join(b, (F.col("a.pk") == F.col("b.pk")) & (F.col("a.sk") < F.col("b.sk")))
         .select(F.col("a.sk").alias("s1"), F.col("b.sk").alias("s2"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        n=F.count(F.lit(1)),
     )
     # AQE coalesces the small distinct shuffle to ONE partition, and
     # the checkpoint keeps it — which would run the entire wedge
@@ -454,28 +450,16 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frequency cap is what bounds the edge list, the same cap that
     # bounds the pair blowup.
     #
-    # r11 (VERDICT r10 item 2 under "What's wrong"): the broadcast is
-    # now SIZE-GUARDED — the p_size cap bounds the edge list TODAY,
-    # but an unconditional broadcast would OOM executors if the cap or
-    # the data distribution changed. The edge count is free here (the
-    # list is already checkpointed; counting cached blocks is
-    # metadata-cheap), and past the guard the wedge joins fall back to
-    # hinted SHUFFLE_HASH — still sort-free, keyed on high-cardinality
-    # node ids, identical pair semantics (pinned by test). The
-    # threshold is a conf so a production deployment sizes it to
-    # executor memory, not to local[32].
-    max_bcast = int(
-        spark.conf.get(
-            "spark.gmt_dbt.tri_broadcast_max_edges", str(4_000_000)
-        )
-    )
-    # the guard count does DOUBLE DUTY: it is also the query's
-    # n_edges output column (the count of the same checkpointed edge
-    # list the old aggregate scanned), so the guard costs no extra
-    # job — the final plan drops the n_edges aggregate subtree
-    # instead.
-    n_edges_val = edges.count()
-    if n_edges_val <= max_bcast:
+    # The broadcast is SIZE-GUARDED by Spark's own broadcast budget,
+    # spark.sql.autoBroadcastJoinThreshold, at 16 B per edge row: the
+    # p_size cap bounds the edge list TODAY, but an unconditional
+    # broadcast would OOM executors if the cap or the data
+    # distribution changed. Past the guard (or with broadcasts
+    # disabled, threshold ≤ 0) the wedge joins fall back to hinted
+    # SHUFFLE_HASH — still sort-free, keyed on high-cardinality node
+    # ids, identical pair semantics (pinned by test).
+    budget = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    if budget > 0 and obs.n * 16 <= budget:
         e2b, e3b = F.broadcast(e2), F.broadcast(e3)
     else:
         e2b, e3b = e2.hint("SHUFFLE_HASH"), e3.hint("SHUFFLE_HASH")
@@ -487,10 +471,29 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("n_triangles"))
     )
-    n_edges = spark.createDataFrame(
-        [(n_edges_val,)], "n_edges bigint"
-    )
+    n_edges = spark.createDataFrame([(obs.n,)], "n_edges bigint")
     return tri.crossJoin(F.broadcast(n_edges))
+
+
+def _purchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The bidirectional customer⇄supplier purchase graph shared by
+    `graph_pagerank` and `graph_bfs_levels`: distinct (customer,
+    supplier) pairs from orders⋈lineitem plus their reverses,
+    checkpointed once. Node ids are disambiguated by PARITY
+    (customer = 2·key, supplier = 2·key+1)."""
+    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    e0 = (
+        o.join(li, o["o_orderkey"] == li["l_orderkey"])
+        .select(
+            (F.col("o_custkey") * 2).alias("src"),
+            (F.col("l_suppkey") * 2 + 1).alias("dst"),
+        )
+        .distinct()
+    )
+    return e0.unionByName(
+        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).localCheckpoint(eager=True)
 
 
 @query(
@@ -551,19 +554,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     disambiguated by PARITY (customer = 2·key, supplier = 2·key+1) —
     bijective at ANY scale factor, unlike a fixed offset which TPC-H
     custkeys would collide with past SF≈7."""
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    e0 = (
-        o.join(li, o["o_orderkey"] == li["l_orderkey"])
-        .select(
-            (F.col("o_custkey") * 2).alias("src"),
-            (F.col("l_suppkey") * 2 + 1).alias("dst"),
-        )
-        .distinct()
-    )
-    edges = e0.unionByName(
-        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
+    edges = _purchase_edges(spark, sf_dir)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     # contribution-ready edge list: (src, dst, d) — checkpointed once,
     # reused by every iteration
@@ -651,19 +642,7 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_clusters. BFS from a single source floods to the whole
     component in O(diameter) such rounds regardless of corpus
     size."""
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    e0 = (
-        o.join(li, o["o_orderkey"] == li["l_orderkey"])
-        .select(
-            (F.col("o_custkey") * 2).alias("src"),
-            (F.col("l_suppkey") * 2 + 1).alias("dst"),
-        )
-        .distinct()
-    )
-    edges = e0.unionByName(
-        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
+    edges = _purchase_edges(spark, sf_dir)
 
     node_type = F.when(F.col("node") % 2 == 1, "supplier").otherwise("customer")
     frontier = spark.createDataFrame([(2,)], "node bigint").localCheckpoint(

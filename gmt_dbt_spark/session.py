@@ -10,8 +10,9 @@ comparable against the DuckDB oracle (DuckDB timestamps are UTC-naive).
 from __future__ import annotations
 
 import os
+import uuid
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 
 # Runtime-settable confs we also apply to sessions we did not create
 # (the correctness driver hands us its own SparkSession).
@@ -62,6 +63,28 @@ def tune(spark: SparkSession) -> SparkSession:
         pass
     _TUNED.add(key)
     return spark
+
+
+def checkpoint(df: DataFrame, **metrics: Column) -> tuple[DataFrame, Row]:
+    """Eager ``localCheckpoint`` of ``df`` plus aggregate ``metrics``
+    observed over the same rows, in the same job.
+
+    ``checkpoint(df, n=F.count(F.lit(1)))`` replaces the pattern
+    "checkpoint, then run a second job to count or compare what was
+    just materialized": the metrics ride ``DataFrame.observe`` into
+    the checkpoint job, so the returned ``Row`` costs no extra job.
+    Empty and zero-partition frames observe their aggregates' empty
+    values (0 for counts) without blocking.
+
+    The metrics are read off the checkpoint's own ``QueryExecution``
+    as soon as the job returns. ``Observation.get`` would instead wait,
+    with no time limit, for the end-of-query event to arrive through
+    the asynchronous listener bus, which can drop events under load."""
+    name = f"checkpoint_{uuid.uuid4().hex}"
+    observed = df.observe(name, *(c.alias(k) for k, c in metrics.items()))
+    out = observed.localCheckpoint(eager=True)
+    row = observed._jdf.queryExecution().observedMetrics().get(name).get()
+    return out, Row(**{k: row.get(i) for i, k in enumerate(metrics)})
 
 
 def get_spark(app_name: str = "gmt_dbt_spark", cpus: int | None = None) -> SparkSession:

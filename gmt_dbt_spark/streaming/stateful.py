@@ -58,7 +58,7 @@ from gmt_dbt_spark.catalog import table
 from gmt_dbt_spark.exprs import dsum
 from gmt_dbt_spark.operators.upsert import merge_upsert
 from gmt_dbt_spark.registry import query
-from gmt_dbt_spark.session import replay_conf
+from gmt_dbt_spark.session import checkpoint, replay_conf
 
 REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SCRATCH = os.path.join(REPO, ".scratch")
@@ -67,27 +67,6 @@ EVENT_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, event_type string, "
     "value double, props string"
 )
-
-
-def write_sentinels(src_dir: str, batches) -> None:
-    """Author far-future sentinel micro-batch files: batches =
-    [batch, ...] where each batch is a LIST of
-    (event_id, user_id, iso_ts, event_type) events written into ONE
-    file = ONE micro-batch (maxFilesPerTrigger=1). Sentinels that
-    only need to arrive TOGETHER (e.g. both sides of a stream-stream
-    join advancing their watermarks at the same epoch) belong in the
-    same batch — every extra file is a full micro-batch of state-
-    store machinery (~2-4 s each in these replays; r3 perf pass
-    halved the outer-join sentinel batches this way). Shared by
-    every watermark-dependent bounded-replay harness."""
-    for i, batch in enumerate(batches):
-        with open(os.path.join(src_dir, f"part-9{i}.json"), "w") as f:
-            for eid, uid, ts_s, etype in batch:
-                f.write(
-                    '{"event_id":%d,"ts":"%s","user_id":%d,'
-                    '"event_type":"%s","value":0.0,"props":"{}"}\n'
-                    % (eid, ts_s, uid, etype)
-                )
 
 
 def pin_mtimes(src_dir: str) -> None:
@@ -270,7 +249,7 @@ def write_replay(
                     os.path.join(into, f"part-{i}.json"),
                 )
         if tail:
-            # same line format as write_sentinels, appended to the
+            # the replays' event line format, appended to the
             # FINAL shard (before the mtime pin below — append
             # refreshes mtime)
             with open(
@@ -1493,13 +1472,17 @@ def stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             merged = sorted(
                 set(sketch) | {int(r["h"]) for r in rows if r["t"] == "h"}
             )[:KMV_K]
-            sketch[:] = merged
-            new = (
-                bh.join(sp.read.parquet(hstore), "h", "left_anti")
-                .localCheckpoint(eager=True)  # detach before append
+            # detach before append; the novel-hash count rides the
+            # checkpoint job
+            new, obs = checkpoint(
+                bh.join(sp.read.parquet(hstore), "h", "left_anti"),
+                n=F.count(F.lit(1)),
             )
-            n_exact_run[0] += new.count()  # cached blocks, O(|batch|)
             new.write.mode("append").parquet(hstore)
+            # driver state mirrors the store: it moves only once the
+            # append above has succeeded
+            sketch[:] = merged
+            n_exact_run[0] += obs.n
             k_used = len(merged)
             est = (
                 k_used

@@ -74,10 +74,26 @@ def test_unrolled_dot_raises_on_off_contract_width(spark, narrow_emb_dir, name):
     from pyspark.errors.exceptions.captured import SparkRuntimeException
 
     with pytest.raises(
-        (SparkRuntimeException, Py4JJavaError, Exception),
+        (SparkRuntimeException, Py4JJavaError),
         match="EMBED_DIMS contract violated",
     ):
         all_queries()[name](spark, narrow_emb_dir).collect()
+
+
+def test_assert_embed_dims_names_null_vector(spark):
+    """A NULL vector raises with the contract message (size -1), not
+    with a NULL message."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors.exceptions.captured import SparkRuntimeException
+
+    from gmt_dbt_spark.operators.embeddings import assert_embed_dims
+
+    df = spark.createDataFrame([(1, None)], "vec_id bigint, qv array<bigint>")
+    with pytest.raises(
+        (SparkRuntimeException, Py4JJavaError),
+        match=r"EMBED_DIMS contract violated: size\(qv\) = -1",
+    ):
+        assert_embed_dims(df).collect()
 
 
 def test_semdedup_block_factor_invariant(spark):

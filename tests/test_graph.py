@@ -161,29 +161,79 @@ def test_dedup_clusters_star_equals_propagation(spark):
 
 
 def test_triangles_broadcast_guard_fallback_identical(spark):
-    """graph_triangles' wedge-probe broadcast is size-guarded (r11 —
-    VERDICT r10 'What's wrong' item 2): past
-    spark.gmt_dbt.tri_broadcast_max_edges the probes fall back to
-    hinted SHUFFLE_HASH instead of an unconditional broadcast that
-    would OOM executors on an uncapped edge list. The fallback must
-    produce the identical surface — and must actually be the
-    shuffled-hash plan, not a silently re-broadcast one."""
+    """graph_triangles' wedge-probe broadcast is size-guarded by
+    spark.sql.autoBroadcastJoinThreshold at 16 B per edge: past it
+    (here: broadcasts disabled) the probes fall back to hinted
+    SHUFFLE_HASH instead of an unconditional broadcast that would OOM
+    executors on an uncapped edge list. The fallback must produce the
+    identical surface — and must actually be the shuffled-hash plan,
+    not a silently re-broadcast one."""
     from gmt_dbt_spark.session import scoped_conf
 
     sf = "/root/testdata/sf0.001"
     q = all_queries()["graph_triangles"]
     base = {tuple(r) for r in q(spark, sf).collect()}
-    with scoped_conf(
-        spark,
-        **{
-            "spark.gmt_dbt.tri_broadcast_max_edges": "0",
-            # the guard must hold even when the planner would happily
-            # broadcast at this size on its own
-            "spark.sql.autoBroadcastJoinThreshold": "-1",
-        },
-    ):
+    with scoped_conf(spark, **{"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         df = q(spark, sf)
         got = {tuple(r) for r in df.collect()}
         tree = tree_of(plan_of(df))
     assert got == base
     assert "ShuffledHashJoin" in tree, tree
+
+
+def _jobs(spark) -> int:
+    """The DAG scheduler's next job id: the delta across a block is the
+    number of Spark jobs submitted inside it."""
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def test_checkpoint_observes_empty_frames(spark):
+    """An empty frame and a zero-partition join result both observe a
+    count of 0 — the checkpoint job must not block waiting for
+    metrics that no task reports."""
+    from gmt_dbt_spark.session import checkpoint
+
+    empty = spark.createDataFrame([], "a bigint")
+    zero = spark.createDataFrame(spark.sparkContext.emptyRDD(), "a bigint")
+    joined = zero.join(zero.withColumnRenamed("a", "b"), F.col("a") == F.col("b"))
+    assert joined.rdd.getNumPartitions() == 0
+    for df in (empty, joined):
+        out, obs = checkpoint(df, n=F.count(F.lit(1)), hi=F.count_if(F.col("a") > 0))
+        assert (obs.n, obs.hi) == (0, 0)
+        assert out.collect() == []
+
+
+def test_checkpoint_metrics_cost_no_extra_job(spark):
+    """checkpoint(df, n=count) launches exactly the jobs of the eager
+    localCheckpoint alone: the count rides the checkpoint job."""
+    from gmt_dbt_spark.session import checkpoint
+
+    def frame():
+        # a fresh plan each time, so no shuffle is reused across runs
+        return spark.range(1000).repartition(4).withColumn("k", F.col("id") % 7)
+
+    j0 = _jobs(spark)
+    frame().localCheckpoint(eager=True)
+    j1 = _jobs(spark)
+    _, obs = checkpoint(frame(), n=F.count(F.lit(1)))
+    j2 = _jobs(spark)
+    assert obs.n == 1000
+    assert j2 - j1 == j1 - j0, (j1 - j0, j2 - j1)
+
+
+def test_components_jobs_per_round(spark):
+    """Each extra propagation round costs at most 7 jobs (the round's
+    shuffles plus its observed checkpoint — no separate convergence
+    job): a 12-node chain needs 6 rounds more than a 6-node chain."""
+
+    def run(n: int) -> int:
+        nodes = spark.createDataFrame([(i,) for i in range(n)], "id bigint")
+        chain = spark.createDataFrame(
+            [(i, i + 1) for i in range(n - 1)], "src bigint, dst bigint"
+        )
+        j0 = _jobs(spark)
+        got = {r.id: r.comp for r in connected_components(nodes, chain).collect()}
+        assert got == {i: 0 for i in range(n)}
+        return _jobs(spark) - j0
+
+    assert run(12) - run(6) <= 42
