@@ -5,17 +5,27 @@ The reference registers BigQuery *external tables* over GCS objects
 directory of parquet files. ``table()`` is the single scan entry
 point every query builder uses, so scan behavior (pushdown-friendly
 plain `spark.read.parquet`) is uniform.
+
+Like the reference's external tables, each table file's schema is
+resolved once per session: the first scan infers it (one Spark job),
+later scans of the same file supply it and launch none. The memo is
+keyed on the file fingerprint (`file_fingerprint`), so a rewritten
+file is inferred again. Only metadata is kept, never data. A table
+path that is not a regular file (e.g. a Spark-written dataset
+directory, whose stat does not change when an inner part file is
+rewritten) is inferred on every scan.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from gmt_dbt_spark.session import tune
+from gmt_dbt_spark.session import schema_memo
 
 TABLES = (
     "region",
@@ -43,11 +53,29 @@ def default_sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def file_fingerprint(path: str) -> tuple[str, int, int] | None:
+    """``(abspath, st_mtime_ns, st_size)`` of a regular file; ``None``
+    for a missing path or anything else (a directory's stat misses
+    rewrites of the files inside it)."""
+    p = os.path.abspath(path)
+    try:
+        st = os.stat(p)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    return p, st.st_mtime_ns, st.st_size
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one warehouse table.
 
     Plain parquet scan → Catalyst gets filter pushdown + column
-    pruning for free; no caching so each query's plan is honest.
+    pruning for free. The schema is resolved once per session and
+    table file: the first scan infers it, later scans of a file with
+    the same fingerprint read with the memoized schema and run no
+    schema-inference job. Only the schema is memoized, never data;
+    directories are inferred on every scan.
 
     `events.parquet` has shipped with two physical layouts across
     testdata generations: TIMESTAMP(NANOS) (rejected by the Spark
@@ -59,10 +87,19 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     the NTZ→LTZ cast is value-preserving, and downstream operators
     (`unix_micros`, watermarks, `window()`) see one stable type.
     """
-    tune(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    memo = schema_memo(spark)
+    key = file_fingerprint(path)
+    schema = memo.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        schema = df.schema
+        if key is not None:
+            memo[key] = schema
+    else:
+        df = spark.read.schema(schema).parquet(path)
     if name == "events":
-        ts_type = df.schema["ts"].dataType
+        ts_type = schema["ts"].dataType
         if isinstance(ts_type, T.LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         elif isinstance(ts_type, T.TimestampNTZType):
@@ -81,9 +118,3 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # construction).
         df = df.filter(F.col("ts").isNotNull())
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every warehouse table as a temp view for SQL entry."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

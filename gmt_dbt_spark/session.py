@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 import uuid
+import weakref
 
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 
@@ -28,7 +29,11 @@ _RUNTIME_CONFS = {
 }
 
 
-_TUNED: set[int] = set()
+# One record per live session object: present once `tune` has run,
+# holding the warehouse schemas `catalog.table` resolved in it. Keyed
+# by the object, not its id(), so a record dies with its session and a
+# new session never inherits a collected one's.
+_SESSIONS: weakref.WeakKeyDictionary[SparkSession, dict] = weakref.WeakKeyDictionary()
 
 
 def tune(spark: SparkSession) -> SparkSession:
@@ -39,8 +44,7 @@ def tune(spark: SparkSession) -> SparkSession:
     per session object — table() calls this on every scan, and ~7
     py4j conf round-trips per scan add up in tight query loops.
     """
-    key = id(spark)
-    if key in _TUNED:
+    if spark in _SESSIONS:
         return spark
     for k, v in _RUNTIME_CONFS.items():
         try:
@@ -61,8 +65,14 @@ def tune(spark: SparkSession) -> SparkSession:
             )
     except Exception:
         pass
-    _TUNED.add(key)
+    _SESSIONS.setdefault(spark, {})  # never drop a concurrent tune's memo
     return spark
+
+
+def schema_memo(spark: SparkSession) -> dict:
+    """The tuned session's schema memo: file fingerprint → StructType,
+    filled and read by `catalog.table`."""
+    return _SESSIONS[tune(spark)]
 
 
 def checkpoint(df: DataFrame, **metrics: Column) -> tuple[DataFrame, Row]:

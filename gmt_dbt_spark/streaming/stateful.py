@@ -54,7 +54,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gmt_dbt_spark.catalog import table
+from gmt_dbt_spark.catalog import file_fingerprint, table
 from gmt_dbt_spark.exprs import dsum
 from gmt_dbt_spark.operators.upsert import merge_upsert
 from gmt_dbt_spark.registry import query
@@ -148,25 +148,19 @@ def _replay_cache_dir(
 ) -> str | None:
     """Cache key for authored replay shards: the shards are a pure
     function of (events.parquet content, n_batches, split, the
-    authored frame), so key on the source FILE's
-    (path, mtime_ns, size) fingerprint plus `_frame_fingerprint` —
-    any regeneration of the testdata invalidates automatically.
-    Returns None when events.parquet is not a regular file (e.g. a
-    Spark-written dataset DIRECTORY, whose stat does not change when
-    an inner part file is rewritten — review finding): then the
-    caller authors uncached, exactly as documented."""
+    authored frame), so key on the source file's `file_fingerprint`
+    plus `_frame_fingerprint` — any regeneration of the testdata
+    invalidates automatically. Returns None when events.parquet is not
+    a regular file (e.g. a Spark-written dataset DIRECTORY, whose stat
+    does not change when an inner part file is rewritten — review
+    finding): then the caller authors uncached, exactly as documented."""
     import hashlib
-    import stat as _stat
 
-    p = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
-    try:
-        st = os.stat(p)
-    except OSError:
-        return None
-    if not _stat.S_ISREG(st.st_mode):
+    fp = file_fingerprint(os.path.join(sf_dir, "events.parquet"))
+    if fp is None:
         return None
     key = hashlib.md5(
-        f"{p}|{st.st_mtime_ns}|{st.st_size}|{n_batches}|{split}|{frame_fp}".encode()
+        "|".join(map(str, (*fp, n_batches, split, frame_fp))).encode()
     ).hexdigest()[:16]
     return os.path.join(SCRATCH, "replay_cache", key)
 
