@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from gmt_dbt_spark.catalog import table
 from gmt_dbt_spark.registry import query
+from gmt_dbt_spark.session import scoped_conf
 
 
 @query(
@@ -460,24 +461,25 @@ def sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     declaratively (step spine ⋈ orders, first step qualifying or
     capped) — procedural and set-based spellings provably agree on
     qualifying, capped, AND empty inputs."""
-    spark.conf.set("spark.sql.scripting.enabled", "true")
     table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(
-        """
-        BEGIN
-          DECLARE t BIGINT DEFAULT 0;
-          DECLARE n BIGINT DEFAULT 0;
-          DECLARE total BIGINT DEFAULT 0;
-          SET total = (SELECT COUNT(*) FROM orders);
-          REPEAT
-            SET t = t + 50000;
-            SET n = (SELECT COUNT(*) FROM orders WHERE o_totalprice <= t);
-          UNTIL n * 10 >= total * 9 OR t >= 2000000
-          END REPEAT;
-          SELECT t AS threshold, n AS n_below, total AS n_total;
-        END
-        """
-    )
+    # the script runs inside the scope; its result comes back local
+    with scoped_conf(spark, **{"spark.sql.scripting.enabled": "true"}):
+        return spark.sql(
+            """
+            BEGIN
+              DECLARE t BIGINT DEFAULT 0;
+              DECLARE n BIGINT DEFAULT 0;
+              DECLARE total BIGINT DEFAULT 0;
+              SET total = (SELECT COUNT(*) FROM orders);
+              REPEAT
+                SET t = t + 50000;
+                SET n = (SELECT COUNT(*) FROM orders WHERE o_totalprice <= t);
+              UNTIL n * 10 >= total * 9 OR t >= 2000000
+              END REPEAT;
+              SELECT t AS threshold, n AS n_below, total AS n_total;
+            END
+            """
+        )
 
 
 class _ParseFieldsUDTF:

@@ -66,6 +66,7 @@ from gmt_dbt_spark.functions.wordpiece import (
 )
 from gmt_dbt_spark.operators.dedup import tokens_col
 from gmt_dbt_spark.registry import query
+from gmt_dbt_spark.session import scratch_dir
 
 
 # --- shared rebuild surface (Spark) ----------------------------------
@@ -199,16 +200,9 @@ def text_bpe_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     model-sized); re-derivation is k vocab-sized folds over the
     Heaps-bounded word relation; the corpus is scanned once for the
     word counts and once for the rebuild join."""
-    import os
-    import shutil
-    import uuid
-
-    from gmt_dbt_spark.operators.dedup import SCRATCH
-
     docs = table(spark, sf_dir, "documents")
     merge_rows, vocab = _train_chain_batched(docs)
-    out = os.path.join(SCRATCH, f"bpe_rt_{uuid.uuid4().hex[:8]}")
-    try:
+    with scratch_dir("bpe_rt") as out:
         spark.createDataFrame(
             merge_rows, "step int, a string, b string, n bigint"
         ).write.mode("overwrite").parquet(out)
@@ -218,8 +212,6 @@ def text_bpe_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for r in spark.read.parquet(out).collect()
             ),
         )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
     # artifact -> runtime: re-apply the RELOADED merges in step order
     # to the character-split word relation (vocab keeps only the word
     # spine; its trained syms are deliberately NOT reused)
@@ -401,24 +393,15 @@ def text_wordpiece_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     is alphabet-closed; the lossy path is pinned by restricted-vocab
     planted tests). Greedy runs once per DISTINCT word; the corpus
     joins the decode relation once."""
-    import os
-    import shutil
-    import uuid
-
-    from gmt_dbt_spark.operators.dedup import SCRATCH
-
     docs = table(spark, sf_dir, "documents")
     merge_rows, alphabet, it = _wp_train_chain(docs)
     vocab = set(alphabet) | {a + b for _, a, b, _, _ in merge_rows}
     if not vocab:
         return _empty_surface(docs)
-    out = os.path.join(SCRATCH, f"wp_rt_{uuid.uuid4().hex[:8]}")
-    try:
+    with scratch_dir("wp_rt") as out:
         spark.createDataFrame(
             [(p,) for p in sorted(vocab)], "piece string"
         ).write.mode("overwrite").parquet(out)
         reloaded = {r["piece"] for r in spark.read.parquet(out).collect()}
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
     dec = _wp_word_dec(it, reloaded)
     return _rebuild_surface(docs, dec)

@@ -17,18 +17,12 @@ h ∈ [0, 2^31), a,b < 2^15, p = 2^31-1 (Mersenne prime).
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gmt_dbt_spark.catalog import table
 from gmt_dbt_spark.registry import query
-
-REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-SCRATCH = os.path.join(REPO, ".scratch")
+from gmt_dbt_spark.session import scratch_dir
 
 # Fixed universal-hash parameters (deterministic across runs/sessions).
 _P = 2_147_483_647  # 2^31 - 1
@@ -1464,8 +1458,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     applied to dedup). The corpus documents' BODIES are never read
     after their fps were first extracted. Near-dup variant:
     `dedup_incremental_minhash` (signature store)."""
-    store = os.path.join(SCRATCH, f"fp_store_{uuid.uuid4().hex[:8]}")
-    try:
+    with scratch_dir("fp_store") as store:
         docs = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
         corpus = docs.filter(F.col("doc_id") % 5 != 0)
         # materialize the store: one fp row per distinct content
@@ -1490,8 +1483,6 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         # lineage-cut idiom; the old collect()+createDataFrame pulled
         # every survivor through the driver)
         return survivors.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(store, ignore_errors=True)
 
 
 def _incremental_minhash_oracle() -> str:
@@ -1549,8 +1540,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORACLE: full DuckDB replay from the shared md5 hash family —
     signatures, band keys, probe, and component-match verify
     (`_incremental_minhash_oracle`)."""
-    store = os.path.join(SCRATCH, f"sig_store_{uuid.uuid4().hex[:8]}")
-    try:
+    with scratch_dir("sig_store") as store:
         docs = table(spark, sf_dir, "documents")
         corpus = docs.filter(F.col("doc_id") % 5 != 0)
         batch = docs.filter(F.col("doc_id") % 5 == 0)
@@ -1587,5 +1577,3 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # lineage-cut detach from the store path (no driver round-trip)
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(store, ignore_errors=True)

@@ -696,21 +696,16 @@ def sink_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     rerank be HASH-ORACLED end-to-end — DuckDB rebuilds the same
     index declaratively. Query = vec_id 400, K=4 lists, N_PROBE=2,
     top-5 by exact micro-dot."""
-    import os
-    import shutil
-    import uuid
-
     from gmt_dbt_spark.operators.embeddings import _micro_vec, kmeans_assign
+    from gmt_dbt_spark.session import scratch_dir
 
-    REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    scratch = os.path.join(REPO, ".scratch", f"ivf_idx_{uuid.uuid4().hex[:8]}")
     K, N_PROBE, QID, TOPK = 4, 2, 400, 5
     e = table(spark, sf_dir, "embeddings")
     q = e.select("vec_id", _micro_vec().alias("qv"))
     cents = [
         list(r["qv"]) for r in q.filter(F.col("vec_id") < K).orderBy("vec_id").collect()
     ]
-    try:
+    with scratch_dir("ivf_idx") as scratch:
         # index build: assign every vector, persist partitioned by list
         assigned = kmeans_assign(q, cents).select(
             "vec_id", F.col("cluster").alias("list_id"), "qv"
@@ -747,8 +742,6 @@ def sink_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("rnk", "vec_id", "dot")
         )
         return out.localCheckpoint(eager=True)  # detach from scratch, executor-side
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
 
 
 # --- MMR diversity re-ranking (r5) -----------------------------------

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from gmt_dbt_spark.catalog import table
 from gmt_dbt_spark.registry import query
+from gmt_dbt_spark.session import scratch_dir
 from gmt_dbt_spark.sources.readers import scan_json, schema_from_json_file
 from gmt_dbt_spark.sources.sinks import StagingTable, sink_overwrite
 
@@ -45,6 +46,16 @@ def merge_upsert(target: DataFrame, staging: DataFrame, keys: list[str]) -> Data
         raise ValueError(f"key columns missing from inputs: {missing}")
     kept = target.join(staging, on=keys, how="left_anti")
     return kept.unionByName(staging.select(*target.columns))
+
+
+def merge_in_place(target_path: str, staging: DataFrame, keys: list[str]) -> None:
+    """MERGE ``staging`` into the parquet table at ``target_path`` and
+    overwrite it there. ``localCheckpoint`` materializes the merge and
+    cuts its lineage to ``target_path``, so the write may replace the
+    files the merge read."""
+    target = staging.sparkSession.read.parquet(target_path)
+    merged = merge_upsert(target, staging, keys).localCheckpoint(eager=True)
+    merged.write.mode("overwrite").parquet(target_path)
 
 
 def dedupe_staging(staging: DataFrame, keys: list[str], order_col: str) -> DataFrame:
@@ -77,11 +88,7 @@ def final_load(
     if loading_type != "Update":
         raise ValueError(f"unknown loading_type: {loading_type!r}")
     with StagingTable(spark, data, staging_path) as staged:
-        target = spark.read.parquet(target_path)
-        # localCheckpoint materializes the merge and cuts lineage to
-        # target_path so we can overwrite the path we just read.
-        merged = merge_upsert(target, staged, keys).localCheckpoint(eager=True)
-        merged.write.mode("overwrite").parquet(target_path)
+        merge_in_place(target_path, staged, keys)
 
 
 def upsert_partitioned(
@@ -99,11 +106,14 @@ def upsert_partitioned(
     The per-partition merge is still anti∪staging, but the target
     scan is pruned to the staging batch's partition values first.
     """
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     parts = [r[0] for r in staging.select(partition_col).distinct().collect()]
     target = spark.read.parquet(target_path).filter(F.col(partition_col).isin(parts))
     merged = merge_upsert(target, staging, keys)
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(target_path)
+    # dynamic as a per-write option: the session conf, and with it
+    # every later full-refresh sink_overwrite, stays as it was
+    merged.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        partition_col
+    ).parquet(target_path)
 
 
 # ---------------------------------------------------------------- driver query
@@ -152,7 +162,6 @@ def delete_keys_partitioned(
     dynamically overwrite just them — O(affected partitions), not
     O(target). The key list is read twice (partition discovery +
     anti-join); it is takedown-sized, so both are broadcasts."""
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     target = spark.read.parquet(target_path)
     affected = [
         r[0]
@@ -168,7 +177,9 @@ def delete_keys_partitioned(
         .join(F.broadcast(keys_df), key, "left_anti")
         .localCheckpoint(eager=True)  # sever lineage before overwrite
     )
-    kept.write.mode("overwrite").partitionBy(partition_col).parquet(target_path)
+    kept.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        partition_col
+    ).parquet(target_path)
 
 
 @query(
@@ -189,13 +200,7 @@ def sink_delete_keys_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     declarative NOT-IN recompute. Only partitions holding doomed rows
     were rewritten (every status partition qualifies here; the
     partition-pruning behavior itself is pinned in test_upsert)."""
-    import uuid
-
-    from gmt_dbt_spark.catalog import table
-
-    REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    run = os.path.join(REPO, ".scratch", f"takedown_{uuid.uuid4().hex[:8]}")
-    try:
+    with scratch_dir("takedown") as run:
         orders = table(spark, sf_dir, "orders")
         orders.write.partitionBy("o_orderstatus").parquet(run)
         doomed = (
@@ -216,10 +221,6 @@ def sink_delete_keys_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return out.localCheckpoint(eager=True)  # detach from run dir, executor-side
-    finally:
-        import shutil
-
-        shutil.rmtree(run, ignore_errors=True)
 
 
 @query(

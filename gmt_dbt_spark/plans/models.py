@@ -365,18 +365,14 @@ class ModelProject:
             df = self.spark.sql(sql)
             self._enforce_contract(model, df)
             if exists:
-                from gmt_dbt_spark.operators.upsert import merge_upsert
+                from gmt_dbt_spark.operators.upsert import merge_in_place
 
                 key = model.config.get("unique_key")
                 if not key:
                     raise ValueError(
                         f"incremental model '{model.name}' needs unique_key"
                     )
-                target = self.spark.read.parquet(path)
-                merged = merge_upsert(
-                    target, df.select(*target.columns), [key]
-                ).localCheckpoint(eager=True)
-                merged.write.mode("overwrite").parquet(path)
+                merge_in_place(path, df, [key])
             else:
                 df.write.mode("overwrite").parquet(path)
             df = self.spark.read.parquet(path)

@@ -18,9 +18,9 @@ from gmt_dbt_spark.catalog import table
 from gmt_dbt_spark.plans import dq
 from gmt_dbt_spark.plans.models import Model, ModelProject
 from gmt_dbt_spark.registry import query
+from gmt_dbt_spark.session import scratch_dir
 
 REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-SCRATCH = os.path.join(REPO, ".scratch")
 
 
 def stg_sources(spark, sf_dir, *tables):
@@ -94,14 +94,15 @@ def model_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
     + view materializations — and return the mart's materialized
     read-back, proving the full `dbt run` lifecycle on Spark."""
     sources = stg_sources(spark, sf_dir, "orders", "customer", "nation")
-    project = ModelProject(
-        spark,
-        [Model(m.name, m.raw_sql) for m in _MODELS],  # fresh copies per run
-        sources,
-        warehouse_dir=os.path.join(SCRATCH, "model_warehouse"),
-        threads=4,
-    )
-    return project.run()["mart_nation_orders"]
+    with scratch_dir("model_warehouse") as wh:
+        project = ModelProject(
+            spark,
+            [Model(m.name, m.raw_sql) for m in _MODELS],  # fresh copies per run
+            sources,
+            warehouse_dir=wh,
+            threads=4,
+        )
+        return project.run()["mart_nation_orders"].localCheckpoint(eager=True)
 
 
 def _counted(name: str, violations: DataFrame) -> DataFrame:
@@ -304,18 +305,14 @@ def model_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     recompute, proving MERGE-on-unique_key semantics inside the model
     DAG. Fresh warehouse per invocation (rerun-safe); the result is
     detached from the scratch path before cleanup."""
-    import shutil
-    import uuid
-
     orders = table(spark, sf_dir, "orders")
     cols = ["o_orderkey", "o_custkey", "o_totalprice"]
-    wh = os.path.join(SCRATCH, f"model_incr_{uuid.uuid4().hex[:8]}")
     model_sql = """
         {{ config(materialized='incremental', unique_key='o_orderkey') }}
         SELECT o_orderkey, o_custkey, o_totalprice
         FROM {{ source('stg', 'orders_batch') }}
         """
-    try:
+    with scratch_dir("model_incr") as wh:
         sources = {("stg", "orders_batch"): "stg_orders_batch"}
         # run 1: even keys, original values
         orders.filter(F.col("o_orderkey") % 2 == 0).select(
@@ -336,8 +333,6 @@ def model_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, [Model("incr_orders", model_sql)], sources, warehouse_dir=wh
         ).run()["incr_orders"]
         return out.localCheckpoint(eager=True)  # detach from wh, executor-side
-    finally:
-        shutil.rmtree(wh, ignore_errors=True)
 
 
 @query(
@@ -408,27 +403,27 @@ def model_macro(spark: SparkSession, sf_dir: str) -> DataFrame:
     to a predicate — compile-time SQL reuse, the dbt facility that
     keeps a 100-model project consistent."""
     table(spark, sf_dir, "orders").createOrReplaceTempView("stg_orders")
-    project = ModelProject(
-        spark,
-        [
-            Model(
-                "finished_orders",
-                """
-                {{ config(materialized='view') }}
-                SELECT o_orderpriority,
-                       COUNT(*) AS n,
-                       {{ money('o_totalprice') }} AS total
-                FROM {{ source('stg', 'orders') }}
-                WHERE {{ order_filter('F') }}
-                GROUP BY o_orderpriority
-                """,
-            )
-        ],
-        {("stg", "orders"): "stg_orders"},
-        warehouse_dir=os.path.join(SCRATCH, "macro_wh"),
-        macros={"money": _macro_money, "order_filter": _macro_order_filter},
+    model = Model(
+        "finished_orders",
+        """
+        {{ config(materialized='view') }}
+        SELECT o_orderpriority,
+               COUNT(*) AS n,
+               {{ money('o_totalprice') }} AS total
+        FROM {{ source('stg', 'orders') }}
+        WHERE {{ order_filter('F') }}
+        GROUP BY o_orderpriority
+        """,
     )
-    return project.run()["finished_orders"]
+    with scratch_dir("macro_wh") as wh:
+        project = ModelProject(
+            spark,
+            [model],
+            {("stg", "orders"): "stg_orders"},
+            warehouse_dir=wh,
+            macros={"money": _macro_money, "order_filter": _macro_order_filter},
+        )
+        return project.run()["finished_orders"].localCheckpoint(eager=True)
 
 
 @query(
@@ -468,9 +463,6 @@ def pipeline_reference_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     What took the reference a GCS bucket, two BigQuery datasets and
     a dbt invocation is one lazy Spark DAG: ingest scans feed the
     CTAS writes, which feed the mart — each stage distributed."""
-    import shutil
-    import uuid
-
     from gmt_dbt_spark.sources.readers import scan_json
     from gmt_dbt_spark.sources.sanitize import sanitize_columns
 
@@ -481,7 +473,6 @@ def pipeline_reference_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     ):
         sanitize_columns(scan_json(spark, os.path.join(fx, name))).createOrReplaceTempView(view)
 
-    wh = os.path.join(SCRATCH, f"ref_e2e_{uuid.uuid4().hex[:8]}")
     models = [
         Model(
             "bronze_business",
@@ -521,13 +512,11 @@ def pipeline_reference_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("stg", "yelp_business"): "stg_yelp_business",
         ("stg", "yelp_tip"): "stg_yelp_tip",
     }
-    try:
+    with scratch_dir("ref_e2e") as wh:
         out = ModelProject(
             spark, models, sources, warehouse_dir=wh, threads=4
         ).run()["mart_city_stats"]
         return out.localCheckpoint(eager=True)  # detach from scratch wh, executor-side
-    finally:
-        shutil.rmtree(wh, ignore_errors=True)
 
 
 @query(
@@ -577,18 +566,19 @@ def model_ephemeral(spark: SparkSession, sf_dir: str) -> DataFrame:
             """,
         ),
     ]
-    project = ModelProject(
-        spark,
-        models,
-        {("stg", t): f"stg_{t}" for t in ("orders", "customer")},
-        warehouse_dir=os.path.join(SCRATCH, "model_warehouse_eph"),
-        threads=2,
-    )
-    results = project.run()
-    assert "big_orders" not in [
-        t.name for t in spark.catalog.listTables()
-    ], "ephemeral model must not be registered as a relation"
-    return results["mart_big_by_nation"]
+    with scratch_dir("model_warehouse_eph") as wh:
+        project = ModelProject(
+            spark,
+            models,
+            {("stg", t): f"stg_{t}" for t in ("orders", "customer")},
+            warehouse_dir=wh,
+            threads=2,
+        )
+        results = project.run()
+        assert "big_orders" not in [
+            t.name for t in spark.catalog.listTables()
+        ], "ephemeral model must not be registered as a relation"
+        return results["mart_big_by_nation"].localCheckpoint(eager=True)
 
 
 @query(
@@ -697,20 +687,10 @@ def model_python(spark: SparkSession, sf_dir: str) -> DataFrame:
             """,
         ),
     ]
-    project = ModelProject(
-        spark,
-        models,
-        sources,
-        warehouse_dir=os.path.join(SCRATCH, f"model_py_{os.getpid()}"),
-        threads=4,
-    )
-    try:
+    with scratch_dir("model_py") as wh:
+        project = ModelProject(spark, models, sources, warehouse_dir=wh, threads=4)
         out = project.run()["mart_from_python"]
         return out.localCheckpoint(eager=True)  # detach from scratch wh, executor-side
-    finally:
-        import shutil
-
-        shutil.rmtree(os.path.join(SCRATCH, f"model_py_{os.getpid()}"), ignore_errors=True)
 
 
 @query(
@@ -749,21 +729,12 @@ def model_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_price": "double",
         },
     )
-    project = ModelProject(
-        spark,
-        [m],
-        {("stg", "orders"): "stg_orders"},
-        warehouse_dir=os.path.join(SCRATCH, f"model_contract_{os.getpid()}"),
-    )
-    try:
+    with scratch_dir("model_contract") as wh:
+        project = ModelProject(
+            spark, [m], {("stg", "orders"): "stg_orders"}, warehouse_dir=wh
+        )
         out = project.run()["priority_rollup"]
         return out.localCheckpoint(eager=True)  # detach from scratch wh, executor-side
-    finally:
-        import shutil
-
-        shutil.rmtree(
-            os.path.join(SCRATCH, f"model_contract_{os.getpid()}"), ignore_errors=True
-        )
 
 
 @query(
@@ -789,19 +760,10 @@ def model_dir_run(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stg_sources(spark, sf_dir, "orders", "customer")
     models, sources = load_models_dir(os.path.join(REPO, "fixtures", "models"))
-    project = ModelProject(
-        spark,
-        models,
-        sources,
-        warehouse_dir=os.path.join(SCRATCH, f"model_dir_{os.getpid()}"),
-    )
-    try:
+    with scratch_dir("model_dir") as wh:
+        project = ModelProject(spark, models, sources, warehouse_dir=wh)
         out = project.run()["mart_segment_sales_f"]
         return out.localCheckpoint(eager=True)  # detach from scratch wh, executor-side
-    finally:
-        import shutil
-
-        shutil.rmtree(os.path.join(SCRATCH, f"model_dir_{os.getpid()}"), ignore_errors=True)
 
 
 @query(
@@ -856,25 +818,22 @@ def model_unit_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderstatus string, o_totalprice double",
     )
     mock.createOrReplaceTempView("unit_mock_orders")
-    project = ModelProject(
-        spark,
-        [
-            Model(
-                "status_rollup_under_test",
-                """
-                {{ config(materialized='view') }}
-                SELECT o_orderstatus, COUNT(*) AS n_orders,
-                       CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(25,6)))
-                            AS STRING) AS DOUBLE) AS total
-                FROM {{ source('stg', 'orders') }}
-                GROUP BY o_orderstatus
-                """,
-            )
-        ],
-        {("stg", "orders"): "unit_mock_orders"},
-        warehouse_dir=os.path.join(SCRATCH, f"unit_test_wh_{os.getpid()}"),
+    model = Model(
+        "status_rollup_under_test",
+        """
+        {{ config(materialized='view') }}
+        SELECT o_orderstatus, COUNT(*) AS n_orders,
+               CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(25,6)))
+                    AS STRING) AS DOUBLE) AS total
+        FROM {{ source('stg', 'orders') }}
+        GROUP BY o_orderstatus
+        """,
     )
-    actual = project.run()["status_rollup_under_test"]
+    with scratch_dir("unit_test_wh") as wh:
+        project = ModelProject(
+            spark, [model], {("stg", "orders"): "unit_mock_orders"}, warehouse_dir=wh
+        )
+        actual = project.run()["status_rollup_under_test"].localCheckpoint(eager=True)
     expected = spark.createDataFrame(
         [("O", 2, 303.0), ("F", 3, 300.0), ("P", 1, 999.0)],
         "o_orderstatus string, n_orders bigint, total double",
@@ -931,22 +890,25 @@ def model_select_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT n_nationkey, n_name FROM {{ source('stg', 'nation') }}
         """,
     )
-    project = ModelProject(
-        spark,
-        [Model(m.name, m.raw_sql) for m in _MODELS] + [unrelated],
-        sources,
-        warehouse_dir=os.path.join(SCRATCH, "model_warehouse_sel"),
-        threads=4,
-    )
     spark.sql("DROP TABLE IF EXISTS unrelated_nation_copy")
-    results = project.run(select="+mart_nation_orders")
-    skipped = (
-        "unrelated_nation_copy" not in results
-        and not spark.catalog.tableExists("unrelated_nation_copy")
-    )
-    return results["mart_nation_orders"].withColumn(
-        "unrelated_skipped", F.lit(skipped)
-    )
+    with scratch_dir("model_warehouse_sel") as wh:
+        project = ModelProject(
+            spark,
+            [Model(m.name, m.raw_sql) for m in _MODELS] + [unrelated],
+            sources,
+            warehouse_dir=wh,
+            threads=4,
+        )
+        results = project.run(select="+mart_nation_orders")
+        skipped = (
+            "unrelated_nation_copy" not in results
+            and not spark.catalog.tableExists("unrelated_nation_copy")
+        )
+        return (
+            results["mart_nation_orders"]
+            .withColumn("unrelated_skipped", F.lit(skipped))
+            .localCheckpoint(eager=True)
+        )
 
 
 @query(
@@ -979,7 +941,7 @@ def model_slim_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     change."""
     sources = stg_sources(spark, sf_dir, "orders", "customer", "nation")
 
-    def project_with(cutoff: str) -> ModelProject:
+    def project_with(cutoff: str, wh: str) -> ModelProject:
         models = [
             Model(
                 m.name,
@@ -993,39 +955,44 @@ def model_slim_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark,
             models,
             sources,
-            warehouse_dir=os.path.join(SCRATCH, "model_warehouse_ci"),
+            warehouse_dir=wh,
             threads=4,
         )
 
-    prior = project_with("1996-01-01")
-    prior.run()
-    state = prior.manifest()
+    # one warehouse for both runs: the edited run defers to the prior
+    # run's materialized state
+    with scratch_dir("model_warehouse_ci") as wh:
+        prior = project_with("1996-01-01", wh)
+        prior.run()
+        state = prior.manifest()
 
-    edited = project_with("1996-01-02")
-    changed = edited.modified_vs(state)
-    if not changed:
-        # Steady state (nothing edited): an empty selector selects the
-        # empty set, run() builds nothing, and the current mart is the
-        # PRIOR warehouse artifact — read it back instead of indexing
-        # into an empty results dict (ADVICE r2: the old fast-path
-        # comment claimed this but the code would have raised KeyError;
-        # unreachable in this query since the cutoff edit always
-        # modifies bronze_orders, guarded anyway so the advertised
-        # steady-state contract actually holds). only_affected_ran is
-        # TRUE here — nothing changed ⇒ the empty set of affected
-        # models "ran" vacuously (dbt's steady-state CI semantics),
-        # and TRUE is what the oracle pins for every row.
-        mart = edited.read_warehouse("mart_nation_orders")
-        return mart.withColumn("only_affected_ran", F.lit(True))
-    selector = ",".join(f"{n}+" for n in sorted(changed))
-    results = edited.run(select=selector, defer=True)
-    only_affected = (
-        changed == {"bronze_orders"}
-        and set(results) == {"bronze_orders", "mart_nation_orders"}
-    )
-    return results["mart_nation_orders"].withColumn(
-        "only_affected_ran", F.lit(only_affected)
-    )
+        edited = project_with("1996-01-02", wh)
+        changed = edited.modified_vs(state)
+        if not changed:
+            # Steady state (nothing edited): an empty selector selects the
+            # empty set, run() builds nothing, and the current mart is the
+            # PRIOR warehouse artifact — read it back instead of indexing
+            # into an empty results dict (ADVICE r2: the old fast-path
+            # comment claimed this but the code would have raised KeyError;
+            # unreachable in this query since the cutoff edit always
+            # modifies bronze_orders, guarded anyway so the advertised
+            # steady-state contract actually holds). only_affected_ran is
+            # TRUE here — nothing changed ⇒ the empty set of affected
+            # models "ran" vacuously (dbt's steady-state CI semantics),
+            # and TRUE is what the oracle pins for every row.
+            mart = edited.read_warehouse("mart_nation_orders")
+            out = mart.withColumn("only_affected_ran", F.lit(True))
+        else:
+            selector = ",".join(f"{n}+" for n in sorted(changed))
+            results = edited.run(select=selector, defer=True)
+            only_affected = (
+                changed == {"bronze_orders"}
+                and set(results) == {"bronze_orders", "mart_nation_orders"}
+            )
+            out = results["mart_nation_orders"].withColumn(
+                "only_affected_ran", F.lit(only_affected)
+            )
+        return out.localCheckpoint(eager=True)
 
 
 @query(
@@ -1047,14 +1014,15 @@ def model_docs_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata a data portal ingests; the dependency column is the
     edge list model_lineage expands."""
     sources = stg_sources(spark, sf_dir, "orders", "customer", "nation")
-    project = ModelProject(
-        spark,
-        [Model(m.name, m.raw_sql) for m in _MODELS],
-        sources,
-        warehouse_dir=os.path.join(SCRATCH, "model_warehouse_docs"),
-        threads=4,
-    )
-    results = project.run()
+    with scratch_dir("model_warehouse_docs") as wh:
+        project = ModelProject(
+            spark,
+            [Model(m.name, m.raw_sql) for m in _MODELS],
+            sources,
+            warehouse_dir=wh,
+            threads=4,
+        )
+        results = project.run()
     rows = [
         (
             name,

@@ -29,7 +29,6 @@ from gmt_dbt_spark.catalog import table
 from gmt_dbt_spark.registry import query
 
 REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-SCRATCH = os.path.join(REPO, ".scratch")
 
 
 def snapshot_apply(

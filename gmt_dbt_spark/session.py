@@ -10,10 +10,17 @@ comparable against the DuckDB oracle (DuckDB timestamps are UTC-naive).
 from __future__ import annotations
 
 import os
+import shutil
 import uuid
 import weakref
+from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, Row, SparkSession
+
+# The one scratch root (gitignored). Builders take their per-call
+# directories from `scratch_dir`; the only persistent entry is the
+# streaming replay-shard cache (`stateful._replay_cache_dir`).
+SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch")
 
 # Runtime-settable confs we also apply to sessions we did not create
 # (the correctness driver hands us its own SparkSession).
@@ -121,7 +128,23 @@ def get_spark(app_name: str = "gmt_dbt_spark", cpus: int | None = None) -> Spark
     return tune(spark)
 
 
-from contextlib import contextmanager
+@contextmanager
+def scratch_dir(prefix: str):
+    """A fresh path ``SCRATCH/<prefix>_<uuid>`` for one builder's
+    intermediate files, removed on exit, on success and on exception
+    alike.
+
+    The path does not exist on entry (``sink_ctas`` writes with
+    ``errorifexists``); its parent does. A builder writes under it and
+    returns ``out.localCheckpoint(eager=True)`` from inside the block,
+    so the result never reads the files the exit deletes and a query
+    can be built again while an earlier frame from it is unread."""
+    os.makedirs(SCRATCH, exist_ok=True)
+    path = os.path.join(SCRATCH, f"{prefix}_{uuid.uuid4().hex}")
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 @contextmanager

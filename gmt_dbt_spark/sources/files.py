@@ -22,10 +22,10 @@ from pyspark.sql import functions as F
 
 from gmt_dbt_spark.catalog import table
 from gmt_dbt_spark.registry import query
+from gmt_dbt_spark.session import scratch_dir
 
 REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 _BLOBS = os.path.join(REPO, "fixtures", "blobs")
-SCRATCH = os.path.join(REPO, ".scratch")
 
 
 @query(
@@ -90,17 +90,18 @@ def sink_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     pristine source (compaction moves bytes, never changes rows).
     File-count reduction itself is pinned in tests/test_files.py."""
     li = table(spark, sf_dir, "lineitem")
-    frag = os.path.join(SCRATCH, "compact_frag")
-    out = os.path.join(SCRATCH, "compact_out")
-    li.repartition(64).write.mode("overwrite").parquet(frag)
-    compact_files(spark, frag, out, target_bytes=128 << 20)
-    return spark.read.parquet(out).agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.col("l_quantity").cast("decimal(25,6)"))
-        .cast("string")
-        .cast("double")
-        .alias("sum_qty"),
-    )
+    with scratch_dir("compact") as root:
+        frag = os.path.join(root, "frag")
+        out = os.path.join(root, "out")
+        li.repartition(64).write.mode("overwrite").parquet(frag)
+        compact_files(spark, frag, out, target_bytes=128 << 20)
+        return spark.read.parquet(out).agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum(F.col("l_quantity").cast("decimal(25,6)"))
+            .cast("string")
+            .cast("double")
+            .alias("sum_qty"),
+        ).localCheckpoint(eager=True)
 
 
 @query(

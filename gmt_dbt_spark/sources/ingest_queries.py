@@ -6,9 +6,9 @@ exercised for real, but every output column carries an explicit cast
 on BOTH sides so the hash compare is over pinned types, not over the
 two engines' inference guesses.
 
-Sink queries write under .scratch/ (gitignored) and return the
-read-back; their oracles recompute from the source fixtures, so the
-check also proves the write→read round-trip is lossless.
+Sink queries write under a `session.scratch_dir` and return the
+detached read-back; their oracles recompute from the source fixtures,
+so the check also proves the write→read round-trip is lossless.
 """
 
 from __future__ import annotations
@@ -19,13 +19,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gmt_dbt_spark.registry import query
+from gmt_dbt_spark.session import scratch_dir
 from gmt_dbt_spark.sources.readers import scan_csv, scan_json, schema_from_json_file
 from gmt_dbt_spark.sources.sanitize import sanitize_columns
 from gmt_dbt_spark.sources.sinks import StagingTable, sink_ctas, sink_overwrite
 
 REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 FIXTURES = os.path.join(REPO, "fixtures")
-SCRATCH = os.path.join(REPO, ".scratch")
 
 
 def _fx(name: str) -> str:
@@ -240,15 +240,16 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("business_id").cast("string"),
         F.col("compliment_count").cast("bigint"),
     )
-    path = os.path.join(SCRATCH, "evolving")
-    base.write.mode("overwrite").parquet(os.path.join(path, "batch=1"))
-    base.withColumn("channel", F.lit("mobile")).write.mode("overwrite").parquet(
-        os.path.join(path, "batch=2")
-    )
-    merged = spark.read.option("mergeSchema", True).option(
-        "recursiveFileLookup", True
-    ).parquet(path)
-    return merged.select("user_id", "business_id", "compliment_count", "channel")
+    with scratch_dir("evolving") as path:
+        base.write.mode("overwrite").parquet(os.path.join(path, "batch=1"))
+        base.withColumn("channel", F.lit("mobile")).write.mode("overwrite").parquet(
+            os.path.join(path, "batch=2")
+        )
+        merged = spark.read.option("mergeSchema", True).option(
+            "recursiveFileLookup", True
+        ).parquet(path)
+        out = merged.select("user_id", "business_id", "compliment_count", "channel")
+        return out.localCheckpoint(eager=True)
 
 
 @query(
@@ -267,7 +268,6 @@ def sink_overwrite_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WRITE_TRUNCATE load (`gcp_function.py:115-131`): write twice
     to the same path in overwrite mode (the second write IS the
     observable — truncate, not append), then scan back."""
-    path = os.path.join(SCRATCH, "sink_overwrite")
     src = scan_json(spark, _fx("yelp_tip.ndjson")).filter(
         F.col("compliment_count") >= 3
     )
@@ -276,9 +276,10 @@ def sink_overwrite_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("business_id").cast("string"),
         F.col("compliment_count").cast("bigint"),
     )
-    sink_overwrite(out, path)
-    sink_overwrite(out, path)  # idempotent truncate-load
-    return spark.read.parquet(path)
+    with scratch_dir("sink_overwrite") as path:
+        sink_overwrite(out, path)
+        sink_overwrite(out, path)  # idempotent truncate-load
+        return spark.read.parquet(path).localCheckpoint(eager=True)
 
 
 @query(
@@ -299,10 +300,6 @@ def sink_ctas_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`models/yelp/bronze_yelp_academic_dataset_business.sql:5-7`:
     copy staging into the bronze layer; their embedded-DDL bug is
     implemented as intent, SURVEY.md §3.2)."""
-    import shutil
-
-    path = os.path.join(SCRATCH, "bronze_yelp_business")
-    shutil.rmtree(path, ignore_errors=True)
     staged = scan_json(spark, _fx("yelp_business.ndjson"))
     bronze = staged.filter(F.col("is_open") == 1).select(
         F.col("business_id").cast("string"),
@@ -310,7 +307,8 @@ def sink_ctas_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("stars").cast("double"),
         F.col("review_count").cast("bigint"),
     )
-    return sink_ctas(spark, bronze, path)
+    with scratch_dir("bronze_yelp_business") as path:
+        return sink_ctas(spark, bronze, path).localCheckpoint(eager=True)
 
 
 @query(
@@ -328,13 +326,14 @@ def sink_staging_temp_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop the staging dir, return the consumer's scan — proving the
     drop happened before the result is read."""
     schema, _ = schema_from_json_file(_fx("registry.json"), "upsert_target")
-    staging_path = os.path.join(SCRATCH, "upsert_batch_a_temp")
-    result_path = os.path.join(SCRATCH, "staged_result")
     batch = scan_json(spark, _fx("upsert_batch_a.ndjson"), schema=schema)
-    with StagingTable(spark, batch, staging_path) as staged:
-        staged.write.mode("overwrite").parquet(result_path)
-    assert not os.path.exists(staging_path), "staging table must be dropped"
-    return spark.read.parquet(result_path)
+    with scratch_dir("staging_temp") as root:
+        staging_path = os.path.join(root, "upsert_batch_a_temp")
+        result_path = os.path.join(root, "staged_result")
+        with StagingTable(spark, batch, staging_path) as staged:
+            staged.write.mode("overwrite").parquet(result_path)
+        assert not os.path.exists(staging_path), "staging table must be dropped"
+        return spark.read.parquet(result_path).localCheckpoint(eager=True)
 
 
 @query(
@@ -478,11 +477,7 @@ def scan_json_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant, fields extracted with variant_get, rolled up per type,
     hash-matched against DuckDB's json_extract over the original
     table."""
-    import shutil
-    import uuid
-
-    path = os.path.join(SCRATCH, f"variant_events_{uuid.uuid4().hex[:8]}")
-    try:
+    with scratch_dir("variant_events") as path:
         from gmt_dbt_spark.catalog import table
 
         ev = (
@@ -507,6 +502,4 @@ def scan_json_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("n"), F.sum("k").alias("k_sum"))
         )
         return out.localCheckpoint(eager=True)  # detach from scratch, executor-side
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 

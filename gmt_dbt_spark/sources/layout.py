@@ -17,27 +17,19 @@ format as a distributed write:
   for repeated fact⋈fact joins (plan pinned in tests/test_plans.py
   ``test_bucketed_join_eliminates_shuffle``).
 
-Both builders write to a scratch warehouse, read back, and DETACH
-the result with `localCheckpoint(eager=True)` (executor-side — the
-partitions materialize on the executors and the lineage to the
-scratch files is cut, nothing lands on the driver) so cleanup can't
-invalidate the returned DataFrame.
+Scratch files and their lifetime: see `session.scratch_dir`.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gmt_dbt_spark.catalog import table
 from gmt_dbt_spark.registry import query
-
-REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-SCRATCH = os.path.join(REPO, ".scratch")
+from gmt_dbt_spark.session import scoped_conf, scratch_dir
 
 
 @query(
@@ -56,11 +48,10 @@ def sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     at the DIRECTORY level (PartitionFilters in the plan, pinned in
     tests), so the three selected months are the only bytes read —
     the layout that turns a 100 TB fact scan into a per-month one."""
-    path = os.path.join(SCRATCH, f"part_orders_{uuid.uuid4().hex[:8]}")
-    orders = table(spark, sf_dir, "orders").withColumn(
-        "o_month", F.date_format("o_orderdate", "yyyy-MM")
-    )
-    try:
+    with scratch_dir("part_orders") as path:
+        orders = table(spark, sf_dir, "orders").withColumn(
+            "o_month", F.date_format("o_orderdate", "yyyy-MM")
+        )
         (
             orders.select("o_orderkey", "o_custkey", "o_totalprice", "o_month")
             .write.mode("overwrite")
@@ -73,8 +64,6 @@ def sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("o_orderkey", "o_custkey", "o_totalprice", "o_month")
         )
         return out.localCheckpoint(eager=True)  # detach from scratch, executor-side
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 @query(
@@ -96,42 +85,39 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     directly, NO Exchange on either side (plan pinned in tests).
     At 100 TB this converts every recurring join on the key into a
     shuffle-free local merge per bucket."""
-    run = uuid.uuid4().hex[:8]
-    names = {}
-    for name, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
-        tbl = f"bktq_{name}_{run}"
-        names[name] = tbl
-        (
-            table(spark, sf_dir, name)
-            .write.bucketBy(8, key)
-            .sortBy(key)
-            .option("path", os.path.join(SCRATCH, tbl))
-            .saveAsTable(tbl)
-        )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        out = (
-            spark.table(names["orders"])
-            .join(
-                spark.table(names["lineitem"]),
-                F.col("o_orderkey") == F.col("l_orderkey"),
-            )
-            .groupBy("o_orderpriority")
-            .agg(
-                F.count(F.lit(1)).alias("n_lines"),
-                F.sum(F.col("l_quantity").cast("decimal(25,6)"))
-                .cast("string")
-                .cast("double")
-                .alias("sum_qty"),
-            )
-        )
-        return out.localCheckpoint(eager=True)  # detach from scratch, executor-side
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        for name, tbl in names.items():
-            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-            shutil.rmtree(os.path.join(SCRATCH, tbl), ignore_errors=True)
+    with scratch_dir("bktq") as root:
+        names = {}
+        try:
+            for name, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
+                tbl = f"{os.path.basename(root)}_{name}"
+                names[name] = tbl
+                (
+                    table(spark, sf_dir, name)
+                    .write.bucketBy(8, key)
+                    .sortBy(key)
+                    .option("path", os.path.join(root, name))
+                    .saveAsTable(tbl)
+                )
+            with scoped_conf(spark, **{"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+                out = (
+                    spark.table(names["orders"])
+                    .join(
+                        spark.table(names["lineitem"]),
+                        F.col("o_orderkey") == F.col("l_orderkey"),
+                    )
+                    .groupBy("o_orderpriority")
+                    .agg(
+                        F.count(F.lit(1)).alias("n_lines"),
+                        F.sum(F.col("l_quantity").cast("decimal(25,6)"))
+                        .cast("string")
+                        .cast("double")
+                        .alias("sum_qty"),
+                    )
+                )
+                return out.localCheckpoint(eager=True)  # detach from scratch, executor-side
+        finally:
+            for tbl in names.values():
+                spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
 
 @query(
@@ -152,9 +138,8 @@ def sink_ndjson(spark: SparkSession, sf_dir: str) -> DataFrame:
     Values survive the text round-trip exactly (ints + strings here;
     timestamps/doubles would need format pinning — documented, not
     silently lossy)."""
-    path = os.path.join(SCRATCH, f"ndjson_orders_{uuid.uuid4().hex[:8]}")
-    cols = ["o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"]
-    try:
+    with scratch_dir("ndjson_orders") as path:
+        cols = ["o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"]
         (
             table(spark, sf_dir, "orders")
             .filter(F.col("o_orderkey") % 100 == 0)
@@ -164,8 +149,6 @@ def sink_ndjson(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out = spark.read.json(path).select(*cols)  # schema re-inferred
         return out.localCheckpoint(eager=True)  # detach from scratch, executor-side
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 @query(
@@ -199,11 +182,10 @@ def join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests). The star-schema pattern: at 100 TB the quarter filter
     never touches the other 9 years of partitions even though the
     predicate isn't on the fact's own columns."""
-    run = uuid.uuid4().hex[:8]
-    fact_path = os.path.join(SCRATCH, f"dpp_fact_{run}")
-    dim_path = os.path.join(SCRATCH, f"dpp_dim_{run}")
     orders = table(spark, sf_dir, "orders")
-    try:
+    with scratch_dir("dpp") as root:
+        fact_path = os.path.join(root, "fact")
+        dim_path = os.path.join(root, "dim")
         (
             orders.select(
                 "o_orderkey",
@@ -229,9 +211,6 @@ def join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out = dpp_join_plan(spark, fact_path, dim_path)
         return out.localCheckpoint(eager=True)  # detach from scratch, executor-side
-    finally:
-        shutil.rmtree(fact_path, ignore_errors=True)
-        shutil.rmtree(dim_path, ignore_errors=True)
 
 
 def dpp_join_plan(spark: SparkSession, fact_path: str, dim_path: str) -> DataFrame:
@@ -270,16 +249,15 @@ def sink_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash. Timestamps are deliberately excluded — ORC's
     session-timezone rebase semantics differ from parquet's and
     deserve an explicit policy, not silent inclusion."""
-    path = os.path.join(SCRATCH, f"orc_lineitem_{uuid.uuid4().hex[:8]}")
-    cols = [
-        "l_orderkey",
-        "l_linenumber",
-        "l_quantity",
-        "l_extendedprice",
-        "l_returnflag",
-        "l_linestatus",
-    ]
-    try:
+    with scratch_dir("orc_lineitem") as path:
+        cols = [
+            "l_orderkey",
+            "l_linenumber",
+            "l_quantity",
+            "l_extendedprice",
+            "l_returnflag",
+            "l_linestatus",
+        ]
         (
             table(spark, sf_dir, "lineitem")
             .filter(F.col("l_orderkey") % 50 == 0)
@@ -289,8 +267,6 @@ def sink_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out = spark.read.orc(path).select(*cols)
         return out.localCheckpoint(eager=True)  # detach from scratch, executor-side
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 @query(
@@ -310,9 +286,8 @@ def sink_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     must hash-match the original parquet values. Ints and strings
     only: CSV text round-trips them exactly; doubles/timestamps need
     format pinning and get it in sink_ndjson's docstring caveat."""
-    path = os.path.join(SCRATCH, f"csv_customer_{uuid.uuid4().hex[:8]}")
-    cols = ["c_custkey", "c_name", "c_nationkey", "c_mktsegment"]
-    try:
+    with scratch_dir("csv_customer") as path:
+        cols = ["c_custkey", "c_name", "c_nationkey", "c_mktsegment"]
         (
             table(spark, sf_dir, "customer")
             .filter(F.col("c_custkey") % 25 == 0)
@@ -328,8 +303,6 @@ def sink_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(*cols)
         )
         return out.localCheckpoint(eager=True)  # detach from scratch, executor-side
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 @query(
@@ -374,9 +347,8 @@ def sink_versioned_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(metadata) plan Delta's log replay gives, minus compaction."""
     import json
 
-    root = os.path.join(SCRATCH, f"versioned_{uuid.uuid4().hex[:8]}")
-    o = table(spark, sf_dir, "orders")
-    try:
+    with scratch_dir("versioned") as root:
+        o = table(spark, sf_dir, "orders")
         # commit 1: the pre-1996 slice
         d1 = os.path.join(root, "data", "commit1")
         o.filter(F.year("o_orderdate") <= 1995).write.mode("overwrite").parquet(d1)
@@ -409,8 +381,6 @@ def sink_versioned_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         out = rollup(read_version(1), 1).unionByName(rollup(read_version(2), 2))
         return out.localCheckpoint(eager=True)  # detach from scratch, executor-side
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @query(
@@ -451,20 +421,19 @@ def maint_vacuum_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
     references them once the expired manifests are gone."""
     import json
 
-    root = os.path.join(SCRATCH, f"vacuum_{uuid.uuid4().hex[:8]}")
-    o = table(spark, sf_dir, "orders")
+    with scratch_dir("vacuum") as root:
+        o = table(spark, sf_dir, "orders")
 
-    def commit(version: int, df, prev_files: list[str]) -> list[str]:
-        d = os.path.join(root, "data", f"commit{version}")
-        df.write.mode("overwrite").parquet(d)
-        files = sorted(
-            os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")
-        )
-        with open(os.path.join(root, f"v{version}.json"), "w") as fh:
-            json.dump({"version": version, "files": prev_files + files}, fh)
-        return files
+        def commit(version: int, df, prev_files: list[str]) -> list[str]:
+            d = os.path.join(root, "data", f"commit{version}")
+            df.write.mode("overwrite").parquet(d)
+            files = sorted(
+                os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")
+            )
+            with open(os.path.join(root, f"v{version}.json"), "w") as fh:
+                json.dump({"version": version, "files": prev_files + files}, fh)
+            return files
 
-    try:
         pre = o.filter(F.year("o_orderdate") <= 1995)
         f1 = commit(1, pre, [])
         f2 = commit(2, pre.coalesce(1), [])  # compaction rewrite: v2 = new files only
@@ -506,8 +475,6 @@ def maint_vacuum_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         out = rollup(2).unionByName(rollup(3))
         return out.localCheckpoint(eager=True)  # detach from scratch, executor-side
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 _INDEX_VOCAB = (
@@ -570,8 +537,7 @@ def sink_posting_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
     count; same pruning mechanics) and probes 2 terms, rolling each
     up to (doc count, total tf, id checksum) — hash-matched against
     DuckDB recomputing the postings straight from the corpus."""
-    path = os.path.join(SCRATCH, f"postings_{uuid.uuid4().hex[:8]}")
-    try:
+    with scratch_dir("postings") as path:
         build_postings(spark, sf_dir, path)
         probe = spark.read.parquet(path).filter(
             F.col("term").isin(*_QUERY_TERMS)
@@ -582,8 +548,6 @@ def sink_posting_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("doc_id").alias("doc_checksum"),
         )
         return out.localCheckpoint(eager=True)  # detach from scratch, executor-side
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 @query(
@@ -603,9 +567,8 @@ def sink_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingests it via conversion jobs); ints and strings round-trip
     exactly — doubles/timestamps need format pinning, same caveat as
     sink_ndjson."""
-    path = os.path.join(SCRATCH, f"xml_customer_{uuid.uuid4().hex[:8]}")
-    cols = ["c_custkey", "c_name", "c_nationkey", "c_mktsegment"]
-    try:
+    with scratch_dir("xml_customer") as path:
+        cols = ["c_custkey", "c_name", "c_nationkey", "c_mktsegment"]
         (
             table(spark, sf_dir, "customer")
             .filter(F.col("c_custkey") % 25 == 0)
@@ -626,8 +589,6 @@ def sink_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(*cols)
         )
         return out.localCheckpoint(eager=True)  # detach from scratch, executor-side
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 @query(
@@ -655,42 +616,41 @@ def sink_compression_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     codec choice is a first-order cost lever: zstd ~ gzip-class
     ratios at snappy-class speeds, which is why it's the modern lake
     default; the engine surface is just `parquet.compression`."""
-    root = os.path.join(SCRATCH, f"codecs_{uuid.uuid4().hex[:8]}")
-    # one source scan serves all four writes
-    src = table(spark, sf_dir, "documents").select("doc_id", "text").persist()
+    with scratch_dir("codecs") as root:
+        # one source scan serves all four writes
+        src = table(spark, sf_dir, "documents").select("doc_id", "text").persist()
 
-    def dir_size(d: str) -> int:
-        return sum(
-            os.path.getsize(os.path.join(d, f))
-            for f in os.listdir(d)
-            if f.endswith(".parquet")
-        )
-
-    try:
-        base_dir = os.path.join(root, "none")
-        src.write.mode("overwrite").option("compression", "none").parquet(base_dir)
-        base_size = dir_size(base_dir)
-        rows = []
-        for codec in ("snappy", "zstd", "gzip"):
-            d = os.path.join(root, codec)
-            src.write.mode("overwrite").option("compression", codec).parquet(d)
-            back = spark.read.parquet(d)
-            (r,) = back.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("doc_id").alias("id_sum"),
-                F.sum(F.length("text")).alias("chars"),
-            ).collect()
-            rows.append(
-                (codec, r["n"], r["id_sum"], r["chars"], dir_size(d) < base_size)
+        def dir_size(d: str) -> int:
+            return sum(
+                os.path.getsize(os.path.join(d, f))
+                for f in os.listdir(d)
+                if f.endswith(".parquet")
             )
-        return spark.createDataFrame(
-            rows,
-            "codec string, n bigint, id_sum bigint, chars bigint, "
-            "smaller_than_uncompressed boolean",
-        )
-    finally:
-        src.unpersist()
-        shutil.rmtree(root, ignore_errors=True)
+
+        try:
+            base_dir = os.path.join(root, "none")
+            src.write.mode("overwrite").option("compression", "none").parquet(base_dir)
+            base_size = dir_size(base_dir)
+            rows = []
+            for codec in ("snappy", "zstd", "gzip"):
+                d = os.path.join(root, codec)
+                src.write.mode("overwrite").option("compression", codec).parquet(d)
+                back = spark.read.parquet(d)
+                (r,) = back.agg(
+                    F.count(F.lit(1)).alias("n"),
+                    F.sum("doc_id").alias("id_sum"),
+                    F.sum(F.length("text")).alias("chars"),
+                ).collect()
+                rows.append(
+                    (codec, r["n"], r["id_sum"], r["chars"], dir_size(d) < base_size)
+                )
+            return spark.createDataFrame(
+                rows,
+                "codec string, n bigint, id_sum bigint, chars bigint, "
+                "smaller_than_uncompressed boolean",
+            )
+        finally:
+            src.unpersist()
 
 
 @query(
@@ -732,8 +692,7 @@ def scan_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallelizes across `maxPartitionBytes` chunks like any scan; the
     only shuffle is the 16-group checksum aggregation (partial
     map-side)."""
-    path = os.path.join(SCRATCH, f"text_corpus_{uuid.uuid4().hex[:8]}")
-    try:
+    with scratch_dir("text_corpus") as path:
         docs = (
             table(spark, sf_dir, "documents")
             .filter(
@@ -762,8 +721,6 @@ def scan_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return out.localCheckpoint(eager=True)  # detach from scratch, executor-side
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 N_TRAIN_SHARDS = 16
@@ -800,8 +757,7 @@ def sink_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pattern to avoid; if contiguity matters, range-partition by
     the hash prefix instead. Stats are read back FROM THE WRITTEN
     FILES, so the oracle also certifies the sink round-trip."""
-    path = os.path.join(SCRATCH, f"train_shards_{uuid.uuid4().hex[:8]}")
-    try:
+    with scratch_dir("train_shards") as path:
         docs = table(spark, sf_dir, "documents")
         shard = F.pmod(
             F.conv(
@@ -838,8 +794,6 @@ def sink_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("shard").cast("int").alias("shard"), "n_docs", "id_sum", "chars_sum")
         )
         return out.localCheckpoint(eager=True)  # detach from scratch, executor-side
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 # ONE framing contract for both WARC surfaces (r6 review — the Spark
@@ -909,8 +863,7 @@ def _warc_roundtrip(
     """Shared WARC write→read→parse round-trip (see scan_warc for the
     framing contract); ``compression`` is the text-sink codec (None
     or 'gzip' — scan_warc_gz documents the splittability cost)."""
-    path = os.path.join(SCRATCH, f"warc_{uuid.uuid4().hex[:8]}")
-    try:
+    with scratch_dir("warc") as path:
         docs = (
             table(spark, sf_dir, "documents")
             .filter(
@@ -970,8 +923,6 @@ def _warc_roundtrip(
             "doc_id", "content_length", "payload_md5", "length_ok"
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 @query("scan_warc_gz", oracle=_WARC_ORACLE)

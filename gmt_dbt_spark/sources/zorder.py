@@ -78,15 +78,11 @@ def zorder_write(
 
 # ---------------------------------------------------------------- driver query
 
-import os  # noqa: E402
-
 from pyspark.sql import SparkSession  # noqa: E402
 
 from gmt_dbt_spark.catalog import table  # noqa: E402
 from gmt_dbt_spark.registry import query  # noqa: E402
-
-REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-SCRATCH = os.path.join(REPO, ".scratch")
+from gmt_dbt_spark.session import scratch_dir  # noqa: E402
 
 
 @query(
@@ -106,11 +102,12 @@ def sink_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     few files overlap the rectangle — is pinned separately in
     tests/test_zorder.py via parquet footer stats."""
     li = table(spark, sf_dir, "lineitem")
-    path = os.path.join(SCRATCH, "zorder_lineitem")
-    zorder_write(li, ("l_partkey", "l_suppkey"), path, n_files=16)
-    return (
-        spark.read.parquet(path)
-        .filter(F.col("l_partkey").between(100, 140))
-        .filter(F.col("l_suppkey").between(10, 30))
-        .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "l_quantity")
-    )
+    with scratch_dir("zorder_lineitem") as path:
+        zorder_write(li, ("l_partkey", "l_suppkey"), path, n_files=16)
+        out = (
+            spark.read.parquet(path)
+            .filter(F.col("l_partkey").between(100, 140))
+            .filter(F.col("l_suppkey").between(10, 30))
+            .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "l_quantity")
+        )
+        return out.localCheckpoint(eager=True)

@@ -49,6 +49,7 @@ import os
 import shutil
 import uuid
 from collections.abc import Iterator
+from contextlib import contextmanager
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -56,12 +57,15 @@ from pyspark.sql import functions as F
 
 from gmt_dbt_spark.catalog import file_fingerprint, table
 from gmt_dbt_spark.exprs import dsum
-from gmt_dbt_spark.operators.upsert import merge_upsert
+from gmt_dbt_spark.operators.upsert import merge_in_place
 from gmt_dbt_spark.registry import query
-from gmt_dbt_spark.session import checkpoint, replay_conf
-
-REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-SCRATCH = os.path.join(REPO, ".scratch")
+from gmt_dbt_spark.session import (
+    SCRATCH,
+    checkpoint,
+    replay_conf,
+    scoped_conf,
+    scratch_dir,
+)
 
 EVENT_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, event_type string, "
@@ -93,6 +97,22 @@ def sentinel_times(ev, delay_days: int, margin_days: int = 2):
     s2 = s1 + _dt.timedelta(days=delay_days + margin_days)
     fmt = "%Y-%m-%dT%H:%M:%S.%f"
     return s1.strftime(fmt), s2.strftime(fmt)
+
+
+@contextmanager
+def replay_run(spark: SparkSession, prefix: str) -> Iterator[tuple[str, str, str, str]]:
+    """One replay harness run: yields ``(run_dir, src_dir, ckpt, name)``
+    — a fresh `scratch_dir`, its created ``src/`` shard directory, the
+    ``ckpt/`` checkpoint path and a memory-sink name. On exit the
+    sink's temp view is dropped and the run dir removed."""
+    with scratch_dir(prefix) as run_dir:
+        src_dir = os.path.join(run_dir, "src")
+        os.makedirs(src_dir)
+        name = os.path.basename(run_dir)
+        try:
+            yield run_dir, src_dir, os.path.join(run_dir, "ckpt"), name
+        finally:
+            spark.catalog.dropTempView(name)
 
 
 def run_replay(df: DataFrame, ckpt: str, *, mode: str, name: str | None = None,
@@ -494,12 +514,7 @@ def stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user running totals maintained in the state store across
     micro-batches; the last emitted update per user must equal the
     full-input aggregate no matter how the input was micro-batched."""
-    run_dir = os.path.join(SCRATCH, f"stream_state_{uuid.uuid4().hex[:8]}")
-    src_dir = os.path.join(run_dir, "src")
-    ckpt = os.path.join(run_dir, "ckpt")
-    os.makedirs(src_dir, exist_ok=True)
-    name = f"state_t_{uuid.uuid4().hex[:8]}"
-    try:
+    with replay_run(spark, "stream_state") as (_, src_dir, ckpt, name):
         ev = table(spark, sf_dir, "events")
         write_replay(ev, src_dir, sf_dir=sf_dir)
         stream = (
@@ -511,9 +526,6 @@ def stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         # bounded replay-harness readback (module docstring contract)
         final = _final_update_per_user(spark, name, "last_ts")
         return spark.createDataFrame(final, STATE_OUT_SCHEMA)
-    finally:
-        shutil.rmtree(run_dir, ignore_errors=True)
-        spark.catalog.dropTempView(name)
 
 
 @query(
@@ -533,12 +545,8 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     Complete-mode aggregation means the LAST batch's state equals the
     full-input aggregate, so the final target is deterministic no
     matter how the source was micro-batched."""
-    run_dir = os.path.join(SCRATCH, f"stream_upsert_{uuid.uuid4().hex[:8]}")
-    src_dir = os.path.join(run_dir, "src")
-    target_path = os.path.join(run_dir, "target")
-    ckpt = os.path.join(run_dir, "ckpt")
-    os.makedirs(src_dir, exist_ok=True)
-    try:
+    with replay_run(spark, "stream_upsert") as (run_dir, src_dir, ckpt, _):
+        target_path = os.path.join(run_dir, "target")
         # NULL upsert keys are excluded up front (r3 adversarial
         # finding): MERGE ON t.user_id = s.user_id follows SQL
         # equality — a NULL source key matches nothing and would
@@ -565,16 +573,12 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
         def upsert_batch(batch: DataFrame, _epoch: int) -> None:
-            target = batch.sparkSession.read.parquet(target_path)
-            merged = merge_upsert(target, batch, ["user_id"]).localCheckpoint(eager=True)
-            merged.write.mode("overwrite").parquet(target_path)
+            merge_in_place(target_path, batch, ["user_id"])
 
         run_replay(agg, ckpt, mode="complete", foreach=upsert_batch)
         final = spark.read.parquet(target_path)
         final = final.localCheckpoint(eager=True)  # detach from path, executor-side
         return final
-    finally:
-        shutil.rmtree(run_dir, ignore_errors=True)
 
 
 def tws_available() -> bool:
@@ -668,17 +672,11 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not tws_available():
         return stream_custom_state(spark, sf_dir)
 
-    run_dir = os.path.join(SCRATCH, f"stream_tws_{uuid.uuid4().hex[:8]}")
-    src_dir = os.path.join(run_dir, "src")
-    ckpt = os.path.join(run_dir, "ckpt")
-    os.makedirs(src_dir, exist_ok=True)
-    name = f"tws_t_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    try:
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
+    rocksdb = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    with (
+        replay_run(spark, "stream_tws") as (_, src_dir, ckpt, name),
+        scoped_conf(spark, **{"spark.sql.streaming.stateStore.providerClass": rocksdb}),
+    ):
         ev = table(spark, sf_dir, "events")
         write_replay(ev, src_dir, sf_dir=sf_dir)
         stream = (
@@ -700,19 +698,6 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             for (u, n, t, us) in final
         ]
         return spark.createDataFrame(rows, STATE_OUT_SCHEMA)
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            try:
-                spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-            except Exception:
-                pass
-        shutil.rmtree(run_dir, ignore_errors=True)
-        try:
-            spark.catalog.dropTempView(name)
-        except Exception:
-            pass
 
 
 @query(
@@ -737,12 +722,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     match is ever evicted mid-replay and the result equals the batch
     interval join exactly; production tunes the delay to actual
     lateness (same code, smaller state)."""
-    run_dir = os.path.join(SCRATCH, f"stream_ssj_{uuid.uuid4().hex[:8]}")
-    src_dir = os.path.join(run_dir, "src")
-    ckpt = os.path.join(run_dir, "ckpt")
-    os.makedirs(src_dir, exist_ok=True)
-    name = f"ssj_t_{uuid.uuid4().hex[:8]}"
-    try:
+    with replay_run(spark, "stream_ssj") as (_, src_dir, ckpt, name):
         ev = table(spark, sf_dir, "events")
         write_replay(ev, src_dir, sf_dir=sf_dir)
         stream = (
@@ -778,12 +758,6 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_replay(joined, ckpt, mode="append", name=name)
         out = spark.table(name).distinct()  # join emits each match once; defensive
         return out.localCheckpoint(eager=True)  # detach from scratch, executor-side
-    finally:
-        shutil.rmtree(run_dir, ignore_errors=True)
-        try:
-            spark.catalog.dropTempView(name)
-        except Exception:
-            pass
 
 
 @query(
@@ -808,12 +782,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch. Complete-mode aggregation makes the final memory-sink
     table the totals over all batches, which must equal the batch
     join+rollup the oracle runs."""
-    run_dir = os.path.join(SCRATCH, f"stream_ssj2_{uuid.uuid4().hex[:8]}")
-    src_dir = os.path.join(run_dir, "src")
-    ckpt = os.path.join(run_dir, "ckpt")
-    os.makedirs(src_dir, exist_ok=True)
-    name = f"ssj2_t_{uuid.uuid4().hex[:8]}"
-    try:
+    with replay_run(spark, "stream_ssj2") as (_, src_dir, ckpt, name):
         ev = table(spark, sf_dir, "events")
         write_replay(ev, src_dir, sf_dir=sf_dir)
         stream = (
@@ -833,12 +802,6 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_replay(agg, ckpt, mode="complete", name=name)
         out = spark.table(name)
         return out.localCheckpoint(eager=True)  # detach from scratch, executor-side
-    finally:
-        shutil.rmtree(run_dir, ignore_errors=True)
-        try:
-            spark.catalog.dropTempView(name)
-        except Exception:
-            pass
 
 
 @query(
@@ -879,12 +842,7 @@ def _stream_stream_outer_replay(
     """Shared bounded-replay harness for watermark-dependent outer
     stream-stream joins (see stream_stream_left_outer docstring for
     the sentinel mechanism)."""
-    run_dir = os.path.join(SCRATCH, f"stream_sslo_{uuid.uuid4().hex[:8]}")
-    src_dir = os.path.join(run_dir, "src")
-    ckpt = os.path.join(run_dir, "ckpt")
-    os.makedirs(src_dir, exist_ok=True)
-    name = f"sslo_t_{uuid.uuid4().hex[:8]}"
-    try:
+    with replay_run(spark, "stream_sslo") as (_, src_dir, ckpt, name):
         ev = table(spark, sf_dir, "events")
         # Sentinels: one per side-filter so BOTH input streams see
         # their watermark advance; distinct reserved users so they can
@@ -949,12 +907,6 @@ def _stream_stream_outer_replay(
             .distinct()
         )
         return out.localCheckpoint(eager=True)  # detach from scratch, executor-side
-    finally:
-        shutil.rmtree(run_dir, ignore_errors=True)
-        try:
-            spark.catalog.dropTempView(name)
-        except Exception:
-            pass
 
 
 @query(
@@ -1148,12 +1100,7 @@ def stream_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    run_dir = os.path.join(SCRATCH, f"stream_sesto_{uuid.uuid4().hex[:8]}")
-    src_dir = os.path.join(run_dir, "src")
-    ckpt = os.path.join(run_dir, "ckpt")
-    os.makedirs(src_dir, exist_ok=True)
-    name = f"sesto_t_{uuid.uuid4().hex[:8]}"
-    try:
+    with replay_run(spark, "stream_sesto") as (_, src_dir, ckpt, name):
         ev = table(spark, sf_dir, "events")
         # time-split replay at the DATA-DERIVED midpoint: single-pass
         # gap state needs cross-batch event-time order, and a
@@ -1202,12 +1149,6 @@ def stream_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("user_id").isNull() | (F.col("user_id") >= 0)
         )
         return out.localCheckpoint(eager=True)  # detach from scratch, executor-side
-    finally:
-        shutil.rmtree(run_dir, ignore_errors=True)
-        try:
-            spark.catalog.dropTempView(name)
-        except Exception:
-            pass
 
 
 _INGEST_BATCHES = 3
@@ -1264,12 +1205,8 @@ def stream_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gmt_dbt_spark.operators.curation import MIN_CHARS, MIN_TOKENS
     from gmt_dbt_spark.operators.dedup import tokens_col
 
-    run_dir = os.path.join(SCRATCH, f"stream_ingest_{uuid.uuid4().hex[:8]}")
-    src_dir = os.path.join(run_dir, "src")
-    store = os.path.join(run_dir, "store")
-    ckpt = os.path.join(run_dir, "ckpt")
-    os.makedirs(src_dir, exist_ok=True)
-    try:
+    with replay_run(spark, "stream_ingest") as (run_dir, src_dir, ckpt, _):
+        store = os.path.join(run_dir, "store")
         docs = (
             table(spark, sf_dir, "documents")
             .select("doc_id", "text", "source")
@@ -1321,8 +1258,6 @@ def stream_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_replay(stream, ckpt, mode="append", foreach=ingest)
         final = spark.read.parquet(store)
         return final.localCheckpoint(eager=True)  # detach from store, executor-side
-    finally:
-        shutil.rmtree(run_dir, ignore_errors=True)
 
 
 _KMV_STREAM_BATCHES = 3
@@ -1385,16 +1320,12 @@ def stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     store (production drops it) grows with distinct content."""
     from gmt_dbt_spark.operators.stats import KMV_K, kmv_hash
 
-    run_dir = os.path.join(SCRATCH, f"stream_kmv_{uuid.uuid4().hex[:8]}")
-    src_dir = os.path.join(run_dir, "src")
-    hstore = os.path.join(run_dir, "seen")
-    ckpt = os.path.join(run_dir, "ckpt")
-    os.makedirs(src_dir, exist_ok=True)
     out_schema = (
         "batch_key bigint, k_used bigint, h_k bigint,"
         " est_distinct bigint, exact_distinct bigint"
     )
-    try:
+    with replay_run(spark, "stream_kmv") as (run_dir, src_dir, ckpt, _):
+        hstore = os.path.join(run_dir, "seen")
         docs = (
             table(spark, sf_dir, "documents")
             .select("doc_id", "text")
@@ -1491,5 +1422,3 @@ def stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not report_rows:
             return spark.createDataFrame([], out_schema)
         return spark.createDataFrame(report_rows, out_schema)
-    finally:
-        shutil.rmtree(run_dir, ignore_errors=True)

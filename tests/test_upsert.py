@@ -99,6 +99,36 @@ def test_upsert_partitioned_touches_only_batch_partitions(spark, tmp_path):
     assert out.filter(F.col("dt") == "2024-01-02").count() == 3
 
 
+@pytest.mark.parametrize("op", ["delete_keys_partitioned", "upsert_partitioned"])
+def test_partitioned_writes_keep_session_overwrite_mode(spark, tmp_path, op):
+    """Both partition-scoped writers overwrite dynamically for their own
+    write only: the session conf is unchanged afterwards, and a later
+    partitioned sink_overwrite still truncates (WRITE_TRUNCATE drops a
+    partition the new load does not carry)."""
+    from gmt_dbt_spark.operators.upsert import delete_keys_partitioned
+    from gmt_dbt_spark.sources.sinks import sink_overwrite
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    work = str(tmp_path / "work")
+    rows = spark.createDataFrame([(1, 1), (3, 1), (2, 2)], "id bigint, p bigint")
+    rows.write.partitionBy("p").parquet(work)
+    if op == "delete_keys_partitioned":
+        doomed = spark.createDataFrame([(1,)], "id bigint")
+        delete_keys_partitioned(spark, work, doomed, "id", "p")
+        assert sorted(r.id for r in spark.read.parquet(work).collect()) == [2, 3]
+    else:
+        batch = spark.createDataFrame([(4, 2)], "id bigint, p bigint")
+        upsert_partitioned(spark, work, batch, ["id"], "p")
+        assert sorted(r.id for r in spark.read.parquet(work).collect()) == [1, 2, 3, 4]
+    assert spark.conf.get(key) == before
+
+    path = str(tmp_path / "sink")
+    sink_overwrite(rows, path, partition_by=["p"])
+    sink_overwrite(rows.filter("p = 2"), path, partition_by=["p"])
+    assert sorted(r.p for r in spark.read.parquet(path).collect()) == [2]
+
+
 def test_delete_keys_touches_only_affected_partitions(spark, tmp_path):
     """Erasure must rewrite ONLY partitions containing doomed keys:
     untouched partition directories keep their exact files (same
