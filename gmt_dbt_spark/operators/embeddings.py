@@ -18,18 +18,25 @@ shuffles, no UDF, no Python.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gmt_dbt_spark.catalog import table
-
+from gmt_dbt_spark.operators.vectors import (  # noqa: F401 — EMBED_DIMS re-exported
+    EMBED_DIMS,
+    argmin,
+    assert_embed_dims,
+    idot,
+    isqdist,
+    isum,
+    isumsq,
+    micro,
+    micro_cell,
+    nearest,
+    sqdist,
+    unrolled_idot,
+)
 from gmt_dbt_spark.registry import query
-
-# Components are summed in integer MICRO-UNITS (floor of x·10^6 as
-# bigint): float→decimal casts round the last ulp differently across
-# engines (measured — Spark and DuckDB disagree on ~2% of float32
-# components at scale 6), while double multiply + floor are both
-# exactly specified by IEEE-754, and bigint sums are order-free.
 
 
 @query(
@@ -53,9 +60,9 @@ def embed_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     data."""
     e = table(spark, sf_dir, "embeddings")
     cells = e.select("label", F.posexplode("embedding").alias("dim", "val"))
-    micro = F.floor(F.col("val").cast("double") * 1000000.0).cast("bigint")
+    cell = micro_cell(F.col("val"))
     return cells.groupBy("label", "dim").agg(
-        ((F.sum(micro).cast("double") / 1000000.0) / F.count("*")).alias("mean_val"),
+        ((F.sum(cell).cast("double") / 1000000.0) / F.count("*")).alias("mean_val"),
         F.count("*").alias("n_vecs"),
     )
 
@@ -92,16 +99,11 @@ def embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
     mx = F.array_max(F.transform("embedding", lambda x: F.abs(x))).cast("double")
     scaled = e.select("vec_id", "embedding", mx.alias("mx")).filter(F.col("mx") > 0)
-    qv = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * (F.lit(127.0) / F.col("mx"))).cast(
-            "bigint"
-        ),
-    )
+    qv = micro("embedding", F.lit(127.0) / F.col("mx"))
     q = scaled.select("vec_id", qv.alias("qv"))
     return q.select(
         "vec_id",
-        F.aggregate("qv", F.lit(0).cast("bigint"), lambda a, b: a + b).alias("q_sum"),
+        isum("qv").alias("q_sum"),
         F.array_min("qv").alias("q_min"),
         F.array_max("qv").alias("q_max"),
     )
@@ -139,23 +141,10 @@ def embed_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer (floor of each unit component × 1e6, summed in bigint).
     Zero shuffles, zero UDFs, deterministic on both engines."""
     e = table(spark, sf_dir, "embeddings")
-    qv = F.transform(
-        "embedding", lambda x: F.floor(x.cast("double") * 1000000.0).cast("bigint")
-    )
-    q = e.select("vec_id", qv.alias("qv"))
-    sumsq = F.aggregate(
-        F.transform("qv", lambda x: x * x), F.lit(0).cast("bigint"), lambda a, b: a + b
-    )
-    s = q.select("vec_id", "qv", sumsq.alias("sumsq")).filter(F.col("sumsq") > 0)
+    q = e.select("vec_id", micro("embedding").alias("qv"))
+    s = q.select("vec_id", "qv", isumsq("qv").alias("sumsq")).filter(F.col("sumsq") > 0)
     norm = F.sqrt(F.col("sumsq").cast("double"))
-    unit_sum = F.aggregate(
-        F.transform(
-            "qv",
-            lambda x: F.floor(x.cast("double") / norm * 1000000.0).cast("bigint"),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda a, b: a + b,
-    )
+    unit_sum = isum(F.transform("qv", lambda x: micro_cell(x.cast("double") / norm)))
     return s.select(
         "vec_id",
         (norm / 1000000.0).alias("l2_norm"),
@@ -166,48 +155,14 @@ def embed_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 K_CLUSTERS = 4
 KMEANS_ITERS = 3
 
-# The embeddings table's vector width — a TABLE CONTRACT, not a
-# guess: embedding models emit a fixed dimensionality, the fixture
-# ships 64 everywhere (MRL_DIMS documents 16-of-64 truncation), and
-# tests/test_embed_dims.py pins it at every sf. Fixed width is what lets hot pair
-# paths unroll the dot product into whole-stage codegen instead of
-# the interpreted (CodegenFallback) zip_with+aggregate lambda form.
-EMBED_DIMS = 64
 
-
-def _micro_vec() -> "F.Column":
-    return F.transform(
-        "embedding", lambda x: F.floor(x.cast("double") * 1000000.0).cast("bigint")
-    )
-
-
-def assert_embed_dims(df: DataFrame, col: str = "qv") -> DataFrame:
-    """Runtime enforcement of the EMBED_DIMS table contract (VERDICT
-    r10 item 8): the unrolled codegen dot products read ``col[i]`` for
-    i < EMBED_DIMS, and a NARROWER array silently yields NULL
-    (GetArrayItem past the end is NULL; NULL poisons the sum), which
-    would DROP pairs instead of failing. This filter is an identity on
-    on-contract rows (assert_true returns NULL on success, coalesced
-    to TRUE — no row is ever removed), and raises
-    SparkRuntimeException naming the offending width the moment a
-    foreign-width vector reaches an unrolled consumer. Cost: one
-    size() compare per row, inside the same codegen stage."""
-    # a NULL vector reports size -1, so it too gets the message
-    size = F.coalesce(F.size(F.col(col)), F.lit(-1))
-    return df.filter(
-        F.coalesce(
-            F.assert_true(
-                size == EMBED_DIMS,
-                F.concat(
-                    F.lit(
-                        f"EMBED_DIMS contract violated: size({col}) = "
-                    ),
-                    size.cast("string"),
-                    F.lit(f" != {EMBED_DIMS} (embeddings table contract)"),
-                ),
-            ),
-            F.lit(True),
-        )
+def _assign(df: DataFrame, carr: DataFrame) -> DataFrame:
+    """``df`` (vec_id, qv) plus ``cluster``, its nearest centroid in
+    the one-row ``__cents`` array broadcast from ``carr``."""
+    return (
+        df.crossJoin(F.broadcast(carr))
+        .withColumn("cluster", nearest("qv", F.col("__cents")))
+        .drop("__cents")
     )
 
 
@@ -227,21 +182,7 @@ def kmeans_assign(df: DataFrame, centroids: list[list[int]]) -> DataFrame:
         [([[int(c) for c in cent] for cent in centroids],)],
         "__cents array<array<bigint>>",
     )
-    dists = F.transform(
-        F.col("__cents"),
-        lambda c: F.aggregate(
-            F.zip_with("qv", c, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("bigint"),
-            lambda a, b: a + b,
-        ),
-    )
-    return (
-        df.crossJoin(F.broadcast(carr))
-        .withColumn(
-            "cluster", (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-        )
-        .drop("__cents")
-    )
+    return _assign(df, carr)
 
 
 def kmeans_recompute(
@@ -311,23 +252,9 @@ def lloyd_centroids(q: DataFrame) -> list:
     cent0 = seeds.agg(
         F.sort_array(F.collect_list(F.struct("vec_id", "qv"))).alias("__seeds")
     ).select(F.transform("__seeds", lambda s: s["qv"]).alias("__cents"))
-    dists = F.transform(
-        F.col("__cents"),
-        lambda c: F.aggregate(
-            F.zip_with("qv", c, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("bigint"),
-            lambda a, b: a + b,
-        ),
-    )
-    assigned1 = (
-        q.crossJoin(F.broadcast(cent0))
-        .withColumn(
-            "cluster", (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-        )
-        .drop("__cents")
-    )
     cells1 = (
-        assigned1.select("cluster", F.posexplode("qv").alias("dim", "v"))
+        _assign(q, cent0)
+        .select("cluster", F.posexplode("qv").alias("dim", "v"))
         .groupBy("cluster", "dim")
         .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
         .select(
@@ -488,7 +415,7 @@ def embed_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lazy checkpoint (r11): the fused lloyd job is the first
     # consumer and computes every partition — eager paid a dedicated
     # materialization job for the same blocks
-    q = e.select("vec_id", _micro_vec().alias("qv")).localCheckpoint(eager=False)
+    q = e.select("vec_id", micro("embedding").alias("qv")).localCheckpoint(eager=False)
     centroids = lloyd_centroids(q)
     final = kmeans_assign(q, centroids)
     import math
@@ -497,8 +424,7 @@ def embed_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rounded, so it matches DuckDB's sqrt bit-for-bit in the oracle;
     # pow(x, 0.5) carries no such guarantee.
     cent_norms = {
-        i: math.sqrt(float(sum(v * v for v in c))) / 1e6
-        for i, c in enumerate(centroids)
+        i: math.sqrt(float(sqdist(c))) / 1e6 for i, c in enumerate(centroids)
     }
     norm_map = F.create_map(
         *[x for i, n in cent_norms.items() for x in (F.lit(i), F.lit(n))]
@@ -576,9 +502,7 @@ def embed_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "i",
-            F.floor(F.col("val").cast("double") * 1000000.0)
-            .cast("bigint")
-            .alias("qv"),
+            micro_cell(F.col("val")).alias("qv"),
         )
         .localCheckpoint(eager=True)
     )
@@ -677,13 +601,8 @@ def embed_cosine_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     precomputed once before the pair join, so the join carries
     (id, qv, n2) and each pair costs one zip_with dot product."""
     e = table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 100)
-    n2 = F.aggregate(
-        F.transform("qv", lambda x: x * x),
-        F.lit(0).cast("bigint"),
-        lambda a, b: a + b,
-    )
-    s = e.select("vec_id", _micro_vec().alias("qv")).select(
-        "vec_id", "qv", n2.alias("n2")
+    s = e.select("vec_id", micro("embedding").alias("qv")).select(
+        "vec_id", "qv", isumsq("qv").alias("n2")
     )
     a = s.select(
         F.col("vec_id").alias("id_a"), F.col("qv").alias("va"),
@@ -693,13 +612,8 @@ def embed_cosine_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("id_b"), F.col("qv").alias("vb"),
         F.col("n2").alias("nb2"),
     )
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda x, y: x + y,
-    )
     pairs = a.join(b, F.col("id_a") < F.col("id_b")).select(
-        "id_a", "id_b", dot.alias("dot"), "na2", "nb2"
+        "id_a", "id_b", idot("va", "vb").alias("dot"), "na2", "nb2"
     )
     lhs = F.col("dot").cast("decimal(19,0)") * F.col("dot").cast(
         "decimal(18,0)"
@@ -785,7 +699,7 @@ def _micro_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage reads — defined once so index build and serving can never
     drift apart."""
     return table(spark, sf_dir, "embeddings").select(
-        "vec_id", _micro_vec().alias("qv")
+        "vec_id", micro("embedding").alias("qv")
     )
 
 
@@ -802,34 +716,33 @@ def pq_codes(spark: SparkSession, sf_dir: str):
     return _pq_assign(s, codebook), codebook
 
 
+def _pq_dists(codebook: str, m: int) -> Column:
+    """Squared distances from subspace ``m`` of ``qv`` to subspace
+    ``m`` of every codeword in the array column ``codebook``."""
+    lo = PQ_SUB * m + 1
+    sub = F.slice("qv", lo, PQ_SUB)
+    return F.transform(F.col(codebook), lambda c: isqdist(sub, F.slice(c, lo, PQ_SUB)))
+
+
+def _pq_lut(qv: list[int], codebook: list[list[int]]) -> list[int]:
+    """The flat M×CODES ADC lookup table of one query vector: entry
+    m·PQ_CODES + c is its subspace-m squared distance to codeword c."""
+    return [
+        sqdist(qv[lo : lo + PQ_SUB], codebook[c][lo : lo + PQ_SUB])
+        for lo in range(0, PQ_M * PQ_SUB, PQ_SUB)
+        for c in range(PQ_CODES)
+    ]
+
+
 def _pq_assign(s: DataFrame, codebook: list[list[int]]) -> DataFrame:
     spark = s.sparkSession
     carr = spark.createDataFrame([(codebook,)], "__cents array<array<bigint>>")
     out = s.crossJoin(F.broadcast(carr))
     cols = [F.col("vec_id")]
     qerr = None
-
-    def subspace_dists(m: int):
-        sub = F.slice("qv", PQ_SUB * m + 1, PQ_SUB)
-
-        def dist_to(c):
-            return F.aggregate(
-                F.zip_with(
-                    sub,
-                    F.slice(c, PQ_SUB * m + 1, PQ_SUB),
-                    lambda x, y: (x - y) * (x - y),
-                ),
-                F.lit(0).cast("bigint"),
-                lambda a, b: a + b,
-            )
-
-        return F.transform(F.col("__cents"), dist_to)
-
     for m in range(PQ_M):
-        dists = subspace_dists(m)
-        cols.append(
-            (F.array_position(dists, F.array_min(dists)) - 1).alias(f"code{m}")
-        )
+        dists = _pq_dists("__cents", m)
+        cols.append(argmin(dists).alias(f"code{m}"))
         best = F.array_min(dists)
         qerr = best if qerr is None else (qerr + best)
     return out.select(*cols + [qerr.alias("qerr")])
@@ -912,19 +825,7 @@ def embed_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     qrows = [r for r in head if r["vec_id"] >= PQ_QUERIES[0]]
     codes = _pq_assign(s, codebook)
-    luts = []
-    for r in qrows:
-        qv = [int(v) for v in r["qv"]]
-        flat = []
-        for m in range(PQ_M):
-            for c in range(PQ_CODES):
-                flat.append(
-                    sum(
-                        (qv[m * PQ_SUB + d] - codebook[c][m * PQ_SUB + d]) ** 2
-                        for d in range(PQ_SUB)
-                    )
-                )
-        luts.append((r["vec_id"], flat))
+    luts = [(r["vec_id"], _pq_lut([int(v) for v in r["qv"]], codebook)) for r in qrows]
     qdf = spark.createDataFrame(luts, "qid bigint, lut array<bigint>")
     adc_d2 = None
     for m in range(PQ_M):
@@ -1070,45 +971,8 @@ def sim_topk_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         "__cb array<array<bigint>>, __cc array<array<bigint>>",
     )
     v = s.crossJoin(F.broadcast(carr))
-
-    def l2_full(c):
-        return F.aggregate(
-            F.zip_with("qv", c, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("bigint"),
-            lambda a, b: a + b,
-        )
-
-    cdists = F.transform(F.col("__cc"), l2_full)
-    cols = [
-        F.col("vec_id"),
-        (F.array_position(cdists, F.array_min(cdists)) - 1)
-        .cast("int")
-        .alias("cid"),
-    ]
-    def subspace_dist_fn(m):
-        # closure factory: the returned callable must take exactly ONE
-        # parameter (pyspark derives the HOF lambda arity from the
-        # Python signature — default args would make it look 3-ary)
-        sub = F.slice("qv", PQ_SUB * m + 1, PQ_SUB)
-
-        def dist_to(c):
-            return F.aggregate(
-                F.zip_with(
-                    sub,
-                    F.slice(c, PQ_SUB * m + 1, PQ_SUB),
-                    lambda x, y: (x - y) * (x - y),
-                ),
-                F.lit(0).cast("bigint"),
-                lambda a, b: a + b,
-            )
-
-        return dist_to
-
-    for m in range(PQ_M):
-        dists = F.transform(F.col("__cb"), subspace_dist_fn(m))
-        cols.append(
-            (F.array_position(dists, F.array_min(dists)) - 1).alias(f"code{m}")
-        )
+    cols = [F.col("vec_id"), nearest("qv", F.col("__cc")).alias("cid")]
+    cols += [argmin(_pq_dists("__cb", m)).alias(f"code{m}") for m in range(PQ_M)]
     corpus = v.select(*cols)
 
     # per-query probes + ADC lookup tables: model math on K×M ints,
@@ -1116,20 +980,9 @@ def sim_topk_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = []
     for r in qrows:
         qv = [int(x) for x in r["qv"]]
-        d2s = sorted(
-            (sum((qv[d] - c[d]) ** 2 for d in range(64)), i)
-            for i, c in enumerate(cents)
-        )
+        d2s = sorted((sqdist(qv, c), i) for i, c in enumerate(cents))
         probes = [i for (_, i) in d2s[:IVFPQ_PROBE]]
-        lut = [
-            sum(
-                (qv[m * PQ_SUB + d] - codebook[c][m * PQ_SUB + d]) ** 2
-                for d in range(PQ_SUB)
-            )
-            for m in range(PQ_M)
-            for c in range(PQ_CODES)
-        ]
-        rows.append((int(r["vec_id"]), probes, lut))
+        rows.append((int(r["vec_id"]), probes, _pq_lut(qv, codebook)))
     qdf = spark.createDataFrame(
         rows, "qid bigint, probes array<int>, lut array<bigint>"
     )
@@ -1316,7 +1169,7 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumer and computes every partition — eager paid a dedicated
     # materialization job for the same blocks
     q = assert_embed_dims(
-        e.select("vec_id", _micro_vec().alias("qv"))
+        e.select("vec_id", micro("embedding").alias("qv"))
     ).localCheckpoint(eager=False)
     cents = lloyd_centroids(q)
     final = (
@@ -1325,11 +1178,7 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "cluster",
             "qv",
-            F.aggregate(
-                F.transform("qv", lambda x: x * x),
-                F.lit(0).cast("bigint"),
-                lambda acc, y: acc + y,
-            ).alias("n2"),
+            isumsq("qv").alias("n2"),
         )
         .localCheckpoint(eager=False)  # read by both self-join
         # sides; lazy — the sizes aggregate materializes it (r11)
@@ -1373,10 +1222,11 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).hint("SHUFFLE_HASH")
     # indexed dot, not zip_with+aggregate: higher-order functions are
     # CodegenFallback (interpreted per element); the unrolled
-    # Σ qa[i]·qb[i] over the fixed 64-dim embedding contract stays in
-    # whole-stage codegen (measured: 6.0 → 4.4 s on the pair stage
-    # before blocking). Same bigint arithmetic, same values.
-    dot = sum(F.col("qa")[i] * F.col("qb")[i] for i in range(EMBED_DIMS))
+    # Σ qa[i]·qb[i] over the fixed 64-dim embedding contract measured
+    # 6.0 → 4.4 s on the pair stage before blocking. The stage's
+    # generated code now passes Janino's 64 KB limit, so it runs without
+    # whole-stage codegen (see vectors.py). Same bigint arithmetic.
+    dot = unrolled_idot("qa", "qb")
     dec = "decimal(38,0)"
     hits = (
         a.join(b, ["cluster", "__blk"])
@@ -1497,24 +1347,18 @@ def embed_matryoshka_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the entire point of MRL serving); two per-query window top-Ks
     and a K-row overlap join, all bounded by Q×K."""
     e = table(spark, sf_dir, "embeddings")
-    v = e.select("vec_id", _micro_vec().alias("qv"))
+    v = e.select("vec_id", micro("embedding").alias("qv"))
     q = v.filter(F.col("vec_id") < MRL_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("qv").alias("qq")
     )
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0).cast("bigint"),
-            lambda acc, y: acc + y,
-        )
     scored = (
         v.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            dot(F.col("qq"), F.col("qv")).alias("dot_full"),
-            dot(
+            idot("qq", "qv").alias("dot_full"),
+            idot(
                 F.slice(F.col("qq"), 1, MRL_DIMS),
                 F.slice(F.col("qv"), 1, MRL_DIMS),
             ).alias("dot_trunc"),
@@ -1658,29 +1502,21 @@ def embed_sq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     point), two per-query window top-Ks and a K-row overlap join,
     all Q*K-bounded."""
     e = table(spark, sf_dir, "embeddings")
-    v = e.select("vec_id", _micro_vec().alias("qv"))
+    v = e.select("vec_id", micro("embedding").alias("qv"))
     coarse = lambda col: F.transform(  # noqa: E731
         col, lambda x: F.floor(x / F.lit(float(SQ_SHIFT))).cast("bigint")
     )
     q = v.filter(F.col("vec_id") < SQ_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("qv").alias("qq")
     )
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0).cast("bigint"),
-            lambda acc, y: acc + y,
-        )
-
     scored = (
         v.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            dot(F.col("qq"), F.col("qv")).alias("dot_full"),
-            dot(coarse(F.col("qq")), coarse(F.col("qv"))).alias("dot_sq"),
+            idot("qq", "qv").alias("dot_full"),
+            idot(coarse(F.col("qq")), coarse(F.col("qv"))).alias("dot_sq"),
         )
         .localCheckpoint(eager=True)  # two rankings + overlap read it
     )

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gmt_dbt_spark.catalog import table
+from gmt_dbt_spark.operators.vectors import isum, micro
 from gmt_dbt_spark.registry import query
 
 
@@ -80,16 +81,10 @@ def ml_sql_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANSI mode — or emit a row with NULL margin for an empty embedding
     where the oracle's unnest(range(0)) emits none)."""
     e = table(spark, sf_dir, "embeddings").filter(F.size("embedding") >= 3)
-    micro = F.transform(
-        "embedding", lambda x: F.floor(x.cast("double") * 1000000.0).cast("bigint")
+    m = e.select("vec_id", micro("embedding").alias("m"))
+    margin = isum(
+        F.transform("m", lambda x, i: x * (((i * 37) % 21) - 10).cast("bigint"))
     )
-    m = e.select("vec_id", micro.alias("m"))
-    weighted = F.zip_with(
-        F.col("m"),
-        F.sequence(F.lit(0), F.size("m") - 1),
-        lambda x, i: x * (((i * 37) % 21) - 10).cast("bigint"),
-    )
-    margin = F.aggregate(weighted, F.lit(0).cast("bigint"), lambda a, b: a + b)
     f0 = F.element_at("m", 1)
     f1 = F.element_at("m", 2)
     f2 = F.element_at("m", 3)

@@ -3,8 +3,8 @@
 Brute-force cosine top-k as the exact baseline, plus an LSH-bucketed
 variant (random-hyperplane signatures) as the 100 TB path: candidates
 come from an equi-join on signature buckets, so the pairwise work is
-O(candidates), not O(n·q). Dot products run JVM-side via
-zip_with+aggregate — no Python in the loop.
+O(candidates), not O(n·q). Dot products and distances come from
+`operators/vectors.py` and run JVM-side — no Python in the loop.
 
 (Top-k similarity framing follows the EDBT 2020 incremental top-k and
 REPOSE ICDE 2021 distributed top-k lines in PAPERS.md.)
@@ -14,12 +14,24 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gmt_dbt_spark.catalog import table
-from gmt_dbt_spark.operators.embeddings import EMBED_DIMS, assert_embed_dims
+from gmt_dbt_spark.operators.embeddings import kmeans_assign
+from gmt_dbt_spark.operators.vectors import (
+    assert_embed_dims,
+    cosine,
+    dot,
+    idot,
+    isumsq,
+    micro,
+    norm,
+    sqdist,
+    unrolled_idot,
+)
 from gmt_dbt_spark.registry import query
+from gmt_dbt_spark.session import scratch_dir
 
 N_QUERIES = 8  # vec_id < 8 are the query vectors in the demo queries
 TOP_K = 5
@@ -95,25 +107,6 @@ def _banded(sig: DataFrame) -> DataFrame:
             )
         ).alias("band", "bkey"),
     )
-
-
-def dot(a: Column, b: Column) -> Column:
-    """Σ aᵢ·bᵢ via zip_with + aggregate (whole-stage codegen'd)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v)
-    )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
 
 
 def _vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -511,16 +504,16 @@ def dedup_embed_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-inline the milli-quantize transform into every qv[i] of the
     # unrolled dot, the exact failure r10's piecemeal attempt
     # measured), and n2 + the pair dot unroll over the pinned
-    # EMBED_DIMS contract as single-parse F.expr strings (the
-    # simhash expr-string recipe), staying in whole-stage codegen.
+    # EMBED_DIMS contract (`unrolled_idot`, one F.expr string each).
+    # The verify stage still runs without whole-stage codegen: its
+    # generated code passes Janino's 64 KB limit (see vectors.py).
     # Same bigint arithmetic, same values. assert_embed_dims makes
     # the unrolled dot fail LOUDLY on an off-contract width
     # (VERDICT item 8) instead of NULLing the pair away.
-    qv = F.transform(F.col("vec"), lambda x: F.floor(x * 1000.0).cast("bigint"))
-    n2_sql = " + ".join(f"qv[{i}] * qv[{i}]" for i in range(EMBED_DIMS))
+    qv = micro(F.col("vec"), 1000.0)
     vq = assert_embed_dims(
         v.select("vec_id", F.explode(F.array(qv)).alias("qv"))
-    ).select("vec_id", "qv", F.expr(n2_sql).alias("n2"))
+    ).select("vec_id", "qv", unrolled_idot("qv", "qv").alias("n2"))
     banded = _banded(_signature(v)).select("vec_id", "band", "bkey")
     l, r = banded.alias("l"), banded.alias("r")
     # narrow-id candidate dedup, vectors re-attached after (same
@@ -559,12 +552,9 @@ def dedup_embed_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "id_b",
     )
-    # unrolled Σ qa[i]·qb[i] (codegen; bit-identical bigint sum —
-    # integer addition is associative-order-free)
-    dot_mil = F.expr(" + ".join(f"qa[{i}] * qb[{i}]" for i in range(EMBED_DIMS)))
     dec = "decimal(38,0)"
     return (
-        pairs.withColumn("dot_mil", dot_mil)
+        pairs.withColumn("dot_mil", unrolled_idot("qa", "qb"))
         .filter(
             # zero-norm guard (r7 — found by the removal-gate planted
             # sweep, the same hole r6 fixed in dedup_semdedup): cosine
@@ -696,12 +686,9 @@ def sink_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     rerank be HASH-ORACLED end-to-end — DuckDB rebuilds the same
     index declaratively. Query = vec_id 400, K=4 lists, N_PROBE=2,
     top-5 by exact micro-dot."""
-    from gmt_dbt_spark.operators.embeddings import _micro_vec, kmeans_assign
-    from gmt_dbt_spark.session import scratch_dir
-
     K, N_PROBE, QID, TOPK = 4, 2, 400, 5
     e = table(spark, sf_dir, "embeddings")
-    q = e.select("vec_id", _micro_vec().alias("qv"))
+    q = e.select("vec_id", micro("embedding").alias("qv"))
     cents = [
         list(r["qv"]) for r in q.filter(F.col("vec_id") < K).orderBy("vec_id").collect()
     ]
@@ -714,28 +701,20 @@ def sink_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         # probe: the query vector's N_PROBE nearest lists
         qrow = q.filter(F.col("vec_id") == QID).collect()[0]
         qv = [int(x) for x in qrow["qv"]]
-        dists = sorted(
-            (sum((a - b) * (a - b) for a, b in zip(qv, c)), i)
-            for i, c in enumerate(cents)
-        )
+        dists = sorted((sqdist(qv, c), i) for i, c in enumerate(cents))
         probe_lists = [i for _, i in dists[:N_PROBE]]
         # serve: partition-pruned read of ONLY the probed lists
         idx = spark.read.parquet(scratch).filter(
             F.col("list_id").isin(probe_lists) & (F.col("vec_id") != QID)
         )
         qarr = F.array(*[F.lit(x) for x in qv])
-        dot = F.aggregate(
-            F.zip_with("qv", qarr, lambda a, b: a * b),
-            F.lit(0).cast("bigint"),
-            lambda a, b: a + b,
-        )
         # heap-based global top-k (TakeOrderedAndProject: per-partition
         # heaps + driver merge of k rows) — a rank-window here would
         # drag EVERY candidate into one partition; the rank label is
         # attached afterwards, over just the k survivors
         w = Window.orderBy(F.desc("dot"), F.asc("vec_id"))
         out = (
-            idx.select("vec_id", dot.alias("dot"))
+            idx.select("vec_id", idot("qv", qarr).alias("dot"))
             .orderBy(F.desc("dot"), F.asc("vec_id"))
             .limit(TOPK)
             .withColumn("rnk", F.row_number().over(w))
@@ -755,16 +734,6 @@ _MICRO_SQL = (
     "list_transform(embedding,"
     " x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0) AS BIGINT))"
 )
-
-
-def _micro_dot(a: Column, b: Column) -> Column:
-    """Exact bigint dot product of two micro-unit vectors (components
-    ≤ 1e6, 64 dims → ≤ 6.4e13, far inside int64)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
 
 
 def _mmr_oracle() -> str:
@@ -858,15 +827,13 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint: the growing selected set has two consumers per
     step)."""
     e = table(spark, sf_dir, "embeddings")
-    from gmt_dbt_spark.operators.embeddings import _micro_vec
-
-    v = e.select("vec_id", _micro_vec().alias("mv")).filter(
-        _micro_dot(F.col("mv"), F.col("mv")) > 0
+    v = e.select("vec_id", micro("embedding").alias("mv")).filter(
+        idot("mv", "mv") > 0
     )
     q = v.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("mv").alias("qmv")
     )
-    rel = _micro_dot(F.col("qmv"), F.col("mv")).alias("rel")
+    rel = idot("qmv", "mv").alias("rel")
     wrel = Window.partitionBy("query_id").orderBy(
         F.desc("rel"), F.asc("neighbor_id")
     )
@@ -908,9 +875,7 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .groupBy("query_id", "neighbor_id")
             .agg(
-                F.max(
-                    _micro_dot(F.col("r.mv"), F.col("s.smv"))
-                ).alias("maxsim")
+                F.max(idot(F.col("r.mv"), F.col("s.smv"))).alias("maxsim")
             )
         )
         wsc = Window.partitionBy("query_id").orderBy(
@@ -1096,17 +1061,8 @@ def sim_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     v = _vecs(spark, sf_dir)
-    qv = F.transform(
-        F.col("vec"), lambda x: F.floor(x * 1000.0).cast("bigint")
-    )
-    vq = v.select("vec_id", qv.alias("qv")).select(
-        "vec_id",
-        "qv",
-        F.aggregate(
-            F.transform(F.col("qv"), lambda x: x * x),
-            F.lit(0).cast("bigint"),
-            lambda acc, y: acc + y,
-        ).alias("n2"),
+    vq = v.select("vec_id", micro(F.col("vec"), 1000.0).alias("qv")).select(
+        "vec_id", "qv", isumsq("qv").alias("n2")
     )
     qs = vq.filter(
         (F.col("vec_id") < len(_RRF_TERMS)) & (F.col("n2") > 0)
@@ -1117,14 +1073,7 @@ def sim_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         vq.filter(F.col("n2") > 0)
         .crossJoin(F.broadcast(qs))
         .filter(F.col("vec_id") != F.col("qid"))
-        .withColumn(
-            "d",
-            F.aggregate(
-                F.zip_with("qqv", "qv", lambda x, y: x * y),
-                F.lit(0).cast("bigint"),
-                lambda acc, y: acc + y,
-            ),
-        )
+        .withColumn("d", idot("qqv", "qv"))
         .withColumn(
             "key",
             F.expr(

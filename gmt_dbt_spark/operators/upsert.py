@@ -22,12 +22,16 @@ overwrite), so a daily batch rewrites days, not history.
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gmt_dbt_spark.catalog import table
 from gmt_dbt_spark.registry import query
-from gmt_dbt_spark.session import scratch_dir
+from gmt_dbt_spark.session import checkpoint, scratch_dir
 from gmt_dbt_spark.sources.readers import scan_json, schema_from_json_file
 from gmt_dbt_spark.sources.sinks import StagingTable, sink_overwrite
 
@@ -118,8 +122,6 @@ def upsert_partitioned(
 
 # ---------------------------------------------------------------- driver query
 
-import os  # noqa: E402
-
 REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 _FX = os.path.join(REPO, "fixtures")
 
@@ -161,25 +163,37 @@ def delete_keys_partitioned(
     anti-join those partitions against the (broadcast) key list, and
     dynamically overwrite just them — O(affected partitions), not
     O(target). The key list is read twice (partition discovery +
-    anti-join); it is takedown-sized, so both are broadcasts."""
+    anti-join); it is takedown-sized, so both are broadcasts.
+
+    Dynamic overwrite replaces only the partitions ``kept`` has rows
+    for, so a partition whose every row is doomed is removed by
+    directory once the overwrite has succeeded. The partitions ``kept``
+    still covers ride its checkpoint job as an observed metric."""
     target = spark.read.parquet(target_path)
-    affected = [
-        r[0]
-        for r in target.join(F.broadcast(keys_df), key, "left_semi")
-        .select(partition_col)
+    part = F.col(partition_col)
+    # (typed value, its directory value — how Spark names the partition)
+    affected = (
+        target.join(F.broadcast(keys_df), key, "left_semi")
+        .select(part, part.cast("string"))
         .distinct()
         .collect()
-    ]
+    )
     if not affected:
         return
-    kept = (
-        target.filter(F.col(partition_col).isin(affected))
-        .join(F.broadcast(keys_df), key, "left_anti")
-        .localCheckpoint(eager=True)  # sever lineage before overwrite
+    kept, seen = checkpoint(  # sever lineage before overwrite
+        target.filter(part.isin([r[0] for r in affected])).join(
+            F.broadcast(keys_df), key, "left_anti"
+        ),
+        covered=F.to_json(F.collect_set(part.cast("string"))),
     )
     kept.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
         partition_col
     ).parquet(target_path)
+    # a NULL partition is never selected by isin, so it is never emptied
+    emptied = {r[1] for r in affected if r[1] is not None} - set(json.loads(seen.covered))
+    escape = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
+    for value in emptied:
+        shutil.rmtree(os.path.join(target_path, f"{partition_col}={escape(value)}"))
 
 
 @query(

@@ -704,10 +704,11 @@ def test_ivf_partitioned_probe_prunes_partitions(spark, tmp_path):
     (...) must hit PartitionFilters (directory pruning) — reading
     N_PROBE/K of the files, not scanning all lists."""
     from gmt_dbt_spark.catalog import table
-    from gmt_dbt_spark.operators.embeddings import _micro_vec, kmeans_assign
+    from gmt_dbt_spark.operators.embeddings import kmeans_assign
+    from gmt_dbt_spark.operators.vectors import micro
 
     q = table(spark, SF_DIR, "embeddings").select(
-        "vec_id", _micro_vec().alias("qv")
+        "vec_id", micro("embedding").alias("qv")
     )
     cents = [
         list(r["qv"])

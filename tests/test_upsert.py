@@ -163,6 +163,26 @@ def test_delete_keys_touches_only_affected_partitions(spark, tmp_path):
     assert files_of("c") == before_c
 
 
+@pytest.mark.parametrize("part_type", ["bigint", "string"])
+def test_delete_keys_erases_partition_left_empty(spark, tmp_path, part_type):
+    """A partition whose every row is doomed must go too: dynamic
+    overwrite never touches a partition the kept rows do not cover.
+    The string case carries a value Spark escapes in the directory
+    name."""
+    from gmt_dbt_spark.operators.upsert import delete_keys_partitioned
+
+    path = str(tmp_path / "t")
+    p1, p2 = ("1", "2") if part_type == "bigint" else ("a/1", "b")
+    rows = spark.createDataFrame(
+        [(1, p1), (2, p2)], "id bigint, p string"
+    ).select("id", F.col("p").cast(part_type))
+    rows.write.partitionBy("p").parquet(path)
+    doomed = spark.createDataFrame([(1,)], "id bigint")
+    delete_keys_partitioned(spark, path, doomed, "id", "p")
+    assert [r.id for r in spark.read.parquet(path).collect()] == [2]
+    assert sorted(n for n in os.listdir(path) if n.startswith("p=")) == [f"p={p2}"]
+
+
 def test_evolve_adds_staging_column_null_backfilled(spark, target, staging):
     """A column the producer STARTED sending is added to the target
     with NULLs on every kept row; merged-in rows carry its values."""
