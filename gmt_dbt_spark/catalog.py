@@ -49,10 +49,6 @@ TABLES = (
 BROADCAST_TABLES = frozenset({"region", "nation"})
 
 
-def default_sf_dir() -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def file_fingerprint(path: str) -> tuple[str, int, int] | None:
     """``(abspath, st_mtime_ns, st_size)`` of a regular file; ``None``
     for a missing path or anything else (a directory's stat misses

@@ -522,7 +522,7 @@ def text_ngram_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (each token pays its regex once) and pair neighbours with a
     lead() window keyed by doc — versus inlining `tokens[i]` in an
     array transform, which re-evaluates the whole tokenize
-    expression per element (see shingles_col PERF WARNING). One
+    expression per element (see dedup.shingle_rows). One
     shuffle by doc_id for the window, then the count's own shuffle
     on the bigram key spreads hot bigrams across reducers."""
     from pyspark.sql import Window
@@ -1382,13 +1382,12 @@ def text_ttr(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero at any sane doc length); both engines hash identically, so
     parity is exact regardless. Zero-token docs drop on both engines
     (no rows survive the explode — the family rule)."""
-    from gmt_dbt_spark.operators.dedup import _hash_family, shingle_hash
+    from gmt_dbt_spark.operators.dedup import shingle_hash
 
-    fam = _hash_family()  # resolved once per plan; oracle needs md5
     d = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     tok = d.select("doc_id", F.explode(tokens_col(F.col("text"))).alias("t"))
     c = (
-        tok.select("doc_id", shingle_hash("t", fam).alias("h"))
+        tok.select("doc_id", shingle_hash("t").alias("h"))
         .groupBy("doc_id", "h")
         .agg(F.count(F.lit(1)).alias("c"))
     )

@@ -329,29 +329,16 @@ def dedup_fuzzy_unicode(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-text shingle, spuriously pairing with every other
     empty-normalizing doc at jaccard 1.0 — the exact multilingual
     failure mode this surface fixes (pinned in
-    tests/test_unicode_text.py). The md5 hash family is forced (the
-    oracle replays md5 only — the `_hash_family` contract).
+    tests/test_unicode_text.py).
 
     Scale shape: identical to dedup_fuzzy — 96-byte/doc signatures,
     band-key equi-join, verify bounded by |candidates|; text never
     shuffles."""
-    from gmt_dbt_spark.operators.dedup import (
-        lsh_candidate_ids,
-        lsh_candidates,
-        minhash_signature,
-        verify_jaccard,
-    )
+    from gmt_dbt_spark.operators.dedup import near_dup_pairs
 
-    docs = _with_planted(spark, sf_dir)
-    sig = minhash_signature(
-        docs, "doc_id", "text", "md5", unicode=True
-    ).localCheckpoint(eager=True)
-    pairs = lsh_candidates(sig, "md5")
-    cand = lsh_candidate_ids(sig, "md5")
-    return verify_jaccard(
-        pairs, docs, "doc_id", "text", 0.6,
-        cand_ids=cand, shingle=True, unicode=True,
-    ).select("id_a", "id_b", "n_inter", "n_union")
+    return near_dup_pairs(
+        _with_planted(spark, sf_dir), "doc_id", "text", 0.6, unicode=True
+    )
 
 
 # CJK run class (han + kana + hangul) — the scripts written without
@@ -624,7 +611,7 @@ _DUCK_CJK_GRAMS = """SELECT doc_id, unnest(CASE WHEN len(run) >= 2
 
 
 def _cjk_neardup_oracle() -> str:
-    from gmt_dbt_spark.operators.dedup import _banded_sql, _hash_sig_ctes
+    from gmt_dbt_spark.operators.dedup import _hash_sig_ctes, _lsh_verify_sql
 
     return f"""
 WITH {_SRC_SQL},
@@ -636,24 +623,7 @@ sh AS (
   {_DUCK_CJK_GRAMS}
 ),
 {_hash_sig_ctes()},
-banded AS (
-  {_banded_sql("sig")}
-),
-cand AS (
-  SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-  FROM banded l JOIN banded r
-    ON l.band = r.band AND l.band_hash = r.band_hash AND l.doc_id < r.doc_id
-),
-sets AS (SELECT doc_id, list_distinct(list(s)) AS shs FROM sh GROUP BY doc_id)
-SELECT c.id_a, c.id_b,
-       CAST(len(list_intersect(a.shs, b.shs)) AS BIGINT) AS n_inter,
-       CAST(len(list_distinct(a.shs || b.shs)) AS BIGINT) AS n_union
-FROM cand c
-JOIN sets a ON c.id_a = a.doc_id
-JOIN sets b ON c.id_b = b.doc_id
-WHERE len(list_intersect(a.shs, b.shs)) * 10
-      >= len(list_distinct(a.shs || b.shs)) * 6
-"""
+{_lsh_verify_sql(6)}"""
 
 
 @query("dedup_cjk_bigram_neardup", oracle=_cjk_neardup_oracle())
@@ -666,7 +636,7 @@ def dedup_cjk_bigram_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     `_cjk_gram_rows`; signature/banding/verify are dedup_fuzzy's
     EXACT algebra via the grain-agnostic seams factored this round
     (`sig_from_rows`, `verify_jaccard(sets_df=...)`, and the oracle's
-    `_hash_sig_ctes`/`_banded_sql` — generated from the same
+    `_hash_sig_ctes`/`_lsh_verify_sql` — generated from the same
     constants, no second copy of the hash family).
 
     Docs with no CJK runs contribute no grams and can never pair
@@ -687,9 +657,9 @@ def dedup_cjk_bigram_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _with_planted(spark, sf_dir)
     grams = _cjk_gram_rows(src)
-    sig = sig_from_rows(grams, "md5").localCheckpoint(eager=True)
-    pairs = lsh_candidates(sig, "md5")
-    cand = lsh_candidate_ids(sig, "md5")
+    sig = sig_from_rows(grams).localCheckpoint(eager=True)
+    pairs = lsh_candidates(sig)
+    cand = lsh_candidate_ids(sig)
     # r10 optimization pass (guide §2.4, the shingle_sets treatment
     # at the per-run grain): prune DOCS first (semi-join on the
     # narrow id), then build each candidate's distinct gram set

@@ -1454,12 +1454,13 @@ def _pretrain_oracle() -> str:
     filtered to exact-dedup keepers — identical to computing them on
     keepers only, since a signature depends on nothing but the doc's
     own text."""
-    from gmt_dbt_spark.operators.dedup import _AB, _banded_sql, _sig_cte_prefix
-
-    n_match = " + ".join(
-        f"CASE WHEN ls.mh{j} = rs.mh{j} THEN 1 ELSE 0 END"
-        for j in range(len(_AB))
+    from gmt_dbt_spark.operators.dedup import (
+        _BAND_JOIN_SQL,
+        _banded_sql,
+        _sig_cte_prefix,
+        sig_agreement_sql,
     )
+
     return f"""
 WITH {_sig_cte_prefix()},
 train AS (
@@ -1486,11 +1487,11 @@ kband AS (
 fdup AS (
   SELECT DISTINCT r.doc_id
   FROM kband l
-  JOIN kband r ON l.band = r.band AND l.band_hash = r.band_hash
+  JOIN kband r ON {_BAND_JOIN_SQL}
               AND l.doc_id < r.doc_id
   JOIN ksig ls ON ls.doc_id = l.doc_id
   JOIN ksig rs ON rs.doc_id = r.doc_id
-  WHERE {n_match} >= {_PIPE_FUZZY_MIN_MATCH}
+  WHERE {sig_agreement_sql("ls", "rs")} >= {_PIPE_FUZZY_MIN_MATCH}
 ),
 evalfp AS (
   SELECT DISTINCT {_FP5} AS fpk FROM documents
@@ -1530,7 +1531,7 @@ def pipeline_pretrain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     held-out sources) → per-source funnel report (doc counts at every
     stage + final token budget). Every stage IS its standalone
     operator's definition (quality_gate semantics, the
-    dedup_keep_canonical keeper rule, minhash_signature/banded_sig,
+    dedup_keep_canonical keeper rule, minhash_signature/lsh_candidates,
     fp5_col), so this query certifies the stages COMPOSE — the thing
     a real curation run actually does.
 
@@ -1551,9 +1552,9 @@ def pipeline_pretrain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     total_tokens) — a monotone funnel, every value an exact BIGINT.
     """
     from gmt_dbt_spark.operators.dedup import (
-        _AB,
-        banded_sig,
+        lsh_candidates,
         minhash_signature,
+        sig_agreement,
     )
     from pyspark.sql import Window
 
@@ -1578,40 +1579,12 @@ def pipeline_pretrain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     keepers = lab0.filter(F.col("q") & (F.col("doc_id") == F.col("kid")))
 
-    from gmt_dbt_spark.operators.dedup import _hash_family
-
-    fam = _hash_family()  # resolved once per plan (advisor r5)
-    sig = minhash_signature(keepers, "doc_id", "text", fam).localCheckpoint(
-        eager=True
-    )
-    banded = banded_sig(sig, fam)
-    l, r = banded.alias("l"), banded.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col("l.__id") < F.col("r.__id")),
-        )
-        .select(F.col("l.__id").alias("id_a"), F.col("r.__id").alias("id_b"))
-        .distinct()
-    )
-    ls = sig.select(
-        F.col("__id").alias("id_a"),
-        *[F.col(f"mh{j}").alias(f"a{j}") for j in range(len(_AB))],
-    )
-    rs = sig.select(
-        F.col("__id").alias("id_b"),
-        *[F.col(f"mh{j}").alias(f"b{j}") for j in range(len(_AB))],
-    )
-    n_match = sum(
-        F.when(F.col(f"a{j}") == F.col(f"b{j}"), 1).otherwise(0)
-        for j in range(len(_AB))
-    )
+    sig = minhash_signature(keepers, "doc_id", "text").localCheckpoint(eager=True)
     fdup = (
-        cand.join(ls, "id_a")
-        .join(rs, "id_b")
-        .filter(n_match >= _PIPE_FUZZY_MIN_MATCH)
+        lsh_candidates(sig)
+        .join(sig.alias("l"), F.col("id_a") == F.col("l.__id"))
+        .join(sig.alias("r"), F.col("id_b") == F.col("r.__id"))
+        .filter(sig_agreement("l", "r") >= _PIPE_FUZZY_MIN_MATCH)
         .select(F.col("id_b").alias("doc_id"), F.lit(True).alias("__fd"))
         .distinct()
     )

@@ -136,26 +136,6 @@ def tokens_col(c: Column, unicode: bool = False) -> Column:
     )
 
 
-def shingles_col(tokens: Column, n: int = 3) -> Column:
-    """Sliding word n-grams via sequence+transform (JVM-side, no UDF).
-
-    PERF WARNING: every ``tokens[i]`` element access inlines the full
-    tokens expression (CollapseProject cannot dedup it), so passing
-    ``tokens_col(text)`` here costs O(tokens × n) regex evaluations
-    per row. Fine on an already-materialized array column; for
-    shingling straight off a text column use ``shingle_rows`` /
-    ``shingle_sets`` (18× faster at sf0.1)."""
-    return F.when(
-        F.size(tokens) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(tokens) - n),
-            lambda i: F.concat_ws(
-                " ", tokens[i], tokens[i + 1], tokens[i + 2]
-            ),
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", tokens)))
-
-
 def shingle_rows(
     df: DataFrame,
     id_col: str,
@@ -182,12 +162,11 @@ def shingle_rows(
     CollapseProject cannot inline a projection through Generate, and
     a single-element explode adds no rows and no shuffle.
 
-    Short docs (< n tokens) contribute one whole-text shingle —
-    identical to `shingles_col`'s fallback. NULL-text rows emit no
-    shingles at all (same as the r1 posexplode form, where exploding
-    a NULL token array produced zero rows — without the filter a NULL
-    doc would collapse to the {''} shingle set and spuriously match
-    every other NULL doc at jaccard 1.0).
+    Short docs (< n tokens) contribute one whole-text shingle.
+    NULL-text rows emit no shingles at all (same as the r1 posexplode
+    form, where exploding a NULL token array produced zero rows —
+    without the filter a NULL doc would collapse to the {''} shingle
+    set and spuriously match every other NULL doc at jaccard 1.0).
 
     ``min_tokens`` (r9, ADVICE): a caller gating on token count must
     NOT pre-filter with ``F.size(tokens_col(...))`` — that inlines a
@@ -257,81 +236,39 @@ def shingle_sets(
     return tok.select("__id", F.array_distinct(shingles).alias("__shs"))
 
 
-def _hash_family() -> str:
-    """The MinHash base-hash family, per-session switchable (r4,
-    judge item 7): ``spark.gmt_dbt.hash_family`` = ``md5`` (default —
-    engine-neutral, the whole pipeline DuckDB-replayable and value-
-    hashed by the oracle gate) or ``xxhash64`` (production — ~27%
-    faster signature build; measured sf0.1 local[32] warm: 1.02 s vs
-    1.29 s md5). Oracle coverage costs nothing: every registered
-    query runs under the default, and the flagged path is pinned
-    equal on the verified PAIR SET by
-    tests/test_llm_ops.py::test_hash_family_flag_same_verified_pairs
-    (different base hashes give different bucket keys but the same
-    ≥-threshold survivors when banding recall holds).
-
-    Resolved ONCE per query invocation (r5, advisor item): every
-    top-level query reads this at entry and passes the value down to
-    `minhash_signature`/`banded_sig`, so flipping the conf mid-
-    session can never mix families between the signature build and
-    the banding of one plan. Selfcheck/oracle runs require the md5
-    default — the registered oracles replay md5 only."""
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        return "md5"
-    try:
-        fam = spark.conf.get("spark.gmt_dbt.hash_family", "md5")
-    except Exception:  # noqa: BLE001 — conf service unavailable
-        return "md5"
-    return fam if fam in ("md5", "xxhash64") else "md5"
-
-
-def shingle_hash(col: str, family: str | None = None) -> Column:
+def shingle_hash(col: str) -> Column:
     """Base hash of one shingle: first 8 hex chars of md5, as a
-    32-bit int, reduced mod the Mersenne prime — or xxhash64 under
-    the production flag (`_hash_family`).
+    32-bit int, reduced mod the Mersenne prime.
 
-    md5 default (r3): every engine computes the same md5, so the
-    ENTIRE MinHash pipeline — including the benched full-corpus
+    md5 (r3): every engine computes the same md5, so the ENTIRE
+    MinHash pipeline — including the benched full-corpus
     dedup_fuzzy/dedup_ngram_jaccard — is DuckDB-replayable and value-
     hashed. DuckDB 1.0 has no crc32/xxhash, so md5 is the cheapest
-    engine-neutral choice; xxhash64 (Spark-only, JVM codegen, no hex
-    round-trip) is the raw-throughput production path."""
-    if (family or _hash_family()) == "xxhash64":
-        return F.pmod(F.xxhash64(col), F.lit(_P))
+    engine-neutral choice; it makes the signature build ~27% slower
+    than a JVM-native hash would (+0.3 s at sf0.1)."""
     return F.pmod(
         F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint"), F.lit(_P)
     )
 
 
 def minhash_signature(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    family: str | None = None,
-    unicode: bool = False,
+    df: DataFrame, id_col: str, text_col: str, unicode: bool = False
 ) -> DataFrame:
     """id → 12 minhash values over 3-word shingles.
 
     shingle rows → md5-derived base hash → 12 universal hashes →
     groupBy-min: one shuffle on the id, partial min map-side.
     Signature is 96 bytes/doc regardless of doc size — the
-    constant-space property that makes this the 100 TB dedup plan.
-
-    ``family`` pins the base-hash family for this plan; None resolves
-    the session conf ONCE here (never per-expression)."""
-    family = family or _hash_family()
-    return sig_from_rows(
-        shingle_rows(df, id_col, text_col, unicode=unicode), family
-    )
+    constant-space property that makes this the 100 TB dedup plan."""
+    return sig_from_rows(shingle_rows(df, id_col, text_col, unicode=unicode))
 
 
-def sig_from_rows(rows: DataFrame, family: str | None = None) -> DataFrame:
+def sig_from_rows(rows: DataFrame) -> DataFrame:
     """(__id, __sh) gram/shingle rows → the 12-minhash signature —
     the grain-agnostic half of `minhash_signature` (r9: the CJK
     char-bigram near-dup feeds bigram grams through the IDENTICAL
-    hash family/signature algebra)."""
-    sh = rows.withColumn("__h", shingle_hash("__sh", family))
+    hash/signature algebra)."""
+    sh = rows.withColumn("__h", shingle_hash("__sh"))
     aggs = [
         F.min(F.pmod(F.col("__h") * a + b, F.lit(_P))).alias(f"mh{j}")
         for j, (a, b) in enumerate(_AB)
@@ -339,23 +276,18 @@ def sig_from_rows(rows: DataFrame, family: str | None = None) -> DataFrame:
     return sh.groupBy("__id").agg(*aggs)
 
 
-def banded_sig(sig: DataFrame, family: str | None = None) -> DataFrame:
+def banded_sig(sig: DataFrame) -> DataFrame:
     """(__id, band, band_hash) — one row per signature band.
 
     Band key = 60-bit int from md5 of the comma-joined band minhashes
-    (engine-neutral default, r3 — xxhash64 is Spark-only), or
-    xxhash64 of the same string under the production flag
-    (`_hash_family`); 4 hashes per DOC, not per shingle, so the cost
-    is invisible next to the signature build either way."""
+    (engine-neutral, r3); 4 hashes per DOC, not per shingle, so the
+    cost is invisible next to the signature build."""
     rows_per_band = len(_AB) // _BANDS
-    xx = (family or _hash_family()) == "xxhash64"
 
     def band_key(b: int) -> Column:
         joined = F.concat_ws(
             ",", *[F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)]
         )
-        if xx:
-            return F.xxhash64(joined)
         return F.conv(F.substring(F.md5(joined), 1, 15), 16, 10).cast("bigint")
 
     return sig.select(
@@ -366,10 +298,10 @@ def banded_sig(sig: DataFrame, family: str | None = None) -> DataFrame:
     )
 
 
-def lsh_candidates(sig: DataFrame, family: str | None = None) -> DataFrame:
+def lsh_candidates(sig: DataFrame) -> DataFrame:
     """Band the signatures and self-join on (band, band_hash):
     equi-join candidate generation, never a cross join."""
-    banded = banded_sig(sig, family)
+    banded = banded_sig(sig)
     left = banded.alias("l")
     right = banded.alias("r")
     return (
@@ -384,14 +316,14 @@ def lsh_candidates(sig: DataFrame, family: str | None = None) -> DataFrame:
     )
 
 
-def lsh_candidate_ids(sig: DataFrame, family: str | None = None) -> DataFrame:
+def lsh_candidate_ids(sig: DataFrame) -> DataFrame:
     """Ids that appear in at least one candidate pair, WITHOUT
     replaying the pair self-join: a band bucket with k members yields
     pairs iff k ≥ 2, so the id set is exactly 'members of any bucket
     with count > 1' — one groupBy + one semi-join over the banded
     table (reads the 96-byte signatures, never the documents). Used
     to prune the verify stage's tokenization to candidate docs only."""
-    banded = banded_sig(sig, family)
+    banded = banded_sig(sig)
     big = (
         banded.groupBy("band", "band_hash")
         .agg(F.count(F.lit(1)).alias("k"))
@@ -401,6 +333,52 @@ def lsh_candidate_ids(sig: DataFrame, family: str | None = None) -> DataFrame:
     return (
         banded.join(big, ["band", "band_hash"], "left_semi").select("__id").distinct()
     )
+
+
+def sig_agreement(l: str, r: str) -> Column:
+    """Σ_j [l.mh_j = r.mh_j] — how many of the 12 minhash components
+    two signature frames aliased ``l`` and ``r`` share (≈ 12 × their
+    estimated Jaccard). The verify of every store/composite near-dup
+    that has signatures but no text."""
+    return sum(
+        F.when(F.col(f"{l}.mh{j}") == F.col(f"{r}.mh{j}"), 1).otherwise(0)
+        for j in range(len(_AB))
+    )
+
+
+def sig_agreement_sql(l: str, r: str) -> str:
+    """The DuckDB twin of `sig_agreement` for the replay oracles."""
+    return " + ".join(
+        f"CASE WHEN {l}.mh{j} = {r}.mh{j} THEN 1 ELSE 0 END" for j in range(len(_AB))
+    )
+
+
+def near_dup_pairs(
+    df: DataFrame, id_col: str, text_col: str, threshold: float, unicode: bool = False
+) -> DataFrame:
+    """Word-3-shingle MinHash-LSH near-duplicate pairs at exact
+    shingle-set Jaccard ≥ ``threshold``: (id_a, id_b, n_inter,
+    n_union) with id_a < id_b.
+
+    The 96-byte/doc signature table is materialized once — the band
+    self-join, the bucket-count candidate ids and the verify prune
+    all re-read it. Candidate ids come from the bucket counts
+    (`lsh_candidate_ids`), so the pair self-join stays a consume-once
+    spine, and only candidate docs are shingled for the verify: its
+    cost tracks |candidates|, not |corpus|."""
+    sig = minhash_signature(df, id_col, text_col, unicode=unicode).localCheckpoint(
+        eager=True
+    )
+    return verify_jaccard(
+        lsh_candidates(sig),
+        df,
+        id_col,
+        text_col,
+        threshold,
+        cand_ids=lsh_candidate_ids(sig),
+        shingle=True,
+        unicode=unicode,
+    ).select("id_a", "id_b", "n_inter", "n_union")
 
 
 def verify_jaccard(
@@ -609,29 +587,23 @@ def _banded_sql(src: str) -> str:
     )
 
 
-def _minhash_oracle(
-    thresh_num: int,
-    tokens_sql: str | None = None,
-    src: str = "documents",
-    prefix_ctes: str = "",
-) -> str:
-    """DuckDB FULL replay of the custom MinHash-LSH pipeline (r3) —
-    shingles (with the short-doc whole-text fallback), md5-derived
-    base hashes, the 12-function universal-hash signature, md5 band
-    keys, the band self-join, and the exact shingle-Jaccard verify as
-    an integer cross-multiplication at ``thresh_num``/10. Generated
-    from the same `_AB` constants the Spark plan uses.
-    ``tokens_sql``/``src``/``prefix_ctes``: the r9 unicode variant
-    (see _sig_cte_prefix); defaults reproduce the frozen string."""
-    return f"""
-WITH {prefix_ctes}{_sig_cte_prefix(tokens_sql, src)},
-banded AS (
+# The SQL twin of `lsh_candidates`' band-key equi-join condition.
+_BAND_JOIN_SQL = "l.band = r.band AND l.band_hash = r.band_hash"
+
+
+def _lsh_verify_sql(thresh_num: int) -> str:
+    """The replay after a `sh`/`sig` CTE pair: md5 band keys, the
+    band self-join, and the exact shingle-set Jaccard verify as an
+    integer cross-multiplication at ``thresh_num``/10 — the SQL twin
+    of `near_dup_pairs`' candidates-then-verify half, shared by the
+    word-shingle and the CJK char-bigram oracles."""
+    return f"""banded AS (
   {_banded_sql("sig")}
 ),
 cand AS (
   SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
   FROM banded l JOIN banded r
-    ON l.band = r.band AND l.band_hash = r.band_hash AND l.doc_id < r.doc_id
+    ON {_BAND_JOIN_SQL} AND l.doc_id < r.doc_id
 ),
 sets AS (SELECT doc_id, list_distinct(list(s)) AS shs FROM sh GROUP BY doc_id)
 SELECT c.id_a, c.id_b,
@@ -643,6 +615,24 @@ JOIN sets b ON c.id_b = b.doc_id
 WHERE len(list_intersect(a.shs, b.shs)) * 10
       >= len(list_distinct(a.shs || b.shs)) * {thresh_num}
 """
+
+
+def _minhash_oracle(
+    thresh_num: int,
+    tokens_sql: str | None = None,
+    src: str = "documents",
+    prefix_ctes: str = "",
+) -> str:
+    """DuckDB FULL replay of the custom MinHash-LSH pipeline (r3) —
+    shingles (with the short-doc whole-text fallback), md5-derived
+    base hashes, the 12-function universal-hash signature, then
+    `_lsh_verify_sql`. Generated from the same `_AB` constants the
+    Spark plan uses. ``tokens_sql``/``src``/``prefix_ctes``: the r9
+    unicode variant (see _sig_cte_prefix); defaults reproduce the
+    frozen string."""
+    return f"""
+WITH {prefix_ctes}{_sig_cte_prefix(tokens_sql, src)},
+{_lsh_verify_sql(thresh_num)}"""
 
 
 @query("dedup_fuzzy", oracle=_minhash_oracle(6))
@@ -662,19 +652,7 @@ def dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     reports the exact (n_inter, n_union) shingle-set evidence instead
     of a rounded float (round(x, 4) can land on a rounding-tie ulp;
     integer set sizes cannot)."""
-    docs = table(spark, sf_dir, "documents")
-    # hash family resolved ONCE for the whole plan (advisor r5) —
-    # sig build and banding can never mix families
-    fam = _hash_family()
-    # materialize the 96-byte/doc signature table once — the band
-    # self-join, the bucket-count candidate ids, and the verify prune
-    # all re-read it (see dedup_ngram_jaccard)
-    sig = minhash_signature(docs, "doc_id", "text", fam).localCheckpoint(eager=True)
-    pairs = lsh_candidates(sig, fam)
-    cand = lsh_candidate_ids(sig, fam)
-    return verify_jaccard(
-        pairs, docs, "doc_id", "text", 0.6, cand_ids=cand, shingle=True
-    ).select("id_a", "id_b", "n_inter", "n_union")
+    return near_dup_pairs(table(spark, sf_dir, "documents"), "doc_id", "text", 0.6)
 
 
 _FUZZY_ML_ORACLE = """
@@ -939,7 +917,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-anti-joined, never shuffled with data.
 
     ORACLE-HASHED end-to-end since r3: the token hash is md5 hex
-    (identical on every engine — xxhash64 is Spark-only), parsed as
+    (identical on every engine), parsed as
     two 32-bit halves so neither engine needs unsigned-64 arithmetic;
     DuckDB replays the ENTIRE pipeline — hashes, 64 per-bit
     sign-sums, the 4-band bucket join, the hot-bucket cap, and the
@@ -1024,36 +1002,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     family as dedup_fuzzy, same full-corpus DuckDB replay at the 0.8
     threshold — the benched plan IS the verified plan, with no slice
     restriction for Catalyst to push into the banding join."""
-    docs = table(spark, sf_dir, "documents")
-    fam = _hash_family()  # resolved once per plan (advisor r5)
-    # 96-byte signatures: materialize once (the band self-join reads
-    # the signature table twice; without this it recomputes the whole
-    # shingle+hash pipeline per side)
-    sig = minhash_signature(docs, "doc_id", "text", fam).localCheckpoint(eager=True)
-    pairs = lsh_candidates(sig, fam)
-    # shingle ONLY the candidate docs (semi-join prune): verify cost
-    # tracks |candidates|, not |corpus| — the property that keeps the
-    # strict verify affordable at 100 TB. Candidate ids come from the
-    # banded bucket counts (lsh_candidate_ids), so the pair self-join
-    # stays a consume-once spine — no checkpoint, no replay.
-    cand_ids = lsh_candidate_ids(sig, fam).toDF("doc_id")
-    cand_docs = docs.join(cand_ids, "doc_id", "left_semi")
-    toks = shingle_sets(cand_docs, "doc_id", "text").select(
-        F.col("__id").alias("__tid"), F.col("__shs").alias("__toks")
-    ).localCheckpoint(eager=True)  # consumed by both self-join sides
-    a, b = toks.alias("a"), toks.alias("b")
-    return (
-        pairs.join(a, F.col("id_a") == F.col("a.__tid"))
-        .join(b, F.col("id_b") == F.col("b.__tid"))
-        .withColumn(
-            "n_inter", F.size(F.array_intersect("a.__toks", "b.__toks")).cast("bigint")
-        )
-        .withColumn(
-            "n_union", F.size(F.array_union("a.__toks", "b.__toks")).cast("bigint")
-        )
-        .filter(F.col("n_inter") * 10 >= F.col("n_union") * 8)
-        .select("id_a", "id_b", "n_inter", "n_union")
-    )
+    return near_dup_pairs(table(spark, sf_dir, "documents"), "doc_id", "text", 0.8)
 
 
 @query(
@@ -1491,9 +1440,7 @@ def _incremental_minhash_oracle() -> str:
     probe, and the signature-component verify — built on the SAME
     `_sig_cte_prefix`/`_banded_sql` generators as `_minhash_oracle`,
     so a hash-family change can never diverge the two oracles."""
-    n_match = " + ".join(
-        f"CASE WHEN bs.mh{j} = cs.mh{j} THEN 1 ELSE 0 END" for j in range(len(_AB))
-    )
+    n_match = sig_agreement_sql("bs", "cs")
     return f"""
 WITH {_sig_cte_prefix()},
 csig AS (SELECT * FROM sig WHERE doc_id % 5 <> 0),
@@ -1544,19 +1491,18 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs = table(spark, sf_dir, "documents")
         corpus = docs.filter(F.col("doc_id") % 5 != 0)
         batch = docs.filter(F.col("doc_id") % 5 == 0)
-        fam = _hash_family()  # resolved once per plan (advisor r5)
         # materialize the store: 96-byte signature per corpus doc
-        minhash_signature(corpus, "doc_id", "text", fam).write.mode(
+        minhash_signature(corpus, "doc_id", "text").write.mode(
             "overwrite"
         ).parquet(store)
         csig = spark.read.parquet(store)
-        bsig = minhash_signature(batch, "doc_id", "text", fam).localCheckpoint(
+        bsig = minhash_signature(batch, "doc_id", "text").localCheckpoint(
             eager=True
         )
-        cband = banded_sig(csig, fam).select(
+        cband = banded_sig(csig).select(
             F.col("__id").alias("corpus_id"), "band", "band_hash"
         )
-        bband = banded_sig(bsig, fam).select(
+        bband = banded_sig(bsig).select(
             F.col("__id").alias("batch_id"), "band", "band_hash"
         )
         cand = (
@@ -1564,14 +1510,10 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("batch_id", "corpus_id")
             .distinct()
         )
-        n_match = sum(
-            F.when(F.col(f"b.mh{j}") == F.col(f"c.mh{j}"), 1).otherwise(0)
-            for j in range(len(_AB))
-        )
         out = (
             cand.join(bsig.alias("b"), F.col("batch_id") == F.col("b.__id"))
             .join(csig.alias("c"), F.col("corpus_id") == F.col("c.__id"))
-            .withColumn("n_match", n_match.cast("bigint"))
+            .withColumn("n_match", sig_agreement("b", "c").cast("bigint"))
             .filter(F.col("n_match") >= 8)
             .select("batch_id", "corpus_id", "n_match")
         )

@@ -1033,28 +1033,8 @@ SEMDEDUP_HOT_MIN = 64
 # exactly once, join keys grow k → k·B, and the per-partition hash
 # build shrinks B×. The cost is B× shuffle replication of the
 # exploded side's signature rows (~520 B each; documents never move
-# here), which is why it is a conf, not a constant: at production
-# scale k ∝ corpus already provides the parallelism and AQE's skew
-# split handles outliers, so a cluster deployment sets
-# spark.gmt_dbt.semdedup_blocks=1 and pays zero replication.
+# here).
 SEMDEDUP_BLOCKS = 8
-
-
-def _semdedup_blocks() -> int:
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        return SEMDEDUP_BLOCKS
-    try:
-        return max(
-            1,
-            int(
-                spark.conf.get(
-                    "spark.gmt_dbt.semdedup_blocks", str(SEMDEDUP_BLOCKS)
-                )
-            ),
-        )
-    except Exception:  # noqa: BLE001 — conf service unavailable
-        return SEMDEDUP_BLOCKS
 
 
 def _semdedup_oracle() -> str:
@@ -1205,7 +1185,7 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-buffering the 520-byte signature rows per pair). Every pair
     # still matches exactly ONCE (a explodes all blocks, b tags its
     # own), so the pair set — and the oracle surface — is unchanged.
-    blocks = _semdedup_blocks()
+    blocks = SEMDEDUP_BLOCKS
     a = cold.select(
         "cluster",
         F.col("vec_id").alias("id_a"),

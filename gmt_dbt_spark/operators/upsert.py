@@ -26,7 +26,7 @@ import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gmt_dbt_spark.catalog import table
@@ -95,6 +95,15 @@ def final_load(
         merge_in_place(target_path, staged, keys)
 
 
+def _partition_in(partition_col: str, values: list) -> Column:
+    """Rows whose ``partition_col`` is one of ``values``, NULL
+    included: ``isin`` never selects NULL, so a NULL among the
+    values adds ``isNull()``."""
+    col = F.col(partition_col)
+    pred = col.isin([v for v in values if v is not None])
+    return pred | col.isNull() if None in values else pred
+
+
 def upsert_partitioned(
     spark: SparkSession,
     target_path: str,
@@ -111,7 +120,7 @@ def upsert_partitioned(
     scan is pruned to the staging batch's partition values first.
     """
     parts = [r[0] for r in staging.select(partition_col).distinct().collect()]
-    target = spark.read.parquet(target_path).filter(F.col(partition_col).isin(parts))
+    target = spark.read.parquet(target_path).filter(_partition_in(partition_col, parts))
     merged = merge_upsert(target, staging, keys)
     # dynamic as a per-write option: the session conf, and with it
     # every later full-refresh sink_overwrite, stays as it was
@@ -151,6 +160,10 @@ def merge_upsert_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return merge_upsert(target, staging, keys)
 
 
+# The directory value Spark writes a NULL partition under.
+_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
 def delete_keys_partitioned(
     spark: SparkSession,
     target_path: str,
@@ -172,25 +185,25 @@ def delete_keys_partitioned(
     target = spark.read.parquet(target_path)
     part = F.col(partition_col)
     # (typed value, its directory value — how Spark names the partition)
+    dir_value = F.coalesce(part.cast("string"), F.lit(_NULL_PARTITION))
     affected = (
         target.join(F.broadcast(keys_df), key, "left_semi")
-        .select(part, part.cast("string"))
+        .select(part, dir_value)
         .distinct()
         .collect()
     )
     if not affected:
         return
     kept, seen = checkpoint(  # sever lineage before overwrite
-        target.filter(part.isin([r[0] for r in affected])).join(
+        target.filter(_partition_in(partition_col, [r[0] for r in affected])).join(
             F.broadcast(keys_df), key, "left_anti"
         ),
-        covered=F.to_json(F.collect_set(part.cast("string"))),
+        covered=F.to_json(F.collect_set(dir_value)),
     )
     kept.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
         partition_col
     ).parquet(target_path)
-    # a NULL partition is never selected by isin, so it is never emptied
-    emptied = {r[1] for r in affected if r[1] is not None} - set(json.loads(seen.covered))
+    emptied = {r[1] for r in affected} - set(json.loads(seen.covered))
     escape = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
     for value in emptied:
         shutil.rmtree(os.path.join(target_path, f"{partition_col}={escape(value)}"))

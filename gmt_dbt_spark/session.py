@@ -195,10 +195,14 @@ def scoped_conf(spark, **kv):
                 spark.conf.set(k, v)
 
 
+# State partitions of a bounded streaming replay (see `replay_conf`).
+REPLAY_STATE_PARTITIONS = 8
+
+
 def replay_conf(spark):
     """Conf scope for the bounded micro-batch replay harnesses
-    (streaming/stateful.py): 8 state partitions instead of the
-    session's shuffle-partition count.
+    (streaming/stateful.py): REPLAY_STATE_PARTITIONS state partitions
+    instead of the session's shuffle-partition count.
 
     Every stateful streaming micro-batch pays a state-store
     open/commit per STATE PARTITION per batch, and the replays run
@@ -218,19 +222,11 @@ def replay_conf(spark):
     no-data batch is what applies the last watermark advance and
     flushes expired state/timers — a deployment that had disabled it
     globally would silently drop the flush, so the replay scope makes
-    the dependency explicit.
-
-    r11: the replay partition count is a CONF
-    (spark.gmt_dbt.replay_state_partitions, default 8) rather than a
-    literal — the deployment knob the docstring above describes is
-    now actually settable without editing code, in both directions
-    (a live deployment raises it; a bounded fixture replay can lower
-    it further)."""
-    n = spark.conf.get("spark.gmt_dbt.replay_state_partitions", "8")
+    the dependency explicit."""
     return scoped_conf(
         spark,
         **{
-            "spark.sql.shuffle.partitions": str(int(n)),
+            "spark.sql.shuffle.partitions": str(REPLAY_STATE_PARTITIONS),
             "spark.sql.streaming.noDataMicroBatches.enabled": "true",
         },
     )

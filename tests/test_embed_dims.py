@@ -8,9 +8,8 @@ The blocked self-join + unrolled-dot rewrite rests on two facts:
    the contract must be pinned, not assumed.
 2. Blocking never changes the pair set: with B blocks, side A
    explodes over all blocks and side B tags pmod(id, B), so each
-   (a, b) pair matches exactly once for ANY B. Pin blocks=1 (the
-   production cluster setting, zero replication) ≡ blocks=8 (the
-   local-parallelism default) on the full surface.
+   (a, b) pair matches exactly once for ANY B. Pin blocks=1 (zero
+   replication) ≡ blocks=8 (the default) on the full surface.
 """
 
 from __future__ import annotations
@@ -20,7 +19,6 @@ from pyspark.sql import functions as F
 
 from gmt_dbt_spark.operators.embeddings import EMBED_DIMS
 from gmt_dbt_spark.registry import all_queries
-from gmt_dbt_spark.session import scoped_conf
 
 SF_DIRS = [f"/root/testdata/sf{s}" for s in ("0.001", "0.01", "0.1")]
 
@@ -96,17 +94,19 @@ def test_assert_embed_dims_names_null_vector(spark):
         assert_embed_dims(df).collect()
 
 
-def test_semdedup_block_factor_invariant(spark):
+def test_semdedup_block_factor_invariant(spark, monkeypatch):
     """blocks=1 and blocks=8 produce the identical surface."""
+    from gmt_dbt_spark.operators import embeddings
+
     q = all_queries()["dedup_semdedup"]
     sf = "/root/testdata/sf0.01"
 
     def rows(blocks: int):
-        with scoped_conf(spark, **{"spark.gmt_dbt.semdedup_blocks": str(blocks)}):
-            # the sentinel row carries NULLs — sort None-safely
-            return sorted(
-                (tuple(r) for r in q(spark, sf).collect()),
-                key=lambda t: tuple((v is None, v) for v in t),
-            )
+        monkeypatch.setattr(embeddings, "SEMDEDUP_BLOCKS", blocks)
+        # the sentinel row carries NULLs — sort None-safely
+        return sorted(
+            (tuple(r) for r in q(spark, sf).collect()),
+            key=lambda t: tuple((v is None, v) for v in t),
+        )
 
     assert rows(1) == rows(8)

@@ -183,6 +183,37 @@ def test_delete_keys_erases_partition_left_empty(spark, tmp_path, part_type):
     assert sorted(n for n in os.listdir(path) if n.startswith("p=")) == [f"p={p2}"]
 
 
+@pytest.mark.parametrize("doomed_ids, left", [([1], [2, 3]), ([1, 2], [3])])
+def test_delete_keys_reaches_null_partition(spark, tmp_path, doomed_ids, left):
+    """Doomed keys in the NULL partition are erased (``isin`` alone
+    never selects NULL), and a NULL partition left empty loses its
+    directory."""
+    from gmt_dbt_spark.operators.upsert import delete_keys_partitioned
+
+    path = str(tmp_path / "t")
+    spark.createDataFrame(
+        [(1, None), (2, None), (3, 5)], "id bigint, p bigint"
+    ).write.partitionBy("p").parquet(path)
+    doomed = spark.createDataFrame([(i,) for i in doomed_ids], "id bigint")
+    delete_keys_partitioned(spark, path, doomed, "id", "p")
+    assert sorted(r.id for r in spark.read.parquet(path).collect()) == left
+    dirs = sorted(n for n in os.listdir(path) if n.startswith("p="))
+    assert dirs == (["p=5"] if left == [3] else ["p=5", "p=__HIVE_DEFAULT_PARTITION__"])
+
+
+def test_upsert_partitioned_keeps_null_partition_rows(spark, tmp_path):
+    """A batch row in the NULL partition merges with that partition's
+    target rows instead of overwriting them."""
+    path = str(tmp_path / "t")
+    spark.createDataFrame(
+        [(1, "a", None), (2, "b", None), (3, "c", 5)], "id bigint, val string, p bigint"
+    ).write.partitionBy("p").parquet(path)
+    batch = spark.createDataFrame([(1, "A", None)], "id bigint, val string, p bigint")
+    upsert_partitioned(spark, path, batch, ["id"], "p")
+    got = sorted((r.id, r.val) for r in spark.read.parquet(path).collect())
+    assert got == [(1, "A"), (2, "b"), (3, "c")]
+
+
 def test_evolve_adds_staging_column_null_backfilled(spark, target, staging):
     """A column the producer STARTED sending is added to the target
     with NULLs on every kept row; merged-in rows carry its values."""

@@ -1,6 +1,7 @@
 """The vector-arithmetic kit (`operators/vectors.py`) against plain
 Python references, and the source gate that keeps the embedding
-operators building their folds through it."""
+operators building their folds through it, plus the gate that keeps
+one MinHash-LSH path in `operators/dedup.py`."""
 
 from __future__ import annotations
 
@@ -119,4 +120,43 @@ def test_vector_folds_live_in_one_module():
         with open(os.path.join(PACKAGE, "operators", name)) as f:
             text = f.read()
         offenders += [f"{name} has {rule}" for rule in rules if rule in text]
+    assert not offenders, offenders
+
+
+def test_one_minhash_path():
+    """Source-level gate: the MinHash-LSH algebra has one hash (md5)
+    and no settable switch, and the band self-join and the signature
+    agreement sum are spelled out only in dedup.py."""
+    import inspect
+
+    from gmt_dbt_spark.operators import dedup
+
+    offenders = []
+    for root, _, files in os.walk(PACKAGE):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            with open(path) as f:
+                text = f.read()
+            rel = os.path.relpath(path, PACKAGE)
+            if "spark.gmt_dbt." in text:
+                offenders.append(f"{rel} reads a spark.gmt_dbt. conf")
+            if rel != os.path.join("operators", "dedup.py"):
+                offenders += [
+                    f"{rel} has {rule}" for rule in ("l.band_hash", "mh{j}") if rule in text
+                ]
+    with open(os.path.join(PACKAGE, "operators", "dedup.py")) as f:
+        text = f.read()
+    offenders += [f"dedup.py has {rule}" for rule in ("_hash_family", "xxhash64") if rule in text]
+    for fn in (
+        dedup.shingle_hash,
+        dedup.minhash_signature,
+        dedup.sig_from_rows,
+        dedup.banded_sig,
+        dedup.lsh_candidates,
+        dedup.lsh_candidate_ids,
+    ):
+        if "family" in inspect.signature(fn).parameters:
+            offenders.append(f"{fn.__name__} takes a family")
     assert not offenders, offenders
