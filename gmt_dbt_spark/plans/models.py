@@ -47,6 +47,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from gmt_dbt_spark.session import inherit_local_properties
+
 _CONFIG_RE = re.compile(r"\{\{\s*config\s*\(([^)]*)\)\s*\}\}")
 _SOURCE_RE = re.compile(r"\{\{\s*source\s*\(\s*'([^']+)'\s*,\s*'([^']+)'\s*\)\s*\}\}")
 _REF_RE = re.compile(r"\{\{\s*ref\s*\(\s*'([^']+)'\s*\)\s*\}\}")
@@ -253,7 +255,9 @@ class ModelProject:
 
     ``run()`` executes every model in dependency order with
     ``threads`` concurrent workers (reference: `profile.yml:9`,
-    threads: 4) and returns {model name → result DataFrame}.
+    threads: 4), each under the caller's Spark local properties (job
+    group, description, scheduler pool), and returns {model name →
+    result DataFrame}.
     """
 
     def __init__(
@@ -540,9 +544,10 @@ class ModelProject:
                     chosen |= self._ancestors(n)
             models = {k: v for k, v in self.models.items() if k in chosen}
         results: dict[str, DataFrame] = {}
+        materialize = inherit_local_properties(self.spark, self._materialize)
         with ThreadPoolExecutor(max_workers=self.threads) as pool:
             for level in _toposort_levels(models, assume_done):
-                futures = {m.name: pool.submit(self._materialize, m) for m in level}
+                futures = {m.name: pool.submit(materialize, m) for m in level}
                 for name, fut in futures.items():
                     results[name] = fut.result()
         return results

@@ -76,6 +76,24 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def inherit_local_properties(spark: SparkSession, fn):
+    """``fn`` wrapped to run under the calling thread's Spark local
+    properties (job group, job description, scheduler pool), read
+    now, for submission to a thread pool. A pool thread starts with
+    none of them, so its jobs would escape the caller's group
+    (``cancelJobGroup``, per-group profiles). Each call installs its
+    own clone, as ``pyspark.InheritableThread`` does: concurrent SQL
+    executions write their execution id into that object."""
+    sc = spark.sparkContext._jsc.sc()
+    props = sc.getLocalProperties()
+
+    def run(*args, **kwargs):
+        sc.setLocalProperties(props.clone())
+        return fn(*args, **kwargs)
+
+    return run
+
+
 def schema_memo(spark: SparkSession) -> dict:
     """The tuned session's schema memo: file fingerprint → StructType,
     filled and read by `catalog.table`."""

@@ -12,11 +12,16 @@ from __future__ import annotations
 
 import json
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from gmt_dbt_spark.session import tune
+from gmt_dbt_spark.session import inherit_local_properties, tune
+
+# Files `ingest_directory` loads at once: the reference's upload
+# semaphore (`main.py:166-167`).
+INGEST_CONCURRENCY = 6
 
 
 def find_files(root: str, suffix: str) -> list[str]:
@@ -134,19 +139,44 @@ def ingest_directory(spark: SparkSession, src_dir: str, warehouse_dir: str) -> i
     (metadata-only — the reference rewrites file bytes,
     `main.py:240-245`; we rename columns in the projection), and
     write a parquet staging table per file under ``warehouse_dir``.
-    Upload concurrency/retry/timeout (`main.py:94-188`) collapse
-    into Spark's distributed write + task retry. Returns the number
-    of tables written."""
+    Returns the number of tables written.
+
+    Files load concurrently, at most ``INGEST_CONCURRENCY`` at once,
+    as the reference's semaphore-bounded uploads do
+    (`main.py:166-167`); each pool worker runs its file's scan and
+    write jobs under the caller's local properties. Upload
+    retry/timeout (`main.py:94-188`) collapse into Spark's task
+    retry. Two files whose sanitized table names collide raise
+    ``ValueError`` before anything is written. A failing file's
+    exception carries its path as a note; the first failure in
+    discovery order is raised once every worker has finished."""
     from gmt_dbt_spark.sources.sanitize import sanitize_columns, sanitize_table_name
 
-    n = 0
     json_files = sorted(
         set(find_files(src_dir, ".json")) | set(find_files(src_dir, ".ndjson"))
     )
+    tables: dict[str, str] = {}
     for path in json_files + find_files(src_dir, ".csv"):
-        df = scan_csv(spark, path) if path.endswith(".csv") else scan_json(spark, path)
         name = sanitize_table_name(os.path.splitext(os.path.basename(path))[0])
-        out = os.path.join(warehouse_dir, name)
-        sanitize_columns(df).write.mode("overwrite").parquet(out)
-        n += 1
-    return n
+        if name in tables:
+            raise ValueError(
+                f"{tables[name]!r} and {path!r} both sanitize to table {name!r}"
+            )
+        tables[name] = path
+
+    def load(name: str, path: str) -> None:
+        try:
+            df = scan_csv(spark, path) if path.endswith(".csv") else scan_json(spark, path)
+            out = os.path.join(warehouse_dir, name)
+            sanitize_columns(df).write.mode("overwrite").parquet(out)
+        except Exception as e:
+            e.add_note(f"while ingesting {path}")
+            raise
+
+    tune(spark)  # once, before the workers: they never race on conf writes
+    worker = inherit_local_properties(spark, load)
+    with ThreadPoolExecutor(max_workers=INGEST_CONCURRENCY) as pool:
+        futures = [pool.submit(worker, name, path) for name, path in tables.items()]
+    for fut in futures:
+        fut.result()
+    return len(tables)

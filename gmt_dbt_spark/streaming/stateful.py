@@ -528,6 +528,24 @@ def stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(final, STATE_OUT_SCHEMA)
 
 
+def upsert_batch(target_path: str, keys: list[str]):
+    """The ``foreachBatch`` function that MERGEs each micro-batch into
+    the parquet table at ``target_path`` (`merge_in_place`). The batch
+    is persisted for the merge and released after it: `merge_upsert`
+    reads it twice (the anti-join's broadcast side and the union
+    side), and each read of an unpersisted batch reruns the epoch's
+    whole plan, state-store stage included."""
+
+    def run(batch: DataFrame, _epoch: int) -> None:
+        batch.persist()
+        try:
+            merge_in_place(target_path, batch, keys)
+        finally:
+            batch.unpersist()
+
+    return run
+
+
 @query(
     "stream_upsert_sink",
     oracle="""
@@ -572,10 +590,7 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("ts").alias("last_seen"), dsum("value").alias("total")
         )
 
-        def upsert_batch(batch: DataFrame, _epoch: int) -> None:
-            merge_in_place(target_path, batch, ["user_id"])
-
-        run_replay(agg, ckpt, mode="complete", foreach=upsert_batch)
+        run_replay(agg, ckpt, mode="complete", foreach=upsert_batch(target_path, ["user_id"]))
         final = spark.read.parquet(target_path)
         final = final.localCheckpoint(eager=True)  # detach from path, executor-side
         return final

@@ -163,3 +163,108 @@ def test_cli_ingest_then_run_compose(spark, tmp_path):
     assert main(["run", str(mdir), wh]) == 0
     out = spark.read.parquet(str(tmp_path / "wh" / "tip_counts"))
     assert out.count() > 0
+
+
+def test_ingest_directory_matches_sequential(spark, tmp_path, monkeypatch):
+    """Concurrent ingest writes the same tables as one-at-a-time
+    ingest: same names, schemas and row multisets."""
+    from gmt_dbt_spark.sources import readers
+
+    conc = str(tmp_path / "concurrent")
+    seq = str(tmp_path / "sequential")
+    n = readers.ingest_directory(spark, FIXTURES, conc)
+    monkeypatch.setattr(readers, "INGEST_CONCURRENCY", 1)
+    assert readers.ingest_directory(spark, FIXTURES, seq) == n
+    names = sorted(os.listdir(seq))
+    assert len(names) == n and sorted(os.listdir(conc)) == names
+    for name in names:
+        a = spark.read.parquet(os.path.join(conc, name))
+        b = spark.read.parquet(os.path.join(seq, name))
+        assert a.schema == b.schema, name
+        assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty(), name
+
+
+def test_ingest_directory_rejects_table_name_collision(spark, tmp_path):
+    """Two files that sanitize to one table name would overwrite each
+    other; the collision is refused, naming both files, before any
+    table is written."""
+    import pytest
+
+    from gmt_dbt_spark.sources.readers import ingest_directory
+
+    src = tmp_path / "src"
+    (src / "a").mkdir(parents=True)
+    (src / "b").mkdir()
+    (src / "a" / "x.json").write_text('{"k": 1}\n')
+    (src / "b" / "x.csv").write_text("k\n2\n")
+    (src / "y.json").write_text('{"k": 3}\n')
+    wh = tmp_path / "wh"
+    with pytest.raises(ValueError) as err:
+        ingest_directory(spark, str(src), str(wh))
+    assert str(src / "a" / "x.json") in str(err.value)
+    assert str(src / "b" / "x.csv") in str(err.value)
+    assert not wh.exists()
+
+
+def test_ingest_directory_failure_names_its_file(spark, tmp_path):
+    """An empty file fails with Spark's own exception plus a note
+    naming its path; the first failure in discovery order is raised,
+    after the other files have been written."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from gmt_dbt_spark.sources.readers import ingest_directory
+
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "a_blank.ndjson").write_text("")
+    (src / "b_blank.ndjson").write_text("")
+    (src / "c_good.ndjson").write_text('{"k": 1}\n{"k": 2}\n')
+    wh = tmp_path / "wh"
+    with pytest.raises(AnalysisException) as err:
+        ingest_directory(spark, str(src), str(wh))
+    assert "EMPTY_SCHEMA" in str(err.value)
+    assert err.value.__notes__ == [f"while ingesting {src / 'a_blank.ndjson'}"]
+    assert spark.read.parquet(str(wh / "c_good")).count() == 2
+
+
+def test_pool_jobs_stay_in_callers_job_group(spark, tmp_path):
+    """Jobs run by the ingest and model worker pools belong to the job
+    group the caller set, so ``cancelJobGroup`` reaches them."""
+    from gmt_dbt_spark.plans.models import Model, ModelProject
+    from gmt_dbt_spark.sources.readers import ingest_directory
+
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "t1.ndjson").write_text('{"k": 1}\n{"k": 2}\n')
+    (src / "t2.csv").write_text("k,v\n1,a\n2,b\n")
+    wh = str(tmp_path / "wh")
+    sc = spark.sparkContext
+    dag = sc._jsc.sc().dagScheduler()
+
+    def jobs_in_group(group: str, run) -> tuple[int, int]:
+        sc.setJobGroup(group, group)
+        try:
+            j0 = dag.nextJobId()
+            run()
+            submitted = dag.nextJobId() - j0
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group)), submitted
+
+    grouped, submitted = jobs_in_group(
+        f"ingest_{tmp_path.name}", lambda: ingest_directory(spark, str(src), wh)
+    )
+    assert submitted > 0 and grouped == submitted
+
+    spark.read.parquet(os.path.join(wh, "t1")).createOrReplaceTempView("grp_src_t1")
+    project = ModelProject(
+        spark,
+        [Model("grp_m", "{{ config(materialized='table') }}\n"
+                        "SELECT k FROM {{ source('s', 't1') }}")],
+        {("s", "t1"): "grp_src_t1"},
+        warehouse_dir=str(tmp_path / "models"),
+    )
+    grouped, submitted = jobs_in_group(f"models_{tmp_path.name}", project.run)
+    assert submitted > 0 and grouped == submitted

@@ -489,3 +489,48 @@ def test_final_update_readback_bound_and_reduction(spark, monkeypatch):
     with _pytest.raises(RuntimeError, match="replay-harness bound"):
         st._final_update_per_user(spark, "readback_t", "last_us")
     spark.catalog.dropTempView("readback_t")
+
+
+def test_upsert_batch_evaluates_each_micro_batch_once(spark, tmp_path):
+    """`upsert_batch` (the `stream_upsert_sink` foreachBatch function)
+    computes each micro-batch once: a post-aggregate projection that
+    counts its evaluations runs once per output row per epoch, although
+    the MERGE reads the batch on both sides of its union."""
+    from gmt_dbt_spark.streaming.stateful import run_replay, upsert_batch
+
+    src = tmp_path / "src"
+    src.mkdir()
+    for name in ("a", "b"):
+        (src / f"{name}.json").write_text(
+            "".join(json.dumps({"k": k, "v": 1.0}) + "\n" for k in (1, 2, 3))
+        )
+    target = str(tmp_path / "target")
+    spark.createDataFrame([(k, 0.0) for k in (1, 2, 3)], "k long, total double") \
+        .write.parquet(target)
+
+    evaluations = spark.sparkContext.accumulator(0)
+
+    def tick(x):
+        evaluations.add(1)
+        return x
+
+    agg = (
+        spark.readStream.schema("k long, v double")
+        .option("maxFilesPerTrigger", 1)
+        .json(str(src))
+        .groupBy("k")
+        .agg(F.sum("v").alias("total"))
+        .withColumn("total", F.udf(tick, "double")("total"))
+    )
+    merge = upsert_batch(target, ["k"])
+    epochs = []
+
+    def counted(batch, epoch):
+        epochs.append(epoch)
+        merge(batch, epoch)
+
+    run_replay(agg, str(tmp_path / "ckpt"), mode="complete", foreach=counted)
+    assert len(epochs) == 2
+    assert evaluations.value == 3 * len(epochs)
+    got = sorted((r.k, r.total) for r in spark.read.parquet(target).collect())
+    assert got == [(1, 2.0), (2, 2.0), (3, 2.0)]
