@@ -8,19 +8,16 @@ collapse to one kept document. Connected components over the pair
 graph is the standard formulation (the reference has no such operator
 — pure [ext] per BASELINE.json's dedup north star).
 
-Scale design: edges are generated as per-key STARS (min-id hub → each
-member), linear in group size rather than quadratic cliques; the
-component labels converge by iterative min-label propagation over
-shuffled equi-joins — O(diameter) rounds, each a key-partitioned
-join, with `localCheckpoint` truncating the growing lineage (the
-classic Spark iterative-algorithm pitfall). The convergence test rides
-that checkpoint job (`session.checkpoint` observes the count of
-lowered labels, or the star loop's edge count), so a round launches no
-separate job to decide whether to stop. At 100 TB the same loop
-holds because state per round is |V| labels + |E| edges, both
-key-partitioned; for pathological diameters switch to the
-large-star/small-star algorithm (Kiveris et al., "Connected
-Components in MapReduce and Beyond", SoCC'14) — same join primitives.
+Scale design: component labels converge by min-label propagation
+over the near-dup KEY GROUPS themselves, with no edge list: a round
+is one window shuffle on the key (the group's min label) plus one
+aggregate on the id (the min over its groups) — O(diameter) rounds,
+each checkpointed to truncate the lineage, the convergence count
+observed in that same job (`session.checkpoint`). State per round is
+one row per (id, key) membership; a hot key is one skewed window
+partition, as the star window of `_star_edges` is. For pathological
+diameters switch to the large-star/small-star algorithm (Kiveris et
+al., "Connected Components in MapReduce and Beyond", SoCC'14).
 
 The interval join turns an O(|L|·|R|) nested-loop time-range join
 into an equi-join on (key, time-bin) with bin width = window length:
@@ -47,47 +44,48 @@ CC_MAX_ITER = 25
 STAR_MAX_ROUNDS = 50
 
 
+def group_components(members: DataFrame) -> DataFrame:
+    """Min-label propagation over rows (id, groups), ``groups`` an array
+    of keys: ids sharing a non-null key are connected. Returns (id,
+    comp), comp = the smallest reachable id. A round explodes the keys,
+    takes the min label over a window on each key (a NULL key windows
+    on its own id: it groups nothing), then groups by id, collecting
+    the keys back. Labels start at the id, so round 1 reads
+    ``members`` directly. The round's checkpoint counts the labels it
+    lowered; the loop stops on a round lowering none and raises with
+    the counts past CC_MAX_ITER (then use `connected_components_star`)."""
+    cur = members.select("id", F.col("id").alias("comp"), "groups")
+    w = Window.partitionBy("g", F.when(F.col("g").isNull(), F.col("id")))
+    lowered = []
+    for _ in range(CC_MAX_ITER):
+        # `prev` keeps the round's input label so the checkpoint job
+        # itself can count the labels this round lowered
+        cur, obs = checkpoint(
+            cur.select("id", "comp", F.explode_outer("groups").alias("g"))
+            .withColumn("m", F.min("comp").over(w))
+            .groupBy("id")
+            .agg(F.min("m").alias("comp"), F.min("comp").alias("prev"),
+                 F.collect_list("g").alias("groups")),
+            changed=F.count_if(F.col("comp") < F.col("prev")),
+        )
+        lowered.append(obs.changed)
+        if obs.changed == 0:
+            return cur.select("id", "comp")
+    raise RuntimeError(f"connected_components did not converge in {CC_MAX_ITER} rounds "
+                       f"(labels lowered per round: {lowered})")
+
+
 def connected_components(
     nodes: DataFrame, edges: DataFrame, id_col: str = "id"
 ) -> DataFrame:
-    """Min-label propagation over undirected (src, dst) edges: every
-    node's component label converges to the smallest node id
-    reachable from it. Returns (id, comp).
-
-    Each round: one equi-join (neighbor labels) + one aggregation
-    (min per node) + one left join (label update) — all shuffles on
-    the node id, so a cluster co-partitions them. The round's
-    checkpoint job also counts the labels it lowered, and the loop
-    exits on a round that lowers none; raises if CC_MAX_ITER rounds
-    don't converge (diameter > CC_MAX_ITER ⇒ use
-    `connected_components_star` instead).
-    """
-    sym = edges.select("src", "dst").union(edges.select("dst", "src"))
-    sym = sym.filter(F.col("src") != F.col("dst")).distinct().localCheckpoint(eager=True)
-
-    labels = nodes.select(F.col(id_col).alias("id"), F.col(id_col).alias("comp"))
-    labels = labels.localCheckpoint(eager=True)
-    for _ in range(CC_MAX_ITER):
-        nbr = (
-            sym.join(labels, sym["dst"] == labels["id"])
-            .groupBy("src")
-            .agg(F.min("comp").alias("nbr_comp"))
-        )
-        # `prev` keeps the round's input label so the checkpoint job
-        # itself can count the labels this round lowered
-        labels, obs = checkpoint(
-            labels.join(nbr, labels["id"] == nbr["src"], "left").select(
-                labels["id"],
-                F.least(
-                    labels["comp"], F.coalesce(nbr["nbr_comp"], labels["comp"])
-                ).alias("comp"),
-                labels["comp"].alias("prev"),
-            ),
-            changed=F.count_if(F.col("comp") < F.col("prev")),
-        )
-        if obs.changed == 0:
-            return labels.select("id", "comp")
-    raise RuntimeError(f"connected_components did not converge in {CC_MAX_ITER} rounds")
+    """`group_components` over undirected (src, dst) edges: each edge
+    is a 2-member group keyed by (least, greatest), self-loops
+    dropped; a node on no edge is a singleton. Returns (id, comp)."""
+    e = edges.filter(F.col("src") != F.col("dst"))
+    key = F.struct(F.least("src", "dst"), F.greatest("src", "dst")).alias("g")
+    ends = e.select(F.explode(F.array("src", "dst")).alias("id"), key)
+    groups = ends.groupBy("id").agg(F.collect_list("g").alias("groups"))
+    return group_components(nodes.select(F.col(id_col).alias("id")).join(groups, "id", "left"))
 
 
 def connected_components_star(
@@ -182,12 +180,13 @@ def connected_components_star(
     )
 
 
-def _window_key(text_col, start: int, length: int):
-    """md5 over a token window — the cheap deterministic near-dup key
-    (two staggered windows so prefix-sharing docs chain across keys)."""
-    return F.md5(
-        F.concat_ws(" ", F.slice(F.split(text_col, " "), start, length))
-    )
+def _window_key(start: int):
+    """md5 over the 5-token window at ``start`` — the cheap near-dup key
+    (two staggered windows so prefix-sharing docs chain across keys),
+    tagged with ``start`` so it groups only docs sharing it in the SAME
+    window. NULL for an empty window (short or NULL text): no evidence."""
+    win = F.slice(F.split(F.col("text"), " "), start, 5)
+    return F.when(F.size(win) > 0, F.concat(F.lit(f"{start}:"), F.md5(F.concat_ws(" ", win))))
 
 
 def _star_edges(keyed: DataFrame) -> DataFrame:
@@ -197,7 +196,8 @@ def _star_edges(keyed: DataFrame) -> DataFrame:
     collects thousands of near-identical documents."""
     w = Window.partitionBy("k")
     return (
-        keyed.withColumn("src", F.min("doc_id").over(w))
+        keyed.filter(F.col("k").isNotNull())
+        .withColumn("src", F.min("doc_id").over(w))
         .filter(F.col("src") != F.col("doc_id"))
         .select("src", F.col("doc_id").alias("dst"))
     )
@@ -205,15 +205,15 @@ def _star_edges(keyed: DataFrame) -> DataFrame:
 
 # Shared by dedup_clusters AND dedup_clusters_star: the two queries
 # must stay label-identical (unit-test-pinned), so they verify against
-# the SAME recursive transitive-closure CTE and build the SAME edges.
+# the SAME recursive transitive-closure CTE over the SAME keys.
 _CLUSTERS_ORACLE = """
 WITH RECURSIVE
-k1 AS (SELECT doc_id, md5(array_to_string(string_split(text,' ')[1:5],' ')) AS k
-       FROM documents),
-k2 AS (SELECT doc_id, md5(array_to_string(string_split(text,' ')[6:10],' ')) AS k
-       FROM documents),
-e1 AS (SELECT MIN(doc_id) OVER (PARTITION BY k) AS src, doc_id AS dst FROM k1),
-e2 AS (SELECT MIN(doc_id) OVER (PARTITION BY k) AS src, doc_id AS dst FROM k2),
+w1 AS (SELECT doc_id, string_split(text,' ')[1:5] AS w FROM documents),
+w2 AS (SELECT doc_id, string_split(text,' ')[6:10] AS w FROM documents),
+e1 AS (SELECT MIN(doc_id) OVER (PARTITION BY md5(array_to_string(w,' '))) AS src,
+              doc_id AS dst FROM w1 WHERE len(w) > 0),
+e2 AS (SELECT MIN(doc_id) OVER (PARTITION BY md5(array_to_string(w,' '))) AS src,
+              doc_id AS dst FROM w2 WHERE len(w) > 0),
 edges AS (SELECT src, dst FROM e1 WHERE src <> dst
           UNION SELECT src, dst FROM e2 WHERE src <> dst),
 sym AS (SELECT src, dst FROM edges UNION SELECT dst, src FROM edges),
@@ -227,39 +227,36 @@ SELECT id AS doc_id, MIN(comp) AS cluster_id FROM reach GROUP BY id
 
 
 def _cluster_edges(docs: DataFrame) -> DataFrame:
-    k1 = docs.select("doc_id", _window_key(F.col("text"), 1, 5).alias("k"))
-    k2 = docs.select("doc_id", _window_key(F.col("text"), 6, 5).alias("k"))
+    k1, k2 = (docs.select("doc_id", _window_key(s).alias("k")) for s in (1, 6))
     return _star_edges(k1).union(_star_edges(k2)).distinct()
 
 
 @query("dedup_clusters", oracle=_CLUSTERS_ORACLE)
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dedup CLUSTER assignment: candidate pairs from two staggered
-    5-token-window keys (star edges per key group), connected
-    components over their union, every document labeled with its
-    component's min doc_id (singletons label themselves). The oracle
-    recomputes the same components via a recursive transitive-closure
-    CTE — proving the iterative Spark loop equals the declarative
+    """Dedup CLUSTER assignment: documents sharing either of two
+    staggered 5-token-window keys are connected, and every document
+    is labeled with its component's min doc_id (singletons label
+    themselves). Labels spread through the key groups directly
+    (`group_components`), with no edge list. The oracle recomputes
+    the same components via a recursive transitive-closure CTE —
+    proving the iterative Spark loop equals the declarative
     fixpoint."""
-    docs = table(spark, sf_dir, "documents")
-    labels = connected_components(
-        docs.select("doc_id"), _cluster_edges(docs), id_col="doc_id"
-    )
+    groups = F.array(_window_key(1), _window_key(6)).alias("groups")
+    docs = table(spark, sf_dir, "documents").select(F.col("doc_id").alias("id"), groups)
+    labels = group_components(docs)
     return labels.select(F.col("id").alias("doc_id"), F.col("comp").alias("cluster_id"))
 
 
 @query("dedup_clusters_star", oracle=_CLUSTERS_ORACLE)
 def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`dedup_clusters` computed by the LARGE-STAR/SMALL-STAR
-    contraction (`connected_components_star`) instead of min-label
-    propagation — the algorithm to reach for when the pair graph has
+    contraction (`connected_components_star`) over star edges per key
+    group — the algorithm to reach for when the pair graph has
     pathological diameter (propagation is O(diameter) rounds; star
     contraction is O(log² n) rounds regardless, Kiveris et al.
-    SoCC'14). Same candidate edges, same recursive-CTE oracle, and a
-    unit test pins the two algorithms label-identical on the fixture
-    plus a 60-node chain the propagation loop refuses (r2 VERDICT
-    optional item: graph.py's max_iter raise is no longer a dead
-    end)."""
+    SoCC'14). Same keys, same recursive-CTE oracle, and unit tests
+    pin the two algorithms label-identical on the fixture plus a
+    60-node chain the propagation loop refuses."""
     docs = table(spark, sf_dir, "documents")
     labels = connected_components_star(
         docs.select("doc_id"), _cluster_edges(docs), id_col="doc_id"
@@ -292,7 +289,7 @@ def pipeline_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     turns a component labeling into an actual keep/drop decision.
 
     Shape: cluster labels (min-label propagation over the staggered
-    window-key star edges — same plan as `dedup_clusters`) joined to a
+    window-key groups — same plan as `dedup_clusters`) joined to a
     per-doc quality scalar, then ONE per-cluster aggregate where the
     argmax rides a lexicographic struct-max (max(struct(n_chars,
     -doc_id))) — no window over the full corpus, deterministic ties,

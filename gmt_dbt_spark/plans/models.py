@@ -48,6 +48,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from gmt_dbt_spark.session import inherit_local_properties
+from gmt_dbt_spark.sources.sinks import read_written
 
 _CONFIG_RE = re.compile(r"\{\{\s*config\s*\(([^)]*)\)\s*\}\}")
 _SOURCE_RE = re.compile(r"\{\{\s*source\s*\(\s*'([^']+)'\s*,\s*'([^']+)'\s*\)\s*\}\}")
@@ -349,7 +350,7 @@ class ModelProject:
             self._enforce_contract(model, df)
             shutil.rmtree(path, ignore_errors=True)
             df.write.mode("overwrite").parquet(path)
-            df = self.spark.read.parquet(path)
+            df = read_written(self.spark, df, path)
             df.createOrReplaceTempView(model.name)
             return df
         if model.materialized == "incremental":
@@ -377,15 +378,16 @@ class ModelProject:
                         f"incremental model '{model.name}' needs unique_key"
                     )
                 merge_in_place(path, df, [key])
+                df = self.spark.read.parquet(path)
             else:
                 df.write.mode("overwrite").parquet(path)
-            df = self.spark.read.parquet(path)
+                df = read_written(self.spark, df, path)
         elif model.materialized == "table":
             df = self.spark.sql(sql)
             self._enforce_contract(model, df)
             shutil.rmtree(path, ignore_errors=True)
             df.write.mode("overwrite").parquet(path)
-            df = self.spark.read.parquet(path)
+            df = read_written(self.spark, df, path)
         elif model.materialized == "view":
             df = self.spark.sql(sql)
             self._enforce_contract(model, df)

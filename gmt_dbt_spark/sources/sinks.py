@@ -30,11 +30,18 @@ def sink_overwrite(
     w.parquet(path)
 
 
+def read_written(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
+    """Scan of the parquet table ``df`` was just written to at ``path``,
+    read with ``df``'s own schema: inferring it from the files' footers
+    would run a job to learn what the caller already knows."""
+    return spark.read.schema(df.schema).parquet(path)
+
+
 def sink_ctas(spark: SparkSession, select_df: DataFrame, path: str) -> DataFrame:
     """CREATE TABLE AS SELECT: materialize a query result as a new
     table and return the scan of the materialized copy."""
     select_df.write.mode("errorifexists").parquet(path)
-    return spark.read.parquet(path)
+    return read_written(spark, select_df, path)
 
 
 class StagingTable:
@@ -47,7 +54,7 @@ class StagingTable:
 
     def __enter__(self) -> DataFrame:
         self.df.write.mode("overwrite").parquet(self.path)
-        return self.spark.read.parquet(self.path)
+        return read_written(self.spark, self.df, self.path)
 
     def __exit__(self, *exc) -> None:
         shutil.rmtree(self.path, ignore_errors=True)

@@ -66,6 +66,7 @@ from gmt_dbt_spark.session import (
     scoped_conf,
     scratch_dir,
 )
+from gmt_dbt_spark.sources.sinks import read_written
 
 EVENT_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, event_type string, "
@@ -574,11 +575,12 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         # a key belong in a quarantine path, not the keyed target.
         ev = table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
         # Seed target: all users, empty aggregate state.
-        ev.select("user_id").distinct().select(
+        seed = ev.select("user_id").distinct().select(
             "user_id",
             F.lit(None).cast("timestamp").alias("last_seen"),
             F.lit(0.0).alias("total"),
-        ).write.parquet(target_path)
+        )
+        seed.write.parquet(target_path)
         # Source files: two replayed chunks (micro-batch fodder).
         # This caller authors a pre-filtered frame; the cache key
         # derives that from the analyzed plan (_frame_fingerprint),
@@ -591,9 +593,9 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
         run_replay(agg, ckpt, mode="complete", foreach=upsert_batch(target_path, ["user_id"]))
-        final = spark.read.parquet(target_path)
-        final = final.localCheckpoint(eager=True)  # detach from path, executor-side
-        return final
+        # every MERGE rewrites the target with the seed's columns; the
+        # checkpoint detaches the result from the path, executor-side
+        return read_written(spark, seed, target_path).localCheckpoint(eager=True)
 
 
 def tws_available() -> bool:

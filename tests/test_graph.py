@@ -4,6 +4,8 @@ the parametrized oracle test; here we pin transitivity and the plan.)"""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from gmt_dbt_spark.operators.graph import connected_components
@@ -134,6 +136,7 @@ def test_star_contraction_handles_high_diameter_chain(spark):
     import pytest as _pytest
 
     from gmt_dbt_spark.operators.graph import (
+        CC_MAX_ITER,
         connected_components,
         connected_components_star,
     )
@@ -143,10 +146,57 @@ def test_star_contraction_handles_high_diameter_chain(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "src bigint, dst bigint"
     )
-    with _pytest.raises(RuntimeError, match="did not converge"):
+    with _pytest.raises(RuntimeError, match="did not converge") as err:
         connected_components(nodes, chain)
+    # round r lowers the labels of nodes r..59: the error lists them
+    lowered = ", ".join(str(n - 1 - r) for r in range(CC_MAX_ITER))
+    assert f"labels lowered per round: [{lowered}]" in str(err.value)
     got = {r.id: r.comp for r in connected_components_star(nodes, chain).collect()}
     assert got == {i: 0 for i in range(n)}
+
+
+def test_group_components_match_union_find_on_random_hypergraphs(spark):
+    """Propagation over group memberships must agree with sequential
+    union-find, where a group of q members is q−1 edges (seeded; group
+    sizes 1–5, NULL keys, NULL and empty key arrays, singletons)."""
+    import random
+
+    from gmt_dbt_spark.operators.graph import group_components
+
+    rng = random.Random(20261020)
+    for trial in range(4):
+        n = rng.randint(2, 40)
+        groups = [rng.sample(range(n), rng.randint(1, min(5, n)))
+                  for _ in range(rng.randint(0, 15))]
+        keys: dict[int, list] = {i: [] for i in range(n)}
+        for g, members in enumerate(groups):
+            for i in members:
+                keys[i].append(f"g{g}")
+        rows = []
+        for i, ks in keys.items():
+            roll = rng.random()
+            if not ks and roll < 0.3:
+                rows.append((i, None))
+            else:
+                rows.append((i, ks + [None] * (roll < 0.5)))
+        expect = _union_find_components(
+            n, [(m[0], x) for m in groups for x in m[1:]]
+        )
+        members = spark.createDataFrame(rows, "id bigint, groups array<string>")
+        got = {r.id: r.comp for r in group_components(members).collect()}
+        assert got == expect, f"trial {trial}: n={n} groups={groups}"
+
+
+def test_dedup_clusters_build_jobs(spark):
+    """dedup_clusters spreads labels through its key groups: on the
+    sf0.01 fixture it builds in two rounds of 3 jobs, with no edge
+    list and no identity-label checkpoint."""
+    sf = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+    q = all_queries()["dedup_clusters"]
+    q(spark, sf)  # a session's first scan of a file infers its schema
+    j0 = _jobs(spark)
+    q(spark, sf)
+    assert _jobs(spark) - j0 <= 6
 
 
 def test_dedup_clusters_star_equals_propagation(spark):
@@ -222,9 +272,10 @@ def test_checkpoint_metrics_cost_no_extra_job(spark):
 
 
 def test_components_jobs_per_round(spark):
-    """Each extra propagation round costs at most 7 jobs (the round's
-    shuffles plus its observed checkpoint — no separate convergence
-    job): a 12-node chain needs 6 rounds more than a 6-node chain."""
+    """Each extra propagation round costs at most 3 jobs (the key
+    window's shuffle, the id aggregate's shuffle and the observed
+    checkpoint — no separate convergence job): a 12-node chain needs
+    6 rounds more than a 6-node chain."""
 
     def run(n: int) -> int:
         nodes = spark.createDataFrame([(i,) for i in range(n)], "id bigint")
@@ -236,4 +287,4 @@ def test_components_jobs_per_round(spark):
         assert got == {i: 0 for i in range(n)}
         return _jobs(spark) - j0
 
-    assert run(12) - run(6) <= 42
+    assert run(12) - run(6) <= 18

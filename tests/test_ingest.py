@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gmt_dbt_spark.sources.readers import (
@@ -268,3 +269,58 @@ def test_pool_jobs_stay_in_callers_job_group(spark, tmp_path):
     )
     grouped, submitted = jobs_in_group(f"models_{tmp_path.name}", project.run)
     assert submitted > 0 and grouped == submitted
+
+
+def _rb_python_model(dbt, session):
+    return dbt.source("rb", "src").selectExpr("id", "array(id) AS ids")
+
+
+def test_read_back_takes_the_written_schema(spark, tmp_path, monkeypatch):
+    """Every read-back of freshly written parquet (sink_ctas,
+    StagingTable, the python/incremental/table model materializations
+    and stream_upsert_sink's target) reads with the written frame's
+    schema: the schema inference would find, and no job to find it."""
+    from gmt_dbt_spark.plans import models
+    from gmt_dbt_spark.plans.models import Model, ModelProject
+    from gmt_dbt_spark.registry import all_queries
+    from gmt_dbt_spark.sources import sinks
+    from gmt_dbt_spark.streaming import stateful
+    from tests.conftest import SF_DIR
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    read_written = sinks.read_written
+    seen = []
+
+    def spy(spark_, df, path):
+        j0 = dag.nextJobId()
+        out = read_written(spark_, df, path)
+        seen.append((out.schema, dag.nextJobId() - j0, spark_.read.parquet(path).schema))
+        return out
+
+    for mod in (sinks, models, stateful):
+        monkeypatch.setattr(mod, "read_written", spy)
+
+    src = spark.createDataFrame(
+        [(1, "a", 2.5), (2, None, None)], "id bigint, v string, x double"
+    ).withColumn("ts", F.current_timestamp())
+    sink_ctas(spark, src, str(tmp_path / "ctas"))
+    with StagingTable(spark, spark.range(3), str(tmp_path / "stage")):
+        pass
+    src.createOrReplaceTempView("rb_src")
+    ModelProject(
+        spark,
+        [
+            Model("rb_py", python_fn=_rb_python_model),
+            Model("rb_incr", "{{ config(materialized='incremental', unique_key='id') }} "
+                  "SELECT id, v FROM {{ source('rb', 'src') }}"),
+            Model("rb_tbl", "{{ config(materialized='table') }} "
+                  "SELECT id, x FROM {{ source('rb', 'src') }}"),
+        ],
+        {("rb", "src"): "rb_src"},
+        str(tmp_path / "wh"),
+        threads=1,
+    ).run()
+    all_queries()["stream_upsert_sink"](spark, SF_DIR)
+    assert len(seen) == 6, seen
+    for got, jobs, inferred in seen:
+        assert got == inferred and jobs == 0, (got, jobs, inferred)

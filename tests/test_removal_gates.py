@@ -710,9 +710,11 @@ def test_cluster_keep_best_planted(spark, tmp_path):
     """Planted cluster: docs 10 and 11 share their first 5-token
     window (an edge), doc 11 is longer -> the keep-best policy must
     KEEP 11 and (implicitly) drop 10. Planted negative: singleton doc
-    12 must form its own cluster and be kept. The underlying label
-    assignments (dedup_clusters AND the star-contraction variant) are
-    asserted directly on the same corpus."""
+    12 must form its own cluster and be kept, and so must the short
+    docs 13 and 14: their second token window is empty, and an empty
+    window is no near-dup key. The underlying label assignments
+    (dedup_clusters AND the star-contraction variant) are asserted
+    directly on the same corpus."""
     shared = "k1 k2 k3 k4 k5"
     t10 = f"{shared} a6 a7 a8 a9 a10"
     t11 = f"{shared} b6 b7 b8 b9 b10 plus extra trailing words"
@@ -721,19 +723,21 @@ def test_cluster_keep_best_planted(spark, tmp_path):
         tmp_path,
         "keepbest",
         [(10, t10, "en", "srcx"), (11, t11, "en", "srcx"),
-         (12, t12, "en", "srcx")],
+         (12, t12, "en", "srcx"), (13, "alpha beta gamma", "en", "srcx"),
+         (14, "s1 s2 s3 s4 s5", "en", "srcx")],
     )
     qs = all_queries()
     for labeler in ("dedup_clusters", "dedup_clusters_star"):
         labels = {r.doc_id: r.cluster_id for r in qs[labeler](spark, d).collect()}
-        assert labels == {10: 10, 11: 10, 12: 12}, (labeler, labels)
+        assert labels == {10: 10, 11: 10, 12: 12, 13: 13, 14: 14}, (labeler, labels)
     rows = {r.cluster_id: r for r in
             qs["pipeline_cluster_keep_best"](spark, d).collect()}
-    assert set(rows) == {10, 12}, rows
+    assert set(rows) == {10, 12, 13, 14}, rows
     assert rows[10].n_members == 2, rows[10]
     assert rows[10].kept_doc_id == 11, rows[10]        # longest wins
     assert rows[10].best_n_chars == len(t11), rows[10]
-    assert rows[12].n_members == 1 and rows[12].kept_doc_id == 12, rows[12]
+    for c in (12, 13, 14):
+        assert rows[c].n_members == 1 and rows[c].kept_doc_id == c, rows[c]
 
 
 def test_dedup_cascade_planted(spark, tmp_path):
