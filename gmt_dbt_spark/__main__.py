@@ -83,7 +83,7 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "run":
-        from gmt_dbt_spark.catalog import TABLES, table
+        from gmt_dbt_spark.catalog import TABLES, read_parquet, table
         from gmt_dbt_spark.plans.models import ModelProject, load_models_dir
 
         # register the warehouse tables as stg_* so sources.json can
@@ -110,7 +110,7 @@ def main(argv: list[str] | None = None) -> int:
                     continue
                 if any(f.endswith(".parquet") for f in os.listdir(tdir)):
                     try:
-                        spark.read.parquet(tdir).createOrReplaceTempView(
+                        read_parquet(spark, tdir).createOrReplaceTempView(
                             f"stg_{name}"
                         )
                     except Exception as exc:

@@ -1,23 +1,27 @@
-"""Table access over the parquet warehouse.
+"""Table access over the parquet warehouse, and the one answer to
+"what is this parquet path's schema?".
 
 The reference registers BigQuery *external tables* over GCS objects
 (`main.py:314-349`); our analogue is unmanaged reads over a warehouse
 directory of parquet files. ``table()`` is the single scan entry
 point every query builder uses, so scan behavior (pushdown-friendly
-plain `spark.read.parquet`) is uniform.
+plain parquet scans) is uniform.
 
-Like the reference's external tables, each table file's schema is
-resolved once per session: the first scan infers it (one Spark job),
-later scans of the same file supply it and launch none. The memo is
-keyed on the file fingerprint (`file_fingerprint`), so a rewritten
-file is inferred again. Only metadata is kept, never data. A table
-path that is not a regular file (e.g. a Spark-written dataset
-directory, whose stat does not change when an inner part file is
-rewritten) is inferred on every scan.
+Like the reference's external tables, whose schema is autodetected
+once at registration, a parquet path's schema is resolved once per
+session: ``read_parquet`` infers it on the first read of a path (one
+Spark job) and memoizes it; later reads of the same files supply it
+and launch none. ``seed_schema`` lets a writer record the schema of
+what it just wrote, so even the first read-back runs no job. The memo
+holds one entry per absolute path, ``(file_fingerprint, schema)``: a
+rewritten file or directory has a new fingerprint and is inferred
+again, a path rewritten over and over keeps one entry, and entries of
+deleted paths are dropped. Only metadata is kept, never data.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import stat
 
@@ -49,29 +53,82 @@ TABLES = (
 BROADCAST_TABLES = frozenset({"region", "nation"})
 
 
-def file_fingerprint(path: str) -> tuple[str, int, int] | None:
-    """``(abspath, st_mtime_ns, st_size)`` of a regular file; ``None``
-    for a missing path or anything else (a directory's stat misses
-    rewrites of the files inside it)."""
+def _spark_hidden(name: str) -> bool:
+    """Names Spark's file index skips when it lists a dataset
+    (`_SUCCESS`, `.crc` checksums, `_temporary`), though not a
+    partition directory such as ``_p=1``."""
+    return (name.startswith("_") and "=" not in name) or name.startswith(".")
+
+
+def file_fingerprint(path: str) -> tuple | None:
+    """``(abspath, st_mtime_ns, st_size)`` of a regular file;
+    ``(abspath, digest)`` of a directory, the digest an md5 over the
+    relative path, ``st_mtime_ns`` and ``st_size`` of every data file
+    under it (Spark's hidden names skipped, partition directories
+    walked); ``None`` for a missing path. A Spark rewrite of a
+    directory writes new part-file names, so its digest changes."""
     p = os.path.abspath(path)
     try:
         st = os.stat(p)
+        if not stat.S_ISDIR(st.st_mode):
+            return p, st.st_mtime_ns, st.st_size
+        digest = hashlib.md5()
+        for root, dirs, files in os.walk(p):
+            dirs[:] = sorted(d for d in dirs if not _spark_hidden(d))
+            for f in sorted(f for f in files if not _spark_hidden(f)):
+                fst = os.stat(os.path.join(root, f))
+                rel = os.path.relpath(os.path.join(root, f), p)
+                digest.update(f"{rel}\0{fst.st_mtime_ns}\0{fst.st_size}\n".encode())
     except OSError:
         return None
-    if not stat.S_ISREG(st.st_mode):
-        return None
-    return p, st.st_mtime_ns, st.st_size
+    return p, digest.hexdigest()
+
+
+def _remember(spark: SparkSession, fingerprint: tuple | None, schema: T.StructType) -> None:
+    """Record ``schema`` for the path ``fingerprint`` was taken of (a
+    ``None`` fingerprint, a missing path, records nothing), and drop
+    the entries of paths that no longer exist (builders' scratch
+    directories), so the memo holds only live paths."""
+    if fingerprint is None:
+        return
+    memo = schema_memo(spark)
+    for p in [p for p in list(memo) if not os.path.exists(p)]:
+        memo.pop(p, None)
+    memo[fingerprint[0]] = fingerprint, schema
+
+
+def seed_schema(spark: SparkSession, path: str, schema: T.StructType) -> None:
+    """Memoize ``schema`` for the parquet files a non-partitioned write
+    has just put at ``path``. Never call it after a partitioned write:
+    inference re-types partition values (a string column holding
+    ``"7"`` reads back as int), so the writer's schema is not what a
+    read would see."""
+    _remember(spark, file_fingerprint(path), schema)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Scan the parquet file or dataset directory at ``path``.
+
+    On the first read of the path's current files the schema is
+    inferred (one Spark job) and memoized; a read whose fingerprint
+    matches the memo supplies the schema and runs no job. Partitioned
+    directories are inferred like any other (partition columns and
+    their types included) and memoized from that inference."""
+    fingerprint = file_fingerprint(path)
+    memo_fingerprint, schema = schema_memo(spark).get(os.path.abspath(path), (None, None))
+    if fingerprint is not None and fingerprint == memo_fingerprint:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _remember(spark, fingerprint, df.schema)
+    return df
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one warehouse table.
 
-    Plain parquet scan → Catalyst gets filter pushdown + column
-    pruning for free. The schema is resolved once per session and
-    table file: the first scan infers it, later scans of a file with
-    the same fingerprint read with the memoized schema and run no
-    schema-inference job. Only the schema is memoized, never data;
-    directories are inferred on every scan.
+    Plain parquet scan (`read_parquet`) → Catalyst gets filter
+    pushdown + column pruning for free, and the table's schema is
+    inferred once per session and table file or directory.
 
     `events.parquet` has shipped with two physical layouts across
     testdata generations: TIMESTAMP(NANOS) (rejected by the Spark
@@ -83,19 +140,9 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     the NTZ→LTZ cast is value-preserving, and downstream operators
     (`unix_micros`, watermarks, `window()`) see one stable type.
     """
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    memo = schema_memo(spark)
-    key = file_fingerprint(path)
-    schema = memo.get(key)
-    if schema is None:
-        df = spark.read.parquet(path)
-        schema = df.schema
-        if key is not None:
-            memo[key] = schema
-    else:
-        df = spark.read.schema(schema).parquet(path)
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
-        ts_type = schema["ts"].dataType
+        ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, T.LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         elif isinstance(ts_type, T.TimestampNTZType):

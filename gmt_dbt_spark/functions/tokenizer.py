@@ -1241,18 +1241,12 @@ def sink_tokenizer_artifacts(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from gmt_dbt_spark.session import scratch_dir
+    from gmt_dbt_spark.sources.sinks import sink_ctas
 
     docs = table(spark, sf_dir, "documents")
     merge_rows, _ = _train_chain_batched(docs)
     uni_rows, _, _ = _uni_train(docs)
     with scratch_dir("tok_artifacts") as out:
-        spark.createDataFrame(
-            merge_rows, "step int, a string, b string, n bigint"
-        ).write.mode("overwrite").parquet(os.path.join(out, "bpe"))
-        spark.createDataFrame(
-            uni_rows, "piece string, n_uses bigint, score bigint"
-        ).write.mode("overwrite").parquet(os.path.join(out, "unigram"))
-
         def fp_of(df: DataFrame, fam: str, cols: list) -> DataFrame:
             ser = F.transform(
                 F.sort_array(F.collect_list(F.struct(*cols))),
@@ -1267,12 +1261,20 @@ def sink_tokenizer_artifacts(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
         bpe = fp_of(
-            spark.read.parquet(os.path.join(out, "bpe")),
+            sink_ctas(
+                spark,
+                spark.createDataFrame(merge_rows, "step int, a string, b string, n bigint"),
+                os.path.join(out, "bpe"),
+            ),
             "bpe",
             ["step", "a", "b", "n"],
         )
         uni = fp_of(
-            spark.read.parquet(os.path.join(out, "unigram")),
+            sink_ctas(
+                spark,
+                spark.createDataFrame(uni_rows, "piece string, n_uses bigint, score bigint"),
+                os.path.join(out, "unigram"),
+            ),
             "unigram",
             ["piece", "n_uses", "score"],
         )

@@ -67,6 +67,7 @@ from gmt_dbt_spark.functions.wordpiece import (
 from gmt_dbt_spark.operators.dedup import tokens_col
 from gmt_dbt_spark.registry import query
 from gmt_dbt_spark.session import scratch_dir
+from gmt_dbt_spark.sources.sinks import sink_ctas
 
 
 # --- shared rebuild surface (Spark) ----------------------------------
@@ -203,15 +204,9 @@ def text_bpe_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     merge_rows, vocab = _train_chain_batched(docs)
     with scratch_dir("bpe_rt") as out:
-        spark.createDataFrame(
-            merge_rows, "step int, a string, b string, n bigint"
-        ).write.mode("overwrite").parquet(out)
-        reloaded = sorted(
-            (
-                (r["step"], r["a"], r["b"])
-                for r in spark.read.parquet(out).collect()
-            ),
-        )
+        merges = spark.createDataFrame(merge_rows, "step int, a string, b string, n bigint")
+        # (step, a, b) of each reloaded merge
+        reloaded = sorted(r[:3] for r in sink_ctas(spark, merges, out).collect())
     # artifact -> runtime: re-apply the RELOADED merges in step order
     # to the character-split word relation (vocab keeps only the word
     # spine; its trained syms are deliberately NOT reused)
@@ -399,9 +394,7 @@ def text_wordpiece_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not vocab:
         return _empty_surface(docs)
     with scratch_dir("wp_rt") as out:
-        spark.createDataFrame(
-            [(p,) for p in sorted(vocab)], "piece string"
-        ).write.mode("overwrite").parquet(out)
-        reloaded = {r["piece"] for r in spark.read.parquet(out).collect()}
+        pieces = spark.createDataFrame([(p,) for p in sorted(vocab)], "piece string")
+        reloaded = {r["piece"] for r in sink_ctas(spark, pieces, out).collect()}
     dec = _wp_word_dec(it, reloaded)
     return _rebuild_surface(docs, dec)

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from gmt_dbt_spark.catalog import table
 from gmt_dbt_spark.registry import query
 from gmt_dbt_spark.session import scratch_dir
+from gmt_dbt_spark.sources.sinks import sink_ctas
 
 # Fixed universal-hash parameters (deterministic across runs/sessions).
 _P = 2_147_483_647  # 2^31 - 1
@@ -1411,13 +1412,8 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
         corpus = docs.filter(F.col("doc_id") % 5 != 0)
         # materialize the store: one fp row per distinct content
-        (
-            corpus.groupBy(F.md5("text").alias("fp"))
-            .agg(F.min("doc_id").alias("keeper"))
-            .write.mode("overwrite")
-            .parquet(store)
-        )
-        fp_store = spark.read.parquet(store)
+        keepers = corpus.groupBy(F.md5("text").alias("fp"))
+        fp_store = sink_ctas(spark, keepers.agg(F.min("doc_id").alias("keeper")), store)
         batch = docs.filter(F.col("doc_id") % 5 == 0).select(
             "doc_id", F.md5("text").alias("fp")
         )
@@ -1492,10 +1488,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus = docs.filter(F.col("doc_id") % 5 != 0)
         batch = docs.filter(F.col("doc_id") % 5 == 0)
         # materialize the store: 96-byte signature per corpus doc
-        minhash_signature(corpus, "doc_id", "text").write.mode(
-            "overwrite"
-        ).parquet(store)
-        csig = spark.read.parquet(store)
+        csig = sink_ctas(spark, minhash_signature(corpus, "doc_id", "text"), store)
         bsig = minhash_signature(batch, "doc_id", "text").localCheckpoint(
             eager=True
         )

@@ -17,7 +17,7 @@ import random
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gmt_dbt_spark.catalog import table
+from gmt_dbt_spark.catalog import read_parquet, table
 from gmt_dbt_spark.operators.embeddings import kmeans_assign
 from gmt_dbt_spark.operators.vectors import (
     assert_embed_dims,
@@ -704,7 +704,7 @@ def sink_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         dists = sorted((sqdist(qv, c), i) for i, c in enumerate(cents))
         probe_lists = [i for _, i in dists[:N_PROBE]]
         # serve: partition-pruned read of ONLY the probed lists
-        idx = spark.read.parquet(scratch).filter(
+        idx = read_parquet(spark, scratch).filter(
             F.col("list_id").isin(probe_lists) & (F.col("vec_id") != QID)
         )
         qarr = F.array(*[F.lit(x) for x in qv])

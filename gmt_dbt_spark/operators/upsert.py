@@ -29,7 +29,7 @@ import shutil
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gmt_dbt_spark.catalog import table
+from gmt_dbt_spark.catalog import read_parquet, table
 from gmt_dbt_spark.registry import query
 from gmt_dbt_spark.session import checkpoint, scratch_dir
 from gmt_dbt_spark.sources.readers import scan_json, schema_from_json_file
@@ -56,10 +56,12 @@ def merge_in_place(target_path: str, staging: DataFrame, keys: list[str]) -> Non
     """MERGE ``staging`` into the parquet table at ``target_path`` and
     overwrite it there. ``localCheckpoint`` materializes the merge and
     cuts its lineage to ``target_path``, so the write may replace the
-    files the merge read."""
-    target = staging.sparkSession.read.parquet(target_path)
+    files the merge read. The target is read, and its rewrite seeded,
+    through the schema memo of ``staging``'s session, so a target that
+    session wrote is read without an inference job."""
+    target = read_parquet(staging.sparkSession, target_path)
     merged = merge_upsert(target, staging, keys).localCheckpoint(eager=True)
-    merged.write.mode("overwrite").parquet(target_path)
+    sink_overwrite(merged, target_path)
 
 
 def dedupe_staging(staging: DataFrame, keys: list[str], order_col: str) -> DataFrame:
@@ -120,7 +122,7 @@ def upsert_partitioned(
     scan is pruned to the staging batch's partition values first.
     """
     parts = [r[0] for r in staging.select(partition_col).distinct().collect()]
-    target = spark.read.parquet(target_path).filter(_partition_in(partition_col, parts))
+    target = read_parquet(spark, target_path).filter(_partition_in(partition_col, parts))
     merged = merge_upsert(target, staging, keys)
     # dynamic as a per-write option: the session conf, and with it
     # every later full-refresh sink_overwrite, stays as it was
@@ -182,7 +184,7 @@ def delete_keys_partitioned(
     for, so a partition whose every row is doomed is removed by
     directory once the overwrite has succeeded. The partitions ``kept``
     still covers ride its checkpoint job as an observed metric."""
-    target = spark.read.parquet(target_path)
+    target = read_parquet(spark, target_path)
     part = F.col(partition_col)
     # (typed value, its directory value — how Spark names the partition)
     dir_value = F.coalesce(part.cast("string"), F.lit(_NULL_PARTITION))
@@ -237,7 +239,7 @@ def sink_delete_keys_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         delete_keys_partitioned(spark, run, doomed, "o_custkey", "o_orderstatus")
         out = (
-            spark.read.parquet(run)
+            read_parquet(spark, run)
             .groupBy("o_orderstatus")
             .agg(
                 F.count(F.lit(1)).alias("n"),

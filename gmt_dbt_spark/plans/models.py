@@ -41,14 +41,14 @@ from __future__ import annotations
 
 import os
 import re
-import shutil
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from gmt_dbt_spark.catalog import read_parquet
 from gmt_dbt_spark.session import inherit_local_properties
-from gmt_dbt_spark.sources.sinks import read_written
+from gmt_dbt_spark.sources.sinks import sink_overwrite
 
 _CONFIG_RE = re.compile(r"\{\{\s*config\s*\(([^)]*)\)\s*\}\}")
 _SOURCE_RE = re.compile(r"\{\{\s*source\s*\(\s*'([^']+)'\s*,\s*'([^']+)'\s*\)\s*\}\}")
@@ -340,20 +340,21 @@ class ModelProject:
     def _materialize(self, model: Model) -> DataFrame:
         path = os.path.join(self.warehouse_dir, model.name)
         sql = model.compiled_sql
-        if model.python_fn is not None:
-            # dbt Python model: the function builds a DataFrame from
-            # dbt.ref()/dbt.source(); always materialized (dbt allows
-            # table/incremental only — table here), so downstream SQL
-            # models consume it like any other relation.
-            dbt = DbtShim(self.spark, self._sources, model.config)
-            df = model.python_fn(dbt, self.spark)
+        if model.python_fn is not None or model.materialized == "table":
+            # A table model, or a dbt Python model: the function builds
+            # a DataFrame from dbt.ref()/dbt.source() and is always
+            # materialized (dbt allows table/incremental only — table
+            # here), so downstream SQL models consume it like any other
+            # relation.
+            if model.python_fn is not None:
+                dbt = DbtShim(self.spark, self._sources, model.config)
+                df = model.python_fn(dbt, self.spark)
+            else:
+                df = self.spark.sql(sql)
             self._enforce_contract(model, df)
-            shutil.rmtree(path, ignore_errors=True)
-            df.write.mode("overwrite").parquet(path)
-            df = read_written(self.spark, df, path)
-            df.createOrReplaceTempView(model.name)
-            return df
-        if model.materialized == "incremental":
+            sink_overwrite(df, path)
+            df = read_parquet(self.spark, path)
+        elif model.materialized == "incremental":
             # dbt's incremental contract: first run = full CTAS; later
             # runs compute the model (optionally filtered via
             # is_incremental()/{{ this }}) and MERGE it into the target
@@ -361,9 +362,8 @@ class ModelProject:
             # gcp_function.py MERGE inside the dbt lifecycle.
             exists = os.path.exists(path)
             if exists:
-                self.spark.read.parquet(path).createOrReplaceTempView(
-                    f"{model.name}__this"
-                )
+                this = read_parquet(self.spark, path)
+                this.createOrReplaceTempView(f"{model.name}__this")
             sql = _IF_INCR_RE.sub(lambda m: m.group(1) if exists else "", sql)
             sql = _THIS_RE.sub(f"{model.name}__this", sql)
             sql = _IS_INCR_RE.sub("TRUE" if exists else "FALSE", sql)
@@ -378,16 +378,9 @@ class ModelProject:
                         f"incremental model '{model.name}' needs unique_key"
                     )
                 merge_in_place(path, df, [key])
-                df = self.spark.read.parquet(path)
             else:
-                df.write.mode("overwrite").parquet(path)
-                df = read_written(self.spark, df, path)
-        elif model.materialized == "table":
-            df = self.spark.sql(sql)
-            self._enforce_contract(model, df)
-            shutil.rmtree(path, ignore_errors=True)
-            df.write.mode("overwrite").parquet(path)
-            df = read_written(self.spark, df, path)
+                sink_overwrite(df, path)
+            df = read_parquet(self.spark, path)
         elif model.materialized == "view":
             df = self.spark.sql(sql)
             self._enforce_contract(model, df)
@@ -498,7 +491,7 @@ class ModelProject:
             for m in level:
                 path = os.path.join(self.warehouse_dir, m.name)
                 if os.path.exists(path):
-                    self.spark.read.parquet(path).createOrReplaceTempView(m.name)
+                    read_parquet(self.spark, path).createOrReplaceTempView(m.name)
                 elif m.materialized == "view" and m.compiled_sql:
                     self.spark.sql(m.compiled_sql).createOrReplaceTempView(m.name)
                 elif m.materialized == "ephemeral":
@@ -520,7 +513,7 @@ class ModelProject:
             raise RuntimeError(
                 f"model '{name}' has no materialized artifact at {path!r}"
             )
-        return self.spark.read.parquet(path)
+        return read_parquet(self.spark, path)
 
     def run(
         self, select: str | None = None, defer: bool = False

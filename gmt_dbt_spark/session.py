@@ -37,7 +37,7 @@ _RUNTIME_CONFS = {
 
 
 # One record per live session object: present once `tune` has run,
-# holding the warehouse schemas `catalog.table` resolved in it. Keyed
+# holding the parquet schemas `catalog.read_parquet` resolved in it. Keyed
 # by the object, not its id(), so a record dies with its session and a
 # new session never inherits a collected one's.
 _SESSIONS: weakref.WeakKeyDictionary[SparkSession, dict] = weakref.WeakKeyDictionary()
@@ -95,9 +95,20 @@ def inherit_local_properties(spark: SparkSession, fn):
 
 
 def schema_memo(spark: SparkSession) -> dict:
-    """The tuned session's schema memo: file fingerprint → StructType,
-    filled and read by `catalog.table`."""
+    """The tuned session's schema memo: absolute path →
+    (`catalog.file_fingerprint`, StructType), filled and read by
+    `catalog.read_parquet` and `catalog.seed_schema`."""
     return _SESSIONS[tune(spark)]
+
+
+def share_schema_memo(clone: SparkSession, spark: SparkSession) -> None:
+    """Give ``clone``, the session a streaming query cloned from
+    ``spark`` (a ``foreachBatch`` frame's session), the record of
+    ``spark``: the parquet schemas resolved in one hold in the other,
+    and the clone counts as tuned. It carries ``spark``'s tuned confs,
+    and `tune` would switch adaptive execution, which the stream turned
+    off in the clone, back on."""
+    _SESSIONS[clone] = schema_memo(spark)
 
 
 def checkpoint(df: DataFrame, **metrics: Column) -> tuple[DataFrame, Row]:

@@ -20,9 +20,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gmt_dbt_spark.catalog import table
+from gmt_dbt_spark.catalog import read_parquet, table
 from gmt_dbt_spark.registry import query
 from gmt_dbt_spark.session import scratch_dir
+from gmt_dbt_spark.sources.sinks import sink_overwrite
 
 REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 _BLOBS = os.path.join(REPO, "fixtures", "blobs")
@@ -70,7 +71,7 @@ def compact_files(
         if f.endswith(".parquet")
     )
     n_out = max(1, -(-total // target_bytes))  # ceil
-    spark.read.parquet(src_dir).coalesce(n_out).write.mode("overwrite").parquet(dst_dir)
+    sink_overwrite(read_parquet(spark, src_dir).coalesce(n_out), dst_dir)
     return len([f for f in os.listdir(dst_dir) if f.endswith(".parquet")])
 
 
@@ -93,9 +94,9 @@ def sink_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     with scratch_dir("compact") as root:
         frag = os.path.join(root, "frag")
         out = os.path.join(root, "out")
-        li.repartition(64).write.mode("overwrite").parquet(frag)
+        sink_overwrite(li.repartition(64), frag)
         compact_files(spark, frag, out, target_bytes=128 << 20)
-        return spark.read.parquet(out).agg(
+        return read_parquet(spark, out).agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.sum(F.col("l_quantity").cast("decimal(25,6)"))
             .cast("string")

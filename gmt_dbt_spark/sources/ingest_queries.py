@@ -18,6 +18,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gmt_dbt_spark.catalog import read_parquet
 from gmt_dbt_spark.registry import query
 from gmt_dbt_spark.session import scratch_dir
 from gmt_dbt_spark.sources.readers import scan_csv, scan_json, schema_from_json_file
@@ -279,7 +280,7 @@ def sink_overwrite_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     with scratch_dir("sink_overwrite") as path:
         sink_overwrite(out, path)
         sink_overwrite(out, path)  # idempotent truncate-load
-        return spark.read.parquet(path).localCheckpoint(eager=True)
+        return read_parquet(spark, path).localCheckpoint(eager=True)
 
 
 @query(
@@ -331,9 +332,9 @@ def sink_staging_temp_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         staging_path = os.path.join(root, "upsert_batch_a_temp")
         result_path = os.path.join(root, "staged_result")
         with StagingTable(spark, batch, staging_path) as staged:
-            staged.write.mode("overwrite").parquet(result_path)
+            sink_overwrite(staged, result_path)
         assert not os.path.exists(staging_path), "staging table must be dropped"
-        return spark.read.parquet(result_path).localCheckpoint(eager=True)
+        return read_parquet(spark, result_path).localCheckpoint(eager=True)
 
 
 @query(
@@ -443,7 +444,7 @@ def scan_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
             "spark.sql.parquet.aggregatePushdown": "true",
         },
     ):
-        li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
+        li = read_parquet(spark, os.path.join(sf_dir, "lineitem.parquet"))
         out = li.agg(
             F.count(F.lit(1)).alias("n"),
             F.min("l_orderkey").alias("min_okey"),
@@ -451,7 +452,8 @@ def scan_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("l_partkey").alias("min_pkey"),
             F.max("l_partkey").alias("max_pkey"),
         )
-        return out.localCheckpoint(eager=True)  # detach from scratch, executor-side
+        # run the aggregate inside the conf scope, under the V2 reader
+        return out.localCheckpoint(eager=True)
 
 
 @query(

@@ -27,9 +27,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gmt_dbt_spark.catalog import table
+from gmt_dbt_spark.catalog import read_parquet, table
 from gmt_dbt_spark.registry import query
 from gmt_dbt_spark.session import scoped_conf, scratch_dir
+from gmt_dbt_spark.sources.sinks import sink_overwrite
 
 
 @query(
@@ -59,7 +60,7 @@ def sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(path)
         )
         out = (
-            spark.read.parquet(path)
+            read_parquet(spark, path)
             .filter(F.col("o_month").isin("1996-01", "1996-02", "1996-03"))
             .select("o_orderkey", "o_custkey", "o_totalprice", "o_month")
         )
@@ -196,7 +197,7 @@ def join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
             .partitionBy("o_month")
             .parquet(fact_path)
         )
-        (
+        sink_overwrite(
             orders.select(
                 F.date_format("o_orderdate", "yyyy-MM").alias("d_month"),
                 F.concat(
@@ -204,10 +205,8 @@ def join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.lit("-Q"),
                     F.quarter("o_orderdate").cast("string"),
                 ).alias("d_quarter"),
-            )
-            .distinct()
-            .write.mode("overwrite")
-            .parquet(dim_path)
+            ).distinct(),
+            dim_path,
         )
         out = dpp_join_plan(spark, fact_path, dim_path)
         return out.localCheckpoint(eager=True)  # detach from scratch, executor-side
@@ -216,8 +215,8 @@ def join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dpp_join_plan(spark: SparkSession, fact_path: str, dim_path: str) -> DataFrame:
     """The pruned join itself — split out so the plan-guard test can
     inspect the exact DataFrame the query materializes."""
-    fact = spark.read.parquet(fact_path)
-    dim = spark.read.parquet(dim_path).filter(F.col("d_quarter") == "1996-Q1")
+    fact = read_parquet(spark, fact_path)
+    dim = read_parquet(spark, dim_path).filter(F.col("d_quarter") == "1996-Q1")
     return (
         fact.join(dim, fact["o_month"] == dim["d_month"])
         .groupBy("o_month")
@@ -539,7 +538,7 @@ def sink_posting_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB recomputing the postings straight from the corpus."""
     with scratch_dir("postings") as path:
         build_postings(spark, sf_dir, path)
-        probe = spark.read.parquet(path).filter(
+        probe = read_parquet(spark, path).filter(
             F.col("term").isin(*_QUERY_TERMS)
         )
         out = probe.groupBy("term").agg(
@@ -635,7 +634,7 @@ def sink_compression_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
             for codec in ("snappy", "zstd", "gzip"):
                 d = os.path.join(root, codec)
                 src.write.mode("overwrite").option("compression", codec).parquet(d)
-                back = spark.read.parquet(d)
+                back = read_parquet(spark, d)
                 (r,) = back.agg(
                     F.count(F.lit(1)).alias("n"),
                     F.sum("doc_id").alias("id_sum"),
@@ -784,7 +783,7 @@ def sink_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(path)
         )
         out = (
-            spark.read.parquet(path)
+            read_parquet(spark, path)
             .groupBy("shard")
             .agg(
                 F.count(F.lit(1)).alias("n_docs"),

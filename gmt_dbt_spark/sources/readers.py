@@ -151,6 +151,7 @@ def ingest_directory(spark: SparkSession, src_dir: str, warehouse_dir: str) -> i
     exception carries its path as a note; the first failure in
     discovery order is raised once every worker has finished."""
     from gmt_dbt_spark.sources.sanitize import sanitize_columns, sanitize_table_name
+    from gmt_dbt_spark.sources.sinks import sink_overwrite
 
     json_files = sorted(
         set(find_files(src_dir, ".json")) | set(find_files(src_dir, ".ndjson"))
@@ -168,7 +169,7 @@ def ingest_directory(spark: SparkSession, src_dir: str, warehouse_dir: str) -> i
         try:
             df = scan_csv(spark, path) if path.endswith(".csv") else scan_json(spark, path)
             out = os.path.join(warehouse_dir, name)
-            sanitize_columns(df).write.mode("overwrite").parquet(out)
+            sink_overwrite(sanitize_columns(df), out)
         except Exception as e:
             e.add_note(f"while ingesting {path}")
             raise

@@ -11,6 +11,12 @@ bronze dbt models (CTAS copy into a bronze layer — the models' own
 embedded DDL is a reference bug, SURVEY.md §3.2); `StagingTable` is
 the `<table>_temp` create-merge-drop lifecycle
 (`gcp_function.py:159-164`, drop at `:112`).
+
+A non-partitioned write seeds the schema memo (`catalog.seed_schema`)
+with the written frame's schema, so the read-back of what a sink just
+wrote (`catalog.read_parquet`) runs no schema-inference job. A
+partitioned write is not seeded: inference re-types partition values
+on read, so the writer's schema is not what a reader sees.
 """
 
 from __future__ import annotations
@@ -19,6 +25,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from gmt_dbt_spark.catalog import read_parquet, seed_schema
+
 
 def sink_overwrite(
     df: DataFrame, path: str, partition_by: list[str] | None = None
@@ -26,22 +34,18 @@ def sink_overwrite(
     """Full-refresh truncate load (WRITE_TRUNCATE)."""
     w = df.write.mode("overwrite")
     if partition_by:
-        w = w.partitionBy(*partition_by)
+        w.partitionBy(*partition_by).parquet(path)
+        return
     w.parquet(path)
-
-
-def read_written(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
-    """Scan of the parquet table ``df`` was just written to at ``path``,
-    read with ``df``'s own schema: inferring it from the files' footers
-    would run a job to learn what the caller already knows."""
-    return spark.read.schema(df.schema).parquet(path)
+    seed_schema(df.sparkSession, path, df.schema)
 
 
 def sink_ctas(spark: SparkSession, select_df: DataFrame, path: str) -> DataFrame:
     """CREATE TABLE AS SELECT: materialize a query result as a new
     table and return the scan of the materialized copy."""
     select_df.write.mode("errorifexists").parquet(path)
-    return read_written(spark, select_df, path)
+    seed_schema(spark, path, select_df.schema)
+    return read_parquet(spark, path)
 
 
 class StagingTable:
@@ -53,8 +57,8 @@ class StagingTable:
         self.path = path
 
     def __enter__(self) -> DataFrame:
-        self.df.write.mode("overwrite").parquet(self.path)
-        return read_written(self.spark, self.df, self.path)
+        sink_overwrite(self.df, self.path)
+        return read_parquet(self.spark, self.path)
 
     def __exit__(self, *exc) -> None:
         shutil.rmtree(self.path, ignore_errors=True)

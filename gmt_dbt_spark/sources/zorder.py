@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from gmt_dbt_spark.sources.sinks import sink_overwrite
+
 
 def _spread_bits_16(c: Column) -> Column:
     """Spread a 16-bit int's bits to even positions of a 32-bit int
@@ -66,13 +68,12 @@ def zorder_write(
         _scale_16(F.col(a), bounds.amn, bounds.amx),
         _scale_16(F.col(b), bounds.bmn, bounds.bmx),
     )
-    (
+    sink_overwrite(
         df.withColumn("__z", z)
         .repartitionByRange(n_files, "__z")
         .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
+        .drop("__z"),
+        path,
     )
 
 
@@ -80,7 +81,7 @@ def zorder_write(
 
 from pyspark.sql import SparkSession  # noqa: E402
 
-from gmt_dbt_spark.catalog import table  # noqa: E402
+from gmt_dbt_spark.catalog import read_parquet, table  # noqa: E402
 from gmt_dbt_spark.registry import query  # noqa: E402
 from gmt_dbt_spark.session import scratch_dir  # noqa: E402
 
@@ -105,7 +106,7 @@ def sink_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     with scratch_dir("zorder_lineitem") as path:
         zorder_write(li, ("l_partkey", "l_suppkey"), path, n_files=16)
         out = (
-            spark.read.parquet(path)
+            read_parquet(spark, path)
             .filter(F.col("l_partkey").between(100, 140))
             .filter(F.col("l_suppkey").between(10, 30))
             .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "l_quantity")

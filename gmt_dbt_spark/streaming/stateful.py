@@ -5,8 +5,9 @@ streaming dedup, foreachBatch MERGE sink.
 a file source replayed with availableNow, `foreachBatch` applying the
 engine's merge_upsert into a parquet target — the streaming mirror of
 the reference's Cloud-Function incremental load
-(`gcp_function.py:96-113`). The final target state is deterministic
-(independent of micro-batch boundaries, because merge is
+(`gcp_function.py:96-113`). Its reader sets no maxFilesPerTrigger, so
+the replay is one foreachBatch epoch, one MERGE. The final target
+state would be the same under any micro-batching (merge is
 key-idempotent), which is what makes it oracle-checkable.
 
 `stream_watermark_late` / `stream_dedup` register their deterministic
@@ -55,7 +56,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gmt_dbt_spark.catalog import file_fingerprint, table
+from gmt_dbt_spark.catalog import file_fingerprint, read_parquet, table
 from gmt_dbt_spark.exprs import dsum
 from gmt_dbt_spark.operators.upsert import merge_in_place
 from gmt_dbt_spark.registry import query
@@ -65,8 +66,9 @@ from gmt_dbt_spark.session import (
     replay_conf,
     scoped_conf,
     scratch_dir,
+    share_schema_memo,
 )
-from gmt_dbt_spark.sources.sinks import read_written
+from gmt_dbt_spark.sources.sinks import sink_overwrite
 
 EVENT_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, event_type string, "
@@ -164,22 +166,15 @@ def _frame_fingerprint(ev) -> str:
     ).hexdigest()[:8]
 
 
-def _replay_cache_dir(
-    sf_dir: str, n_batches: int, split: str, frame_fp: str
-) -> str | None:
+def _replay_cache_dir(sf_dir: str, n_batches: int, split: str, frame_fp: str) -> str:
     """Cache key for authored replay shards: the shards are a pure
     function of (events.parquet content, n_batches, split, the
-    authored frame), so key on the source file's `file_fingerprint`
-    plus `_frame_fingerprint` — any regeneration of the testdata
-    invalidates automatically. Returns None when events.parquet is not
-    a regular file (e.g. a Spark-written dataset DIRECTORY, whose stat
-    does not change when an inner part file is rewritten — review
-    finding): then the caller authors uncached, exactly as documented."""
+    authored frame), so key on the source's `file_fingerprint` (a
+    file or a dataset directory) plus `_frame_fingerprint` — any
+    regeneration of the testdata invalidates automatically."""
     import hashlib
 
     fp = file_fingerprint(os.path.join(sf_dir, "events.parquet"))
-    if fp is None:
-        return None
     key = hashlib.md5(
         "|".join(map(str, (*fp, n_batches, split, frame_fp))).encode()
     ).hexdigest()[:16]
@@ -212,7 +207,7 @@ def _prune_replay_cache(root: str, keep_s: float = 7 * 86400) -> None:
 
 
 def write_replay(
-    ev, src_dir: str, n_batches: int = 2, sf_dir: str | None = None,
+    ev, src_dir: str, n_batches: int = 2, *, sf_dir: str,
     split: str = "mod", tail: list | None = None,
 ) -> None:
     """Author the micro-batch replay files: the events split into
@@ -237,7 +232,7 @@ def write_replay(
     replay_conf). The tail is part of the cache key: the same frame
     with different (or no) sentinels must never collide.
 
-    CACHED when ``sf_dir`` is given (r3 perf pass): authoring rows
+    CACHED under ``sf_dir``'s events fingerprint (r3 perf pass): authoring rows
     driver-side costs ~2 s at sf0.1 and was re-paid on EVERY
     invocation of every replay query; the shards are deterministic in
     (source parquet, split, the caller's frame — fingerprinted from
@@ -292,14 +287,7 @@ def write_replay(
             f"{split}+tail:"
             f"{_hashlib.md5(repr(sorted(tail)).encode()).hexdigest()[:8]}"
         )
-    cache = (
-        _replay_cache_dir(sf_dir, n_batches, split_key, _frame_fingerprint(ev))
-        if sf_dir
-        else None
-    )
-    if cache is None:
-        author(src_dir)
-        return
+    cache = _replay_cache_dir(sf_dir, n_batches, split_key, _frame_fingerprint(ev))
     if not os.path.exists(os.path.join(cache, "_OK")):
         _prune_replay_cache(os.path.dirname(cache))
         tmp = cache + "." + uuid.uuid4().hex[:6]
@@ -529,15 +517,19 @@ def stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(final, STATE_OUT_SCHEMA)
 
 
-def upsert_batch(target_path: str, keys: list[str]):
+def upsert_batch(spark: SparkSession, target_path: str, keys: list[str]):
     """The ``foreachBatch`` function that MERGEs each micro-batch into
-    the parquet table at ``target_path`` (`merge_in_place`). The batch
+    the parquet table at ``target_path`` (`merge_in_place`). A batch
+    belongs to the session the query cloned from ``spark``, which is
+    given ``spark``'s schema memo (`share_schema_memo`), so the MERGE
+    reads a target ``spark`` wrote without an inference job. The batch
     is persisted for the merge and released after it: `merge_upsert`
     reads it twice (the anti-join's broadcast side and the union
     side), and each read of an unpersisted batch reruns the epoch's
     whole plan, state-store stage included."""
 
     def run(batch: DataFrame, _epoch: int) -> None:
+        share_schema_memo(batch.sparkSession, spark)
         batch.persist()
         try:
             merge_in_place(target_path, batch, keys)
@@ -557,13 +549,15 @@ FROM events WHERE user_id IS NOT NULL GROUP BY user_id
 )
 def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """foreachBatch MERGE: a real Structured Streaming query (file
-    source, availableNow trigger) whose every micro-batch re-upserts
-    the running per-user aggregate into a parquet target via
-    merge_upsert — the streaming mirror of `gcp_function.py:96-113`.
+    source, availableNow trigger) that upserts the per-user aggregate
+    into a parquet target via merge_upsert — the streaming mirror of
+    `gcp_function.py:96-113`. The reader sets no maxFilesPerTrigger,
+    so both replayed shards arrive in one micro-batch: one epoch, one
+    MERGE.
 
     Complete-mode aggregation means the LAST batch's state equals the
-    full-input aggregate, so the final target is deterministic no
-    matter how the source was micro-batched."""
+    full-input aggregate, so the final target would be the same under
+    any micro-batching of the source."""
     with replay_run(spark, "stream_upsert") as (run_dir, src_dir, ckpt, _):
         target_path = os.path.join(run_dir, "target")
         # NULL upsert keys are excluded up front (r3 adversarial
@@ -580,8 +574,8 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(None).cast("timestamp").alias("last_seen"),
             F.lit(0.0).alias("total"),
         )
-        seed.write.parquet(target_path)
-        # Source files: two replayed chunks (micro-batch fodder).
+        sink_overwrite(seed, target_path)
+        # Source files: two replayed shards, read as one micro-batch.
         # This caller authors a pre-filtered frame; the cache key
         # derives that from the analyzed plan (_frame_fingerprint),
         # so no manual tag is needed — or forgettable.
@@ -592,10 +586,10 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("ts").alias("last_seen"), dsum("value").alias("total")
         )
 
-        run_replay(agg, ckpt, mode="complete", foreach=upsert_batch(target_path, ["user_id"]))
-        # every MERGE rewrites the target with the seed's columns; the
-        # checkpoint detaches the result from the path, executor-side
-        return read_written(spark, seed, target_path).localCheckpoint(eager=True)
+        merge = upsert_batch(spark, target_path, ["user_id"])
+        run_replay(agg, ckpt, mode="complete", foreach=merge)
+        # the checkpoint detaches the result from the path, executor-side
+        return read_parquet(spark, target_path).localCheckpoint(eager=True)
 
 
 def tws_available() -> bool:
@@ -1236,9 +1230,8 @@ def stream_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         pin_mtimes(src_dir)  # admit shards strictly in arrival order
         # seed the empty store so every batch can read-then-append
-        spark.createDataFrame(
-            [], "doc_id bigint, source string, n_tokens bigint, fp string"
-        ).write.mode("overwrite").parquet(store)
+        cols = "doc_id bigint, source string, n_tokens bigint, fp string"
+        sink_overwrite(spark.createDataFrame([], cols), store)
 
         stream = (
             spark.readStream.schema("doc_id bigint, text string, source string")
@@ -1248,6 +1241,7 @@ def stream_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         def ingest(batch: DataFrame, _epoch: int) -> None:
             sp = batch.sparkSession
+            share_schema_memo(sp, spark)  # see upsert_batch
             gated = batch.withColumn("toks", tokens_col(F.col("text"))).filter(
                 (F.size("toks") >= MIN_TOKENS)
                 & (F.length("text") >= MIN_CHARS)
@@ -1264,7 +1258,7 @@ def stream_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .filter(F.col("rn") == 1)
                 .drop("rn")
             )
-            seen = sp.read.parquet(store).select("fp")
+            seen = read_parquet(sp, store).select("fp")
             survivors = first.join(seen, "fp", "left_anti").localCheckpoint(
                 eager=True  # detach from the store path before appending to it
             )
@@ -1273,7 +1267,7 @@ def stream_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).parquet(store)
 
         run_replay(stream, ckpt, mode="append", foreach=ingest)
-        final = spark.read.parquet(store)
+        final = read_parquet(spark, store)
         return final.localCheckpoint(eager=True)  # detach from store, executor-side
 
 
@@ -1354,9 +1348,7 @@ def stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
                 os.path.join(src_dir, f"part-{i}.json"),
             )
         pin_mtimes(src_dir)
-        spark.createDataFrame([], "h bigint").write.mode("overwrite").parquet(
-            hstore
-        )
+        sink_overwrite(spark.createDataFrame([], "h bigint"), hstore)
 
         stream = (
             spark.readStream.schema("doc_id bigint, text string")
@@ -1386,6 +1378,7 @@ def stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         def upd(batch: DataFrame, _epoch: int) -> None:
             sp = batch.sparkSession
+            share_schema_memo(sp, spark)  # see upsert_batch
             # hash the batch ONCE: the micro-batch DataFrame re-parses
             # its JSON shard on EVERY action, and upd's jobs consumed
             # it three times (sketch merge, batch-key agg, novel-hash
@@ -1417,7 +1410,7 @@ def stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             # detach before append; the novel-hash count rides the
             # checkpoint job
             new, obs = checkpoint(
-                bh.join(sp.read.parquet(hstore), "h", "left_anti"),
+                bh.join(read_parquet(sp, hstore), "h", "left_anti"),
                 n=F.count(F.lit(1)),
             )
             new.write.mode("append").parquet(hstore)

@@ -278,8 +278,8 @@ def _rb_python_model(dbt, session):
 def test_read_back_takes_the_written_schema(spark, tmp_path, monkeypatch):
     """Every read-back of freshly written parquet (sink_ctas,
     StagingTable, the python/incremental/table model materializations
-    and stream_upsert_sink's target) reads with the written frame's
-    schema: the schema inference would find, and no job to find it."""
+    and stream_upsert_sink's target) is served the schema its writer
+    seeded: the schema inference would find, and no job to find it."""
     from gmt_dbt_spark.plans import models
     from gmt_dbt_spark.plans.models import Model, ModelProject
     from gmt_dbt_spark.registry import all_queries
@@ -288,17 +288,17 @@ def test_read_back_takes_the_written_schema(spark, tmp_path, monkeypatch):
     from tests.conftest import SF_DIR
 
     dag = spark.sparkContext._jsc.sc().dagScheduler()
-    read_written = sinks.read_written
+    read_parquet = sinks.read_parquet
     seen = []
 
-    def spy(spark_, df, path):
+    def spy(spark_, path):
         j0 = dag.nextJobId()
-        out = read_written(spark_, df, path)
+        out = read_parquet(spark_, path)
         seen.append((out.schema, dag.nextJobId() - j0, spark_.read.parquet(path).schema))
         return out
 
     for mod in (sinks, models, stateful):
-        monkeypatch.setattr(mod, "read_written", spy)
+        monkeypatch.setattr(mod, "read_parquet", spy)
 
     src = spark.createDataFrame(
         [(1, "a", 2.5), (2, None, None)], "id bigint, v string, x double"

@@ -402,9 +402,15 @@ def test_replay_cache_variant_and_invalidation(spark, tmp_path):
         os.utime(os.path.join(sf, "events.parquet"))
         assert _replay_cache_dir(sf, 2, "mod", fp_plain) != key_plain
 
-        # a dataset DIRECTORY named events.parquet is never cached
+        # a dataset DIRECTORY named events.parquet is keyed on its
+        # part files: rewriting one changes the key
         dsf = str(tmp_path / "sfdir"); os.makedirs(os.path.join(dsf, "events.parquet"))
-        assert _replay_cache_dir(dsf, 2, "mod", fp_plain) is None
+        dpart = os.path.join(dsf, "events.parquet", "part-0.parquet")
+        shutil.copy(os.path.join(sf, "events.parquet"), dpart)
+        key_dir = _replay_cache_dir(dsf, 2, "mod", fp_plain)
+        st = os.stat(dpart)
+        os.utime(dpart, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+        assert _replay_cache_dir(dsf, 2, "mod", fp_plain) != key_dir
     finally:
         shutil.rmtree(base, ignore_errors=True)
         for k in {
@@ -522,7 +528,7 @@ def test_upsert_batch_evaluates_each_micro_batch_once(spark, tmp_path):
         .agg(F.sum("v").alias("total"))
         .withColumn("total", F.udf(tick, "double")("total"))
     )
-    merge = upsert_batch(target, ["k"])
+    merge = upsert_batch(spark, target, ["k"])
     epochs = []
 
     def counted(batch, epoch):
@@ -534,3 +540,28 @@ def test_upsert_batch_evaluates_each_micro_batch_once(spark, tmp_path):
     assert evaluations.value == 3 * len(epochs)
     got = sorted((r.k, r.total) for r in spark.read.parquet(target).collect())
     assert got == [(1, 2.0), (2, 2.0), (3, 2.0)]
+
+
+def test_stream_upsert_sink_replays_as_one_epoch(spark, monkeypatch):
+    """`stream_upsert_sink`'s reader sets no maxFilesPerTrigger, so the
+    availableNow replay admits both shards in one micro-batch: one
+    foreachBatch epoch, one MERGE."""
+    from gmt_dbt_spark.registry import all_queries
+    from gmt_dbt_spark.streaming import stateful
+    from tests.conftest import SF_DIR
+
+    epochs = []
+    upsert_batch = stateful.upsert_batch
+
+    def counted(spark_, target_path, keys):
+        merge = upsert_batch(spark_, target_path, keys)
+
+        def run(batch, epoch):
+            epochs.append(epoch)
+            merge(batch, epoch)
+
+        return run
+
+    monkeypatch.setattr(stateful, "upsert_batch", counted)
+    assert all_queries()["stream_upsert_sink"](spark, SF_DIR).count() > 0
+    assert epochs == [0]

@@ -13,10 +13,12 @@ from pyspark.sql import functions as F
 from gmt_dbt_spark.operators.upsert import (
     dedupe_staging,
     final_load,
+    merge_in_place,
     merge_upsert,
     merge_upsert_evolve,
     upsert_partitioned,
 )
+from gmt_dbt_spark.sources.sinks import sink_overwrite
 
 FIXTURES = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fixtures")
 
@@ -80,6 +82,22 @@ def test_final_load_dispatch(spark, target, staging, tmp_path):
     assert not os.path.exists(spath)  # staging dropped
     with pytest.raises(ValueError):
         final_load(spark, staging, tpath, spath, ["id"], "Upsert")
+
+
+def test_merge_in_place_reads_in_session_target_without_inference(spark, tmp_path):
+    """A target this session wrote is read with its memoized schema:
+    a MERGE into it runs 3 jobs, no schema-inference job among them,
+    and so does the next MERGE into the rewritten target."""
+    path = str(tmp_path / "target")
+    sink_overwrite(spark.range(100).selectExpr("id", "'old' AS val"), path)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    for n in (3, 4):
+        staging = spark.range(n).selectExpr("id", "'new' AS val")
+        j0 = dag.nextJobId()
+        merge_in_place(path, staging, ["id"])
+        assert dag.nextJobId() - j0 == 3
+    got = dict(spark.read.parquet(path).collect())
+    assert len(got) == 100 and [got[i] for i in range(5)] == ["new"] * 4 + ["old"]
 
 
 def test_upsert_partitioned_touches_only_batch_partitions(spark, tmp_path):
