@@ -40,6 +40,51 @@ from gmt_dbt_spark.operators.dedup import tokens_col
 from gmt_dbt_spark.registry import query
 
 N_MERGES = 8
+MERGE_SCHEMA = "step int, a string, b string, n bigint"  # the BPE artifact
+
+# --- The trained-tokenizer contract ---------------------------------
+#
+# Every family (BPE and unigram here, WordPiece in wordpiece.py) hands
+# its apply surfaces ONE per-distinct-word relation (word, pieces
+# array<string>): `bpe_pieces`, `uni_pieces`, `wordpiece.wp_pieces`.
+# Encode and fertility are `piece_budget` over it; the decode
+# round-trips (tokenizer_roundtrip.py) rebuild documents from it.
+
+WP_UNK = "[UNK]"  # a WordPiece word with an unmatchable position
+
+
+def bpe_pieces(vocab: DataFrame) -> DataFrame:
+    """(word, pieces) of a BPE word relation (word, ..., syms)."""
+    return vocab.select("word", F.col("syms").alias("pieces"))
+
+
+def uni_pieces(seg: DataFrame) -> DataFrame:
+    """(word, pieces) of a unigram segmentation (word, ..., ps)."""
+    return seg.select("word", F.col("ps").alias("pieces"))
+
+
+def piece_budget(docs: DataFrame, pieces: DataFrame, key: str) -> DataFrame:
+    """Join the corpus token stream to a (word, pieces) relation and
+    aggregate per ``key``: (key, n_words, n_pieces, n_split_words,
+    n_unk_words, max_word_pieces). A word is split when it has more
+    than one piece and unknown when a piece is [UNK] (tokens match
+    [a-z0-9]+, so [UNK] is never a trained piece). The relation is
+    Heaps-bounded (AQE broadcasts it while it fits), and this token
+    stream is the corpus's one scan after training's word count.
+    Catalyst prunes the aggregates a caller does not select."""
+    enc = pieces.select(
+        "word",
+        F.size("pieces").alias("n_sub"),
+        F.array_contains("pieces", WP_UNK).alias("unk"),
+    )
+    tok = docs.select(key, F.explode(tokens_col(F.col("text"))).alias("word"))
+    return tok.join(enc, "word").groupBy(key).agg(
+        F.count(F.lit(1)).alias("n_words"),
+        F.sum("n_sub").cast("bigint").alias("n_pieces"),
+        F.count_if(F.col("n_sub") > 1).alias("n_split_words"),
+        F.count_if("unk").alias("n_unk_words"),
+        F.max("n_sub").cast("int").alias("max_word_pieces"),
+    )
 
 
 def _char_syms(word: Column) -> Column:
@@ -219,9 +264,7 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncates — identically on both engines."""
     docs = table(spark, sf_dir, "documents")
     merge_rows, _ = _train_chain_batched(docs)
-    return spark.createDataFrame(
-        merge_rows, "step int, a string, b string, n bigint"
-    )
+    return spark.createDataFrame(merge_rows, MERGE_SCHEMA)
 
 
 def _bpe_encode_oracle(k: int) -> str:
@@ -260,17 +303,11 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab, ~m̄× fewer training jobs."""
     docs = table(spark, sf_dir, "documents")
     _, vocab = _train_chain_batched(docs)
-    enc = vocab.select(
-        "word",
-        F.size("syms").alias("n_sub"),
-    )
-    tok = docs.select(
-        "doc_id", F.explode(tokens_col(F.col("text"))).alias("word")
-    )
-    return tok.join(enc, "word").groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_words"),
-        F.sum("n_sub").alias("n_bpe_tokens"),
-        F.max("n_sub").cast("int").alias("max_word_pieces"),
+    return piece_budget(docs, bpe_pieces(vocab), "doc_id").select(
+        "doc_id",
+        "n_words",
+        F.col("n_pieces").alias("n_bpe_tokens"),
+        "max_word_pieces",
     )
 
 
@@ -313,15 +350,12 @@ def text_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     some language. Trained via the batched-round chain (r6)."""
     docs = table(spark, sf_dir, "documents")
     _, vocab = _train_chain_batched(docs)
-    enc = vocab.select("word", F.size("syms").alias("n_sub"))
-    tok = docs.select(
-        "lang", F.explode(tokens_col(F.col("text"))).alias("word")
-    )
-    return tok.join(enc, "word").groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_words"),
-        F.sum("n_sub").cast("bigint").alias("n_bpe_tokens"),
-        F.count_if(F.col("n_sub") > 1).alias("n_split_words"),
-        F.max("n_sub").cast("int").alias("max_word_pieces"),
+    return piece_budget(docs, bpe_pieces(vocab), "lang").select(
+        "lang",
+        "n_words",
+        F.col("n_pieces").alias("n_bpe_tokens"),
+        "n_split_words",
+        "max_word_pieces",
     )
 
 
@@ -755,11 +789,14 @@ def _uni_train(docs: DataFrame) -> tuple[list, dict, DataFrame]:
     → E2. Returns (sorted (piece, n_uses, score) rows, final scores,
     the CHECKPOINTED FINAL SEGMENTATION (word, cnt, ps) — the E2 pass
     runs exactly once and `text_unigram_encode` reuses it instead of
-    re-segmenting; r7 review finding)."""
+    re-segmenting; r7 review finding). An empty corpus trains no
+    vocabulary: ([], {}, the empty word relation with an empty ps)."""
     wc = _uni_wc(docs)
     chars, multi = _uni_seed(wc)
     if not chars:
-        return [], {}, None  # empty corpus — no vocabulary is definable
+        return [], {}, wc.select(
+            "word", "cnt", F.array().cast("array<string>").alias("ps")
+        )
     s0 = _uni_scores({**chars, **multi})
     c1 = _uni_estep_counts(wc, s0)
     chars1 = {p: max(c1.get(p, 0), 1) for p in chars}
@@ -989,24 +1026,9 @@ def text_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins it to the token stream — per-doc cost is a
     fingerprint-sized equi-join, never a re-segmentation."""
     docs = table(spark, sf_dir, "documents")
-    _, s1, seg = _uni_train(docs)
-    if not s1:
-        return spark.createDataFrame(
-            [], "doc_id bigint, n_words bigint, n_pieces bigint, "
-            "max_word_pieces int"
-        )
-    wp = seg.select("word", F.size("ps").cast("bigint").alias("n_pieces"))
-    words = docs.select(
-        "doc_id", F.explode(tokens_col(F.col("text"))).alias("word")
-    )
-    return (
-        words.join(wp, "word")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_words"),
-            F.sum("n_pieces").cast("bigint").alias("n_pieces"),
-            F.max("n_pieces").cast("int").alias("max_word_pieces"),
-        )
+    _, _, seg = _uni_train(docs)
+    return piece_budget(docs, uni_pieces(seg), "doc_id").select(
+        "doc_id", "n_words", "n_pieces", "max_word_pieces"
     )
 
 
@@ -1038,21 +1060,9 @@ def text_unigram_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reuses the trainer's checkpointed final segmentation — one
     equi-join to the lang-tagged token stream, no re-segmentation."""
     docs = table(spark, sf_dir, "documents")
-    _, s1, seg = _uni_train(docs)
-    if not s1:
-        return spark.createDataFrame(
-            [], "lang string, n_words bigint, n_pieces bigint, "
-            "n_split_words bigint, max_word_pieces int"
-        )
-    wp = seg.select("word", F.size("ps").alias("n_sub"))
-    tok = docs.select(
-        "lang", F.explode(tokens_col(F.col("text"))).alias("word")
-    )
-    return tok.join(wp, "word").groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_words"),
-        F.sum("n_sub").cast("bigint").alias("n_pieces"),
-        F.count_if(F.col("n_sub") > 1).alias("n_split_words"),
-        F.max("n_sub").cast("int").alias("max_word_pieces"),
+    _, _, seg = _uni_train(docs)
+    return piece_budget(docs, uni_pieces(seg), "lang").select(
+        "lang", "n_words", "n_pieces", "n_split_words", "max_word_pieces"
     )
 
 
@@ -1127,15 +1137,6 @@ def text_ppl_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     has the proof sketch)."""
     docs = table(spark, sf_dir, "documents")
     _, s1, seg = _uni_train(docs)
-    if not s1:
-        return docs.select(
-            "doc_id",
-            F.lit(0).cast("bigint").alias("n_words"),
-            F.lit(0).cast("bigint").alias("n_pieces"),
-            F.lit(None).cast("bigint").alias("score_milli"),
-            F.lit("empty").alias("band"),
-            F.lit(False).alias("keep"),
-        )
     vmap1 = _uni_vmap(s1)
     wsc = seg.select(
         "word",
@@ -1263,7 +1264,7 @@ def sink_tokenizer_artifacts(spark: SparkSession, sf_dir: str) -> DataFrame:
         bpe = fp_of(
             sink_ctas(
                 spark,
-                spark.createDataFrame(merge_rows, "step int, a string, b string, n bigint"),
+                spark.createDataFrame(merge_rows, MERGE_SCHEMA),
                 os.path.join(out, "bpe"),
             ),
             "bpe",

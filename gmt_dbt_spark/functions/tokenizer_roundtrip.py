@@ -6,20 +6,24 @@ pieces -> text is exact end-to-end — the rewrite-and-rehash doctrine
 (`dedup_substring_rewrite`, `text_dedup_lines`) applied to the
 tokenizer stack.
 
-Decode is computed FROM THE PIECES, never copied from the source word:
-  - BPE: the merge table is persisted to parquet, RELOADED, and the
-    decode relation re-derived by re-applying the reloaded merges to
-    the raw character alphabet — the full artifact -> runtime path
-    (what `sink_tokenizer_artifacts` fingerprints, this one EXECUTES).
-  - unigram: pieces from the trainer's checkpointed final Viterbi
-    segmentation; decode = concatenation.
-  - WordPiece: the vocab (alphabet + merge products) is persisted,
-    RELOADED, and the BERT greedy longest-match-first runtime re-run
-    from the reloaded vocab, accumulating the matched substrings; a
-    word that hits an unmatchable position decodes to [UNK] — the one
-    DELIBERATELY lossy path, surfaced by ok=false (pinned by
-    restricted-vocab planted tests; unreachable on the registered
-    alphabet-closed surface).
+Each family hands `_rebuild_surface` its one (word, pieces) relation
+(the trained-tokenizer contract in tokenizer.py); decode is the
+concatenation of a word's pieces, computed FROM THE PIECES, never
+copied from the source word:
+  - BPE (`bpe_pieces`): the merge table is persisted to parquet,
+    RELOADED, and the relation re-derived by re-applying the reloaded
+    merges to the raw character alphabet — the full artifact ->
+    runtime path (what `sink_tokenizer_artifacts` fingerprints, this
+    one EXECUTES).
+  - unigram (`uni_pieces`): the trainer's checkpointed final Viterbi
+    segmentation.
+  - WordPiece (`wp_pieces`): the vocab (alphabet + merge products) is
+    persisted, RELOADED, and the BERT greedy longest-match-first
+    runtime re-run from the reloaded vocab; a word that hits an
+    unmatchable position is the single piece [UNK] and decodes to
+    it — the one DELIBERATELY lossy path, surfaced by ok=false
+    (pinned by restricted-vocab planted tests; unreachable on the
+    registered alphabet-closed surface).
 
 Per-document surface: (doc_id, n_words, n_pieces, rebuilt_md5, ok)
 where rebuilt_md5 hashes the decoded words joined by ' ' in corpus
@@ -47,22 +51,25 @@ from pyspark.sql import functions as F
 from gmt_dbt_spark.catalog import table
 from gmt_dbt_spark.functions.text import _DUCK_TOKENS
 from gmt_dbt_spark.functions.tokenizer import (
+    MERGE_SCHEMA,
     N_MERGES,
+    WP_UNK,
     _bpe_with_clause,
     _char_syms,
     _merge_syms,
     _train_chain_batched,
     _uni_train,
     _uni_with_clause,
+    bpe_pieces,
+    uni_pieces,
 )
 from gmt_dbt_spark.functions.wordpiece import (
     WP_MERGES,
-    WP_PROBE_MAX,
-    WP_UNK,
     _wp_probe_branches,
     _wp_train_chain,
     _wp_vocab_sql,
     _wp_with_clause,
+    wp_pieces,
 )
 from gmt_dbt_spark.operators.dedup import tokens_col
 from gmt_dbt_spark.registry import query
@@ -73,10 +80,12 @@ from gmt_dbt_spark.sources.sinks import sink_ctas
 # --- shared rebuild surface (Spark) ----------------------------------
 
 
-def _rebuild_surface(docs: DataFrame, dec: DataFrame) -> DataFrame:
-    """Join the corpus token stream to a (word, n_pieces, decoded)
-    relation and reassemble each document from its DECODED words:
-    (doc_id, n_words, n_pieces, rebuilt_md5, ok).
+def _rebuild_surface(docs: DataFrame, pieces: DataFrame) -> DataFrame:
+    """Decode a (word, pieces) relation — n_pieces = its piece count,
+    decoded = its pieces concatenated — join the corpus token stream
+    to it and reassemble each document from its DECODED words:
+    (doc_id, n_words, n_pieces, rebuilt_md5, ok). Docs with no tokens
+    (a zero-token corpus included) rebuild to '' with ok=true.
 
     One shuffle on the word key (the decode join), one on doc_id (the
     reassembly); the collected per-doc list is (pos, word) pairs
@@ -94,6 +103,11 @@ def _rebuild_surface(docs: DataFrame, dec: DataFrame) -> DataFrame:
             ),
         )
 
+    dec = pieces.select(
+        "word",
+        F.size("pieces").cast("bigint").alias("n_pieces"),
+        F.concat_ws("", F.col("pieces")).alias("decoded"),
+    )
     tok = docs.select(
         "doc_id", F.posexplode(tokens_col(F.col("text"))).alias("pos", "word")
     )
@@ -124,15 +138,11 @@ def _rebuild_surface(docs: DataFrame, dec: DataFrame) -> DataFrame:
     )
 
 
-def _empty_surface(docs: DataFrame) -> DataFrame:
-    """The zero-token-corpus degenerate: every doc rebuilds to ''."""
-    return docs.select(
-        "doc_id",
-        F.lit(0).cast("bigint").alias("n_words"),
-        F.lit(0).cast("bigint").alias("n_pieces"),
-        F.md5(F.lit("")).alias("rebuilt_md5"),
-        F.lit(True).alias("ok"),
-    )
+def _reloaded(spark: SparkSession, rows: list, schema: str, name: str) -> list:
+    """Persist ``rows`` as a parquet artifact, reload it and collect
+    the reloaded rows — what a tokenizer runtime boots from."""
+    with scratch_dir(name) as out:
+        return sink_ctas(spark, spark.createDataFrame(rows, schema), out).collect()
 
 
 # --- shared rebuild tail (DuckDB) ------------------------------------
@@ -203,10 +213,10 @@ def text_bpe_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     word counts and once for the rebuild join."""
     docs = table(spark, sf_dir, "documents")
     merge_rows, vocab = _train_chain_batched(docs)
-    with scratch_dir("bpe_rt") as out:
-        merges = spark.createDataFrame(merge_rows, "step int, a string, b string, n bigint")
-        # (step, a, b) of each reloaded merge
-        reloaded = sorted(r[:3] for r in sink_ctas(spark, merges, out).collect())
+    # (step, a, b) of each reloaded merge
+    reloaded = sorted(
+        r[:3] for r in _reloaded(spark, merge_rows, MERGE_SCHEMA, "bpe_rt")
+    )
     # artifact -> runtime: re-apply the RELOADED merges in step order
     # to the character-split word relation (vocab keeps only the word
     # spine; its trained syms are deliberately NOT reused)
@@ -217,12 +227,7 @@ def text_bpe_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         it = it.select(
             "word", _merge_syms(F.col("syms"), F.lit(a), F.lit(b)).alias("syms")
         ).localCheckpoint(eager=True)
-    dec = it.select(
-        "word",
-        F.size("syms").cast("bigint").alias("n_pieces"),
-        F.concat_ws("", F.col("syms")).alias("decoded"),
-    )
-    return _rebuild_surface(docs, dec)
+    return _rebuild_surface(docs, bpe_pieces(it))
 
 
 # --- unigram ----------------------------------------------------------
@@ -252,88 +257,11 @@ def text_unigram_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     stay plausible. Reuses the trainer's checkpointed final
     segmentation (no re-segmentation) + one token-stream join."""
     docs = table(spark, sf_dir, "documents")
-    _, s1, seg = _uni_train(docs)
-    if not s1:
-        return _empty_surface(docs)
-    dec = seg.select(
-        "word",
-        F.size("ps").cast("bigint").alias("n_pieces"),
-        F.concat_ws("", F.col("ps")).alias("decoded"),
-    )
-    return _rebuild_surface(docs, dec)
+    _, _, seg = _uni_train(docs)
+    return _rebuild_surface(docs, uni_pieces(seg))
 
 
 # --- WordPiece --------------------------------------------------------
-
-
-def _wp_greedy_dec(word: Column, vmap: Column) -> Column:
-    """`_wp_greedy` (wordpiece.py) extended to ACCUMULATE the decoded
-    string: state (j = next unmatched position, np = pieces so far,
-    dec = concatenation of matched substrings, bad). Same fold class,
-    same probe order WP_PROBE_MAX..1 with the remaining-suffix guard."""
-    n = F.length(word)
-
-    def step(acc: Column, _: Column) -> Column:
-        j = acc.getField("j")
-        ml = None
-        for l in range(WP_PROBE_MAX, 0, -1):
-            cond = (j + F.lit(l) - 1 <= n) & F.try_element_at(
-                vmap, F.substr(word, j, F.lit(l))
-            ).isNotNull()
-            ml = F.when(cond, F.lit(l)) if ml is None else ml.when(cond, F.lit(l))
-        matched = F.struct(
-            (j + ml).alias("j"),
-            (acc.getField("np") + 1).alias("np"),
-            F.concat(acc.getField("dec"), F.substr(word, j, ml)).alias("dec"),
-            F.lit(False).alias("bad"),
-        )
-        failed = F.struct(
-            j.alias("j"),
-            acc.getField("np").alias("np"),
-            acc.getField("dec").alias("dec"),
-            F.lit(True).alias("bad"),
-        )
-        return F.when(acc.getField("bad") | (j > n), acc).otherwise(
-            F.when(ml.isNull(), failed).otherwise(matched)
-        )
-
-    return F.aggregate(
-        F.sequence(F.lit(1), F.greatest(n, F.lit(1))),
-        F.struct(
-            F.lit(1).alias("j"),
-            F.lit(0).alias("np"),
-            F.lit("").alias("dec"),
-            F.lit(False).alias("bad"),
-        ),
-        step,
-    )
-
-
-def _wp_word_dec(it: DataFrame, vocab: set) -> DataFrame:
-    """(word, n_pieces, decoded): greedy-decode every distinct word
-    against the vocabulary; a bad word IS one [UNK] piece whose decode
-    is the literal [UNK] marker (the deliberately lossy path). Fold
-    behind a Generate barrier (the `_wp_word_pieces` pattern)."""
-    items = []
-    for p in sorted(vocab):
-        items.append(F.lit(p))
-        items.append(F.lit(1))
-    g = it.select(
-        "word",
-        F.explode(
-            F.array(_wp_greedy_dec(F.col("word"), F.create_map(*items)))
-        ).alias("__g"),
-    )
-    return g.select(
-        "word",
-        F.when(F.col("__g.bad"), F.lit(1))
-        .otherwise(F.col("__g.np"))
-        .cast("bigint")
-        .alias("n_pieces"),
-        F.when(F.col("__g.bad"), F.lit(WP_UNK))
-        .otherwise(F.col("__g.dec"))
-        .alias("decoded"),
-    )
 
 
 def _wp_rt_oracle(k: int) -> str:
@@ -379,11 +307,11 @@ def text_wordpiece_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WordPiece encode -> decode round-trip THROUGH THE PERSISTED
     VOCAB: train, persist the vocabulary (alphabet + merge products —
     the ONLY artifact BERT's runtime needs) to parquet, RELOAD it,
-    re-run the greedy longest-match-first runtime from the reloaded
-    vocab accumulating each word's matched substrings, decode by
-    concatenation, reassemble and hash every document. A complete
-    greedy parse decodes to its word by construction; an [UNK]'d word
-    decodes to the literal [UNK] marker — WordPiece's one DELIBERATE
+    re-run the greedy longest-match-first runtime (`wp_pieces`) from
+    the reloaded vocab, decode each word by concatenating its pieces,
+    reassemble and hash every document. A complete greedy parse
+    decodes to its word by construction; an [UNK]'d word is the
+    single piece [UNK] and decodes to that literal marker — WordPiece's one DELIBERATE
     loss, surfaced as ok=false (unreachable here: the trained vocab
     is alphabet-closed; the lossy path is pinned by restricted-vocab
     planted tests). Greedy runs once per DISTINCT word; the corpus
@@ -391,10 +319,8 @@ def text_wordpiece_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     merge_rows, alphabet, it = _wp_train_chain(docs)
     vocab = set(alphabet) | {a + b for _, a, b, _, _ in merge_rows}
-    if not vocab:
-        return _empty_surface(docs)
-    with scratch_dir("wp_rt") as out:
-        pieces = spark.createDataFrame([(p,) for p in sorted(vocab)], "piece string")
-        reloaded = {r["piece"] for r in sink_ctas(spark, pieces, out).collect()}
-    dec = _wp_word_dec(it, reloaded)
-    return _rebuild_surface(docs, dec)
+    reloaded = {
+        r["piece"]
+        for r in _reloaded(spark, [(p,) for p in sorted(vocab)], "piece string", "wp_rt")
+    }
+    return _rebuild_surface(docs, wp_pieces(it, reloaded))

@@ -78,9 +78,11 @@ from pyspark.sql import functions as F
 from gmt_dbt_spark.catalog import table
 from gmt_dbt_spark.functions.text import _DUCK_TOKENS
 from gmt_dbt_spark.functions.tokenizer import (
+    WP_UNK,
     _char_syms,
     _merge_syms,
     _pair_counts,
+    piece_budget,
 )
 from gmt_dbt_spark.operators.dedup import tokens_col
 from gmt_dbt_spark.registry import query
@@ -88,104 +90,6 @@ from gmt_dbt_spark.registry import query
 WP_MERGES = 8
 WP_SCALE = 4294967296  # 2^32 — fixed-point likelihood resolution
 WP_PROBE_MAX = 12  # greedy-encode probe window (part of the op spec)
-WP_UNK = "[UNK]"
-
-# Production-merge-count contract (r8, r7 VERDICT item 2). The
-# per-merge loop is the EXACT algorithm (no batch rule exists under
-# the likelihood objective — see the module docstring), but each merge
-# is ~6 driver-coordinated Spark jobs (symbol-count aggregate +
-# checkpoint, pair-count aggregate, two broadcast joins inside the
-# scored plan, the 1-row argmax collect, the merge-apply fold +
-# checkpoint). A production BERT vocab is ~30k merges ≈ 1.8e5
-# sequential jobs: at a 50-100 ms driver scheduling floor that is
-# 2.5-5 HOURS of pure coordination, invariant to cluster size —
-# the cost is round-trips, not data. The sanctioned escape past
-# WP_DRIVER_FOLD_AFTER merges: the trainer never re-scans the corpus
-# anyway — every step reads only the Heaps-bounded word-count
-# relation — so collect THAT once (the model-side vocabulary of
-# distinct words, ~1e7-1e8 entries at web scale; guarded by
-# WP_COLLECT_MAX_WORDS) and run the IDENTICAL integer fold
-# driver-side (`wp_train_driver_fold`). Bit-identity to the
-# distributed chain is unconditional — both sides compute the same
-# arbitrary-precision floor(n·2^32/(m_a·m_b)) argmax with the same
-# (score desc, n desc, a, b) tie-break over the same integer counts —
-# and is pinned by test on randomized corpora.
-WP_DRIVER_FOLD_AFTER = 64
-WP_COLLECT_MAX_WORDS = 5_000_000
-
-
-def _wp_fold_local(word_counts: dict, n_merges: int):
-    """The per-merge training loop on a COLLECTED word-count relation
-    — the driver-side half of the production contract above. Exact
-    twin of `_wp_train_chain`'s step (same argmax, same ties, same
-    greedy left-to-right merge application, same exhaustion
-    truncation), in arbitrary-precision Python ints so the fixed-
-    point floors agree with DECIMAL(38)/HUGEINT bit-for-bit (the
-    module's cross-engine floor contract). Returns (merge_rows,
-    alphabet, vocab) with vocab = {word: [pieces]}."""
-    vocab = {w: list(w) for w in word_counts}
-    alphabet = sorted({c for w in word_counts for c in w})
-    merge_rows = []
-    for step in range(1, n_merges + 1):
-        pc: dict = {}
-        sc: dict = {}
-        for w, syms in vocab.items():
-            c = word_counts[w]
-            for x in syms:
-                sc[x] = sc.get(x, 0) + c
-            for i in range(len(syms) - 1):
-                p = (syms[i], syms[i + 1])
-                pc[p] = pc.get(p, 0) + c
-        if not pc:
-            break
-        best = min(
-            pc.items(),
-            key=lambda kv: (
-                -((kv[1] * WP_SCALE) // (sc[kv[0][0]] * sc[kv[0][1]])),
-                -kv[1],
-                kv[0],
-            ),
-        )
-        (a, b), n = best
-        merge_rows.append(
-            (step, a, b, int(n), (n * WP_SCALE) // (sc[a] * sc[b]))
-        )
-        for w, syms in vocab.items():
-            out: list = []
-            for x in syms:
-                if out and out[-1] == a and x == b:
-                    out[-1] = a + b
-                else:
-                    out.append(x)
-            vocab[w] = out
-    return merge_rows, alphabet, vocab
-
-
-def wp_train_driver_fold(docs: DataFrame, n_merges: int):
-    """Production-merge-count path: ONE corpus scan builds the word-
-    count relation (exactly `_wp_train_chain`'s first step), which is
-    collected — the Heaps-bounded MODEL, never the corpus — and the
-    identical integer fold runs driver-side, eliminating the ~6
-    driver-coordinated jobs PER MERGE that dominate wall-clock past
-    ~WP_DRIVER_FOLD_AFTER merges (job-count math above). Raises if
-    the distinct-word relation exceeds WP_COLLECT_MAX_WORDS rather
-    than silently materializing an unbounded collect; at that corpus
-    breadth, shard the fold by first-character partition or stay on
-    the distributed chain and pay the coordination."""
-    wc_rows = (
-        docs.select(F.explode(tokens_col(F.col("text"))).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .limit(WP_COLLECT_MAX_WORDS + 1)
-        .collect()
-    )
-    if len(wc_rows) > WP_COLLECT_MAX_WORDS:
-        raise ValueError(
-            f"word-count relation exceeds WP_COLLECT_MAX_WORDS="
-            f"{WP_COLLECT_MAX_WORDS}; use the distributed chain or shard"
-        )
-    return _wp_fold_local({r["word"]: int(r["cnt"]) for r in wc_rows}, n_merges)
-
 
 def _wp_pick(it: DataFrame) -> list:
     """One training step's argmax: score every adjacent pair of the
@@ -201,9 +105,7 @@ def _wp_pick(it: DataFrame) -> list:
     CHECKPOINTED word relation — Heaps-bounded, model-sized work —
     so executing it twice inside the single argmax job costs bounded
     executor compute, while the checkpoint cost a full driver
-    round-trip per merge (at a production ~30k-merge vocab, that is
-    hours of pure coordination — the WP_DRIVER_FOLD_AFTER math
-    above). Same counts, same argmax, same ties."""
+    round-trip per merge. Same counts, same argmax, same ties."""
     sc = (
         it.select(F.explode("syms").alias("sym"), "cnt")
         .groupBy("sym")
@@ -279,15 +181,26 @@ def _wp_train_chain(
     return merge_rows, alphabet, it
 
 
-def _wp_greedy(word: Column, vmap: Column) -> Column:
-    """Greedy longest-match-first WordPiece encode of one word as ONE
-    JVM fold over character positions: state (j = next unmatched
-    position, np = pieces so far, bad = hit an unmatchable position).
-    Each iteration probes lengths WP_PROBE_MAX..1 (guarded to the
-    remaining suffix, so a short-tail probe can't false-match a
-    shorter piece); every real step advances >= 1 char, so
-    length(word) iterations always suffice and later iterations
-    no-op once j passes the end or the word went bad."""
+def wp_pieces(it: DataFrame, vocab: set) -> DataFrame:
+    """(word, pieces): greedy longest-match-first WordPiece encode of
+    every distinct word against ``vocab`` (a map literal — a broadcast
+    join at production vocab sizes), as ONE JVM fold over character
+    positions: state (j = next unmatched position, pieces matched so
+    far, bad = hit an unmatchable position). Each iteration probes
+    lengths WP_PROBE_MAX..1 (guarded to the remaining suffix, so a
+    short-tail probe can't false-match a shorter piece); every real
+    step advances >= 1 char, so length(word) iterations always suffice
+    and later iterations no-op once j passes the end or the word went
+    bad. A bad word IS the single piece [UNK]. The fold result goes
+    behind a Generate barrier (explode of a 1-element array) so the
+    projection reads one materialized struct instead of re-inlining
+    the fold (the `_uni_seg_frame` pattern)."""
+    items = []
+    for p in sorted(vocab):
+        items.append(F.lit(p))
+        items.append(F.lit(1))
+    vmap = F.create_map(*items)
+    word = F.col("word")
     n = F.length(word)
 
     def step(acc: Column, _: Column) -> Column:
@@ -300,50 +213,35 @@ def _wp_greedy(word: Column, vmap: Column) -> Column:
             ml = F.when(cond, F.lit(l)) if ml is None else ml.when(cond, F.lit(l))
         matched = F.struct(
             (j + ml).alias("j"),
-            (acc.getField("np") + 1).alias("np"),
+            F.concat(acc.getField("pieces"), F.array(F.substr(word, j, ml))).alias(
+                "pieces"
+            ),
             F.lit(False).alias("bad"),
         )
         failed = F.struct(
             j.alias("j"),
-            acc.getField("np").alias("np"),
+            acc.getField("pieces").alias("pieces"),
             F.lit(True).alias("bad"),
         )
         return F.when(acc.getField("bad") | (j > n), acc).otherwise(
             F.when(ml.isNull(), failed).otherwise(matched)
         )
 
-    return F.aggregate(
+    fold = F.aggregate(
         F.sequence(F.lit(1), F.greatest(n, F.lit(1))),
         F.struct(
-            F.lit(1).alias("j"), F.lit(0).alias("np"), F.lit(False).alias("bad")
+            F.lit(1).alias("j"),
+            F.array().cast("array<string>").alias("pieces"),
+            F.lit(False).alias("bad"),
         ),
         step,
     )
-
-
-def _wp_word_pieces(it: DataFrame, vocab: set) -> DataFrame:
-    """(word, n_pieces, is_unk): greedy-encode every distinct word
-    against the trained vocabulary (map literal — broadcast join at
-    production vocab sizes). A bad word IS one [UNK] token. The fold
-    result goes behind a Generate barrier (explode of a 1-element
-    array) so the three projections read one materialized struct
-    instead of re-inlining the fold (the `_uni_seg_frame` pattern)."""
-    items = []
-    for p in sorted(vocab):
-        items.append(F.lit(p))
-        items.append(F.lit(1))
-    g = it.select(
-        "word",
-        F.explode(F.array(_wp_greedy(F.col("word"), F.create_map(*items)))).alias(
-            "__g"
-        ),
-    )
+    g = it.select("word", F.explode(F.array(fold)).alias("__g"))
     return g.select(
         "word",
-        F.when(F.col("__g.bad"), F.lit(1))
-        .otherwise(F.col("__g.np"))
-        .alias("n_pieces"),
-        F.col("__g.bad").alias("is_unk"),
+        F.when(F.col("__g.bad"), F.array(F.lit(WP_UNK)))
+        .otherwise(F.col("__g.pieces"))
+        .alias("pieces"),
     )
 
 
@@ -564,21 +462,12 @@ def text_wordpiece_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     merge_rows, alphabet, it = _wp_train_chain(docs)
     vocab = set(alphabet) | {a + b for _, a, b, _, _ in merge_rows}
-    if not vocab:
-        return spark.createDataFrame(
-            [],
-            "doc_id bigint, n_words bigint, n_wp_tokens bigint,"
-            " n_unk_words bigint, max_word_pieces int",
-        )
-    wpp = _wp_word_pieces(it, vocab)
-    tok = docs.select(
-        "doc_id", F.explode(tokens_col(F.col("text"))).alias("word")
-    )
-    return tok.join(wpp, "word").groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_words"),
-        F.sum("n_pieces").cast("bigint").alias("n_wp_tokens"),
-        F.count_if(F.col("is_unk")).alias("n_unk_words"),
-        F.max("n_pieces").cast("int").alias("max_word_pieces"),
+    return piece_budget(docs, wp_pieces(it, vocab), "doc_id").select(
+        "doc_id",
+        "n_words",
+        F.col("n_pieces").alias("n_wp_tokens"),
+        "n_unk_words",
+        "max_word_pieces",
     )
 
 
@@ -593,20 +482,11 @@ def text_wordpiece_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     merge_rows, alphabet, it = _wp_train_chain(docs)
     vocab = set(alphabet) | {a + b for _, a, b, _, _ in merge_rows}
-    if not vocab:
-        return spark.createDataFrame(
-            [],
-            "lang string, n_words bigint, n_wp_tokens bigint,"
-            " n_split_words bigint, n_unk_words bigint, max_word_pieces int",
-        )
-    wpp = _wp_word_pieces(it, vocab)
-    tok = docs.select(
-        "lang", F.explode(tokens_col(F.col("text"))).alias("word")
-    )
-    return tok.join(wpp, "word").groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_words"),
-        F.sum("n_pieces").cast("bigint").alias("n_wp_tokens"),
-        F.count_if(F.col("n_pieces") > 1).alias("n_split_words"),
-        F.count_if(F.col("is_unk")).alias("n_unk_words"),
-        F.max("n_pieces").cast("int").alias("max_word_pieces"),
+    return piece_budget(docs, wp_pieces(it, vocab), "lang").select(
+        "lang",
+        "n_words",
+        F.col("n_pieces").alias("n_wp_tokens"),
+        "n_split_words",
+        "n_unk_words",
+        "max_word_pieces",
     )

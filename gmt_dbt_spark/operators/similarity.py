@@ -500,7 +500,7 @@ def dedup_embed_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (interpreted per element), ~64 lambda evals × 2 × every
     # candidate pair. The quantized vector is built ONCE per row
     # behind a Generate barrier (explode of a 1-element array — the
-    # `_wp_word_pieces` pattern; projection collapse would otherwise
+    # `wp_pieces` pattern; projection collapse would otherwise
     # re-inline the milli-quantize transform into every qv[i] of the
     # unrolled dot, the exact failure r10's piecemeal attempt
     # measured), and n2 + the pair dot unroll over the pinned

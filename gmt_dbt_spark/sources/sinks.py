@@ -16,16 +16,21 @@ A non-partitioned write seeds the schema memo (`catalog.seed_schema`)
 with the written frame's schema, so the read-back of what a sink just
 wrote (`catalog.read_parquet`) runs no schema-inference job. A
 partitioned write is not seeded: inference re-types partition values
-on read, so the writer's schema is not what a reader sees.
+on read, so the writer's schema is not what a reader sees. An append
+(`sink_append`) of the dataset's own fields keeps its schema, so it
+carries the memoized schema over to the appended files.
 """
 
 from __future__ import annotations
 
+import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
-from gmt_dbt_spark.catalog import read_parquet, seed_schema
+from gmt_dbt_spark.catalog import file_fingerprint, read_parquet, seed_schema
+from gmt_dbt_spark.session import schema_memo
 
 
 def sink_overwrite(
@@ -38,6 +43,30 @@ def sink_overwrite(
         return
     w.parquet(path)
     seed_schema(df.sparkSession, path, df.schema)
+
+
+def _fields(schema: T.StructType) -> list:
+    """(name, type) of each field in order; nullability ignored (a
+    parquet read is nullable whatever the writer's frame was)."""
+    return [(f.name, f.dataType.simpleString()) for f in schema.fields]
+
+
+def sink_append(df: DataFrame, path: str) -> None:
+    """Append ``df`` to the non-partitioned parquet dataset at
+    ``path``. When the memo holds the schema of the dataset's files
+    before the append and ``df`` has the same fields (name, order and
+    type), the appended dataset keeps that schema: it is re-recorded
+    under the new files' fingerprint, so the next read runs no
+    schema-inference job. Otherwise the next read infers."""
+    spark = df.sparkSession
+    before = file_fingerprint(path)
+    memo_fingerprint, schema = schema_memo(spark).get(
+        os.path.abspath(path), (None, None)
+    )
+    df.write.mode("append").parquet(path)
+    kept = before is not None and before == memo_fingerprint
+    if kept and _fields(df.schema) == _fields(schema):
+        seed_schema(spark, path, schema)
 
 
 def sink_ctas(spark: SparkSession, select_df: DataFrame, path: str) -> DataFrame:

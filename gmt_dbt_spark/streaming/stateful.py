@@ -40,8 +40,7 @@ ALL state stays executor-side in the state store — nothing scales
 with users on the driver. `_final_update_per_user` enforces the
 boundary mechanically: it refuses (raises) beyond
 STREAM_REPLAY_MAX_STATE_ROWS rather than silently materializing a
-production-sized corpus on the driver, the same escape-hatch shape
-as wordpiece.py's WP_COLLECT_MAX_WORDS.
+production-sized corpus on the driver.
 """
 
 from __future__ import annotations
@@ -68,7 +67,7 @@ from gmt_dbt_spark.session import (
     scratch_dir,
     share_schema_memo,
 )
-from gmt_dbt_spark.sources.sinks import sink_overwrite
+from gmt_dbt_spark.sources.sinks import sink_append, sink_overwrite
 
 EVENT_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, event_type string, "
@@ -413,7 +412,7 @@ def _final_update_per_user(spark: SparkSession, name: str, last_field: str):
     module docstring — replay-oracle harness only, never production).
     n_events strictly grows per user, so the final state is the
     max-n_events row — no reliance on sink row order. Raises past
-    STREAM_REPLAY_MAX_STATE_ROWS (the WP_COLLECT_MAX_WORDS shape)."""
+    STREAM_REPLAY_MAX_STATE_ROWS."""
     sink = spark.table(name)
     n = sink.count()
     if n > STREAM_REPLAY_MAX_STATE_ROWS:
@@ -1262,9 +1261,7 @@ def stream_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             survivors = first.join(seen, "fp", "left_anti").localCheckpoint(
                 eager=True  # detach from the store path before appending to it
             )
-            survivors.select("doc_id", "source", "n_tokens", "fp").write.mode(
-                "append"
-            ).parquet(store)
+            sink_append(survivors.select("doc_id", "source", "n_tokens", "fp"), store)
 
         run_replay(stream, ckpt, mode="append", foreach=ingest)
         final = read_parquet(spark, store)
@@ -1413,7 +1410,7 @@ def stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
                 bh.join(read_parquet(sp, hstore), "h", "left_anti"),
                 n=F.count(F.lit(1)),
             )
-            new.write.mode("append").parquet(hstore)
+            sink_append(new, hstore)
             # driver state mirrors the store: it moves only once the
             # append above has succeeded
             sketch[:] = merged

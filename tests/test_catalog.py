@@ -21,7 +21,7 @@ from pyspark.sql import types as T
 
 from gmt_dbt_spark.catalog import file_fingerprint, read_parquet, seed_schema, table
 from gmt_dbt_spark.session import _SESSIONS, schema_memo
-from gmt_dbt_spark.sources.sinks import sink_overwrite
+from gmt_dbt_spark.sources.sinks import sink_append, sink_overwrite
 
 PACKAGE = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "gmt_dbt_spark")
 
@@ -130,6 +130,26 @@ def test_partitioned_write_is_not_seeded(spark, tmp_path):
     assert jobs >= 1
     assert back.schema["part"].dataType == T.IntegerType()
     assert back.collect() == [(1, 7)]
+
+
+def test_sink_append_keeps_the_schema_of_an_equal_append(spark, tmp_path):
+    """An append of the dataset's own fields (here from a frame whose
+    fields are not nullable) keeps its schema, so the read-back runs
+    no job; an append with an extra column changes the files' schema,
+    so the read-back infers it."""
+    path = str(tmp_path / "store")
+    sink_overwrite(spark.createDataFrame([(1, "a")], "k bigint, v string"), path)
+    same = spark.range(2, 4).select(F.col("id").alias("k"), F.lit("b").alias("v"))
+    assert not same.schema["k"].nullable
+    sink_append(same, path)
+    back, jobs = _with_jobs(spark, lambda: read_parquet(spark, path))
+    assert jobs == 0
+    assert sorted(back.collect()) == [(1, "a"), (2, "b"), (3, "b")]
+    wider = spark.createDataFrame([(4, "c", 9)], "k bigint, v string, extra int")
+    sink_append(wider, path)
+    back, jobs = _with_jobs(spark, lambda: read_parquet(spark, path))
+    assert jobs >= 1
+    assert back.count() == 4
 
 
 def test_memo_keeps_one_entry_per_path(spark, tmp_path):

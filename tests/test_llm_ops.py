@@ -1522,20 +1522,21 @@ def test_wordpiece_unk_planted_positive_and_negative(spark):
     covered word must NEVER be flagged (planted negative). Also pins
     the short-tail guard: vocab {'ab','a'} (no 'b') on word 'ab'
     matches 'ab'; on word 'b' alone it must go UNK, not false-match
-    the 2-char probe against a shorter suffix."""
-    from gmt_dbt_spark.functions.wordpiece import _wp_word_pieces
+    the 2-char probe against a shorter suffix. An [UNK] word is the
+    single piece [UNK]."""
+    from gmt_dbt_spark.functions.wordpiece import wp_pieces
 
     words = spark.createDataFrame(
         [("abz",), ("ab",), ("b",), ("aab",)], "word string"
     )
     got = {
-        r.word: (r.n_pieces, r.is_unk)
-        for r in _wp_word_pieces(words, {"ab", "a"}).collect()
+        r.word: list(r.pieces)
+        for r in wp_pieces(words, {"ab", "a"}).collect()
     }
-    assert got["abz"] == (1, True)   # planted positive: 'z' uncovered
-    assert got["ab"] == (1, False)   # planted negative: one piece
-    assert got["b"] == (1, True)     # short-tail guard: no false 'ab' match
-    assert got["aab"] == (2, False)  # greedy: 'a' + 'ab'
+    assert got["abz"] == ["[UNK]"]   # planted positive: 'z' uncovered
+    assert got["ab"] == ["ab"]       # planted negative: one piece
+    assert got["b"] == ["[UNK]"]     # short-tail guard: no false 'ab' match
+    assert got["aab"] == ["a", "ab"]  # greedy: 'a' + 'ab'
 
 
 def test_wordpiece_exhaustion_truncates(spark, tmp_path):
@@ -2201,24 +2202,22 @@ def test_wordpiece_roundtrip_unk_is_lossy(spark):
     words in the same doc still decode exactly."""
     from pyspark.sql import functions as F
 
-    from gmt_dbt_spark.functions.tokenizer_roundtrip import (
-        _rebuild_surface,
-        _wp_word_dec,
-    )
+    from gmt_dbt_spark.functions.tokenizer_roundtrip import _rebuild_surface
+    from gmt_dbt_spark.functions.wordpiece import wp_pieces
 
     it = spark.createDataFrame(
         [("cat",), ("dog",), ("qat",)], "word string"
     )
     # vocab lacks 'q': 'qat' must [UNK]; 'cat'/'dog' split clean
-    dec = _wp_word_dec(it, {"c", "a", "t", "d", "o", "g", "ca", "do"})
-    rows = {r.word: (r.n_pieces, r.decoded) for r in dec.collect()}
-    assert rows["cat"] == (2, "cat")  # greedy: 'ca' + 't'
-    assert rows["dog"] == (2, "dog")
-    assert rows["qat"] == (1, "[UNK]")
+    pieces = wp_pieces(it, {"c", "a", "t", "d", "o", "g", "ca", "do"})
+    rows = {r.word: list(r.pieces) for r in pieces.collect()}
+    assert rows["cat"] == ["ca", "t"]  # greedy: 'ca' + 't'
+    assert rows["dog"] == ["do", "g"]
+    assert rows["qat"] == ["[UNK]"]
     docs = spark.createDataFrame(
         [(0, "cat dog"), (1, "qat cat")], "doc_id bigint, text string"
     )
-    out = {r.doc_id: r for r in _rebuild_surface(docs, dec).collect()}
+    out = {r.doc_id: r for r in _rebuild_surface(docs, pieces).collect()}
     assert out[0].ok is True and out[0].n_pieces == 4
     assert out[1].ok is False  # [UNK] broke the rebuild
     assert out[1].rebuilt_md5 == hashlib.md5(b"[UNK] cat").hexdigest()
@@ -2246,56 +2245,53 @@ def test_unigram_segmentation_is_word_ordered(spark, tmp_path):
         assert "".join(r.ps) == r.word, (r.word, r.ps)
 
 
-def test_wordpiece_driver_fold_bit_identical(spark, tmp_path):
-    """The production-merge-count escape hatch (wordpiece.py r8:
-    collect the Heaps-bounded word-count relation once, run the
-    identical integer fold driver-side) must emit a merge table
-    BIT-IDENTICAL to the distributed per-merge chain — same argmax,
-    same (score desc, n desc, a, b) ties, same exhaustion truncation
-    — on randomized corpora including tie-heavy ones, and its final
-    vocabulary must match too."""
-    import random
+def test_tokenizer_surfaces_on_a_zero_token_corpus(spark, tmp_path):
+    """A corpus with no token trains no vocabulary, and every apply
+    surface still answers from the empty (word, pieces) relation: the
+    six encode/fertility surfaces are empty with their columns and
+    types, every doc round-trips to '' with ok=true, and
+    text_ppl_filter bands every doc 'empty' with a NULL score."""
+    from gmt_dbt_spark.registry import all_queries
 
-    from gmt_dbt_spark.functions.wordpiece import (
-        _wp_train_chain,
-        wp_train_driver_fold,
-    )
-
-    for seed in (11, 23, 47):
-        rng = random.Random(seed)
-        alpha = "abc" if seed % 2 else "abcd"
-        words = [
-            "".join(rng.choice(alpha) for _ in range(rng.randint(1, 6)))
-            for _ in range(rng.randint(6, 14))
-        ]
-        texts = [
-            " ".join(rng.choice(words) for _ in range(rng.randint(2, 8)))
-            for _ in range(8)
-        ]
-        d = _write_docs(tmp_path, f"wp_drv_{seed}", texts)
-        docs = spark.read.parquet(d + "/documents.parquet")
-        dist_rows, dist_alpha, dist_it = _wp_train_chain(docs, 6)
-        loc_rows, loc_alpha, loc_vocab = wp_train_driver_fold(docs, 6)
-        assert loc_rows == dist_rows, f"seed {seed}"
-        assert loc_alpha == dist_alpha, f"seed {seed}"
-        dist_vocab = {r["word"]: list(r["syms"]) for r in dist_it.collect()}
-        assert dist_vocab == loc_vocab, f"seed {seed}"
-
-
-def test_wordpiece_driver_fold_word_cap_raises(spark, tmp_path):
-    """The collect is guarded: exceeding WP_COLLECT_MAX_WORDS must
-    raise, never silently materialize an unbounded relation."""
-    import gmt_dbt_spark.functions.wordpiece as wp
-
-    d = _write_docs(tmp_path, "wp_cap", ["one two three four five six"])
-    docs = spark.read.parquet(d + "/documents.parquet")
-    saved = wp.WP_COLLECT_MAX_WORDS
-    try:
-        wp.WP_COLLECT_MAX_WORDS = 3
-        with pytest.raises(ValueError, match="WP_COLLECT_MAX_WORDS"):
-            wp.wp_train_driver_fold(docs, 4)
-    finally:
-        wp.WP_COLLECT_MAX_WORDS = saved
+    d = _write_docs(tmp_path, "zero_tok", ["!!! ???", "...", ""])
+    qs = all_queries()
+    budget = {
+        "text_bpe_encode": "doc_id:bigint n_words:bigint n_bpe_tokens:bigint"
+        " max_word_pieces:int",
+        "text_bpe_fertility": "lang:string n_words:bigint n_bpe_tokens:bigint"
+        " n_split_words:bigint max_word_pieces:int",
+        "text_unigram_encode": "doc_id:bigint n_words:bigint n_pieces:bigint"
+        " max_word_pieces:int",
+        "text_unigram_fertility": "lang:string n_words:bigint n_pieces:bigint"
+        " n_split_words:bigint max_word_pieces:int",
+        "text_wordpiece_encode": "doc_id:bigint n_words:bigint"
+        " n_wp_tokens:bigint n_unk_words:bigint max_word_pieces:int",
+        "text_wordpiece_fertility": "lang:string n_words:bigint"
+        " n_wp_tokens:bigint n_split_words:bigint n_unk_words:bigint"
+        " max_word_pieces:int",
+    }
+    for op, cols in budget.items():
+        df = qs[op](spark, d)
+        assert " ".join(f"{c}:{t}" for c, t in df.dtypes) == cols, op
+        assert df.collect() == [], op
+    empty = hashlib.md5(b"").hexdigest()
+    for op in (
+        "text_bpe_roundtrip",
+        "text_unigram_roundtrip",
+        "text_wordpiece_roundtrip",
+    ):
+        got = {
+            r.doc_id: (r.n_words, r.n_pieces, r.rebuilt_md5, r.ok)
+            for r in qs[op](spark, d).collect()
+        }
+        assert got == {i: (0, 0, empty, True) for i in range(3)}, op
+    ppl = qs["text_ppl_filter"](spark, d)
+    assert ppl.columns == [
+        "doc_id", "n_words", "n_pieces", "score_milli", "band", "keep"
+    ]
+    assert sorted(tuple(r) for r in ppl.collect()) == [
+        (i, 0, 0, None, "empty", False) for i in range(3)
+    ]
 
 
 def test_token_entropy_matches_python_reference(spark, tmp_path):
@@ -2849,3 +2845,55 @@ def test_rrf_fusion_matches_python_reference(spark, tmp_path):
     assert all(k[1] not in (4, 6) or got[k][1] is None for k in got)
     dense0 = {k[1]: v[1] for k, v in got.items() if k[0] == 0 and v[1]}
     assert dense0[5] == max(dense0.values())
+
+
+def test_one_trained_tokenizer_contract():
+    """Source-level gate: each tokenizer family hands its apply
+    surfaces one (word, pieces) relation. The second copies of the
+    WordPiece greedy fold, its wrappers, the hand-typed empty surface
+    and the driver-side WordPiece trainer are gone, and no encode,
+    fertility or round-trip builder explodes the token stream,
+    aggregates or builds a frame itself (`piece_budget` and
+    `_rebuild_surface` do)."""
+    import ast
+    import re
+
+    package = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "gmt_dbt_spark"
+    )
+    gone = (
+        "_wp_greedy",
+        "_wp_greedy_dec",
+        "_wp_word_dec",
+        "_wp_word_pieces",
+        "_empty_surface",
+        "wp_train_driver_fold",
+        "_wp_fold_local",
+        "WP_DRIVER_FOLD_AFTER",
+        "WP_COLLECT_MAX_WORDS",
+    )
+    offenders, builders = [], []
+    for root, _, files in os.walk(package):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            with open(path) as f:
+                text = f.read()
+            rel = os.path.relpath(path, package)
+            offenders += [f"{rel} has {g}" for g in gone if re.search(rf"\b{g}\b", text)]
+            for fn in ast.walk(ast.parse(text)):
+                if not isinstance(fn, ast.FunctionDef) or not re.fullmatch(
+                    r"text_\w+_(encode|fertility|roundtrip)", fn.name
+                ):
+                    continue
+                builders.append(fn.name)
+                for call in ast.walk(fn):
+                    if not isinstance(call, ast.Call):
+                        continue
+                    f = call.func
+                    callee = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+                    if callee in ("tokens_col", "groupBy", "createDataFrame"):
+                        offenders.append(f"{fn.name} calls {callee}")
+    assert len(builders) == 9, sorted(builders)
+    assert not offenders, offenders
