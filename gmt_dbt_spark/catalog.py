@@ -161,3 +161,12 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # construction).
         df = df.filter(F.col("ts").isNotNull())
     return df
+
+
+def sql_over(spark: SparkSession, sf_dir: str, tables: list[str], sql: str) -> DataFrame:
+    """Run ``sql`` with each warehouse table in ``tables`` registered
+    as a temp view of its own name (the path a dbt-style SQL model
+    takes)."""
+    for t in tables:
+        table(spark, sf_dir, t).createOrReplaceTempView(t)
+    return spark.sql(sql)

@@ -410,6 +410,18 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("bg"),
     )
+    return bigram_lm_evidence(big, "n_bigrams")
+
+
+def bigram_lm_evidence(big: DataFrame, n_col: str) -> DataFrame:
+    """The exact integer evidence of a bigram LM over a ``(doc_id,
+    bg)`` stream, ``bg`` = ``"w1 w2"``: per doc the bigram count (as
+    ``n_col``), corpus-hapax bigrams, min/max corpus bigram count, max
+    context count, and ``bound_ok`` — the mean neg-logprob
+    ln(c(w1·)/c(w1w2)) lies in [0, ln(max_ctx_cnt)] since c(w1w2) ≤
+    c(w1·). The bigram- and context-count relations aggregate from
+    the stream and join back (no broadcast hint: AQE broadcasts them
+    while they fit)."""
     bcnt = big.groupBy("bg").agg(F.count(F.lit(1)).alias("cb"))
     ccnt = (
         big.select(F.split("bg", " ").getItem(0).alias("w1"))
@@ -421,7 +433,7 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(ccnt, F.split(big["bg"], " ").getItem(0) == ccnt["w1"])
         .groupBy("doc_id")
         .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
+            F.count(F.lit(1)).alias(n_col),
             F.sum(F.when(F.col("cb") == 1, 1).otherwise(0))
             .cast("bigint")
             .alias("n_hapax"),
@@ -434,7 +446,7 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     eps = 1e-9
     return scored.select(
         "doc_id",
-        "n_bigrams",
+        n_col,
         "n_hapax",
         "min_big_cnt",
         "max_big_cnt",

@@ -70,6 +70,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gmt_dbt_spark.catalog import table
+from gmt_dbt_spark.functions.text import bigram_lm_evidence
 from gmt_dbt_spark.operators.dedup import (
     DUCK_UNI_TOKENS,
     normalize_text,
@@ -1092,40 +1093,7 @@ def text_cjk_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("bg"),
     )
-    bcnt = big.groupBy("bg").agg(F.count(F.lit(1)).alias("cb"))
-    ccnt = (
-        big.select(F.split("bg", " ").getItem(0).alias("w1"))
-        .groupBy("w1")
-        .agg(F.count(F.lit(1)).alias("cc"))
-    )
-    scored = (
-        big.join(bcnt, "bg")
-        .join(ccnt, F.split(big["bg"], " ").getItem(0) == ccnt["w1"])
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_lm_bigrams"),
-            F.sum(F.when(F.col("cb") == 1, 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_hapax"),
-            F.min("cb").cast("bigint").alias("min_big_cnt"),
-            F.max("cb").cast("bigint").alias("max_big_cnt"),
-            F.max("cc").cast("bigint").alias("max_ctx_cnt"),
-            F.avg(F.log(F.col("cc") / F.col("cb"))).alias("__score"),
-        )
-    )
-    eps = 1e-9
-    return scored.select(
-        "doc_id",
-        "n_lm_bigrams",
-        "n_hapax",
-        "min_big_cnt",
-        "max_big_cnt",
-        "max_ctx_cnt",
-        (
-            (F.col("__score") >= -eps)
-            & (F.col("__score") <= F.log(F.col("max_ctx_cnt")) + eps)
-        ).alias("bound_ok"),
-    )
+    return bigram_lm_evidence(big, "n_lm_bigrams")
 
 
 # Gate thresholds — frozen integers (milli units match the signal

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from gmt_dbt_spark.catalog import table
+from gmt_dbt_spark.catalog import sql_over, table
 from gmt_dbt_spark.registry import query
 from gmt_dbt_spark.session import checkpoint
 
@@ -410,12 +410,13 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (two ints/row) is now localCheckpoint'd once and the triangle
     join + edge count read it: 0 parquet scans in the final plan,
     same values (the oracle SQL is unchanged)."""
-    for t in ("lineitem", "part"):
-        table(spark, sf_dir, t).createOrReplaceTempView(t)
-    ps = spark.sql(
+    ps = sql_over(
+        spark,
+        sf_dir,
+        ["lineitem", "part"],
         """SELECT DISTINCT l_partkey AS pk, l_suppkey AS sk
            FROM lineitem JOIN part ON l_partkey = p_partkey
-           WHERE p_size <= 2"""
+           WHERE p_size <= 2""",
     )
     a, b = ps.alias("a"), ps.alias("b")
     # the checkpoint job also counts the edges: the count sizes the

@@ -2,24 +2,36 @@
 
 Images/audio/video are opaque `binary` payload columns with a typed
 metadata struct riding alongside (the Dremel nested-columnar pattern,
-PAPERS.md). The Spark-side plumbing — schema, partition-friendly
-batch iteration, Arrow batch shapes through `mapInPandas` — is real
-and tested; the actual codec decode is STUBBED (no image/audio libs
-in this container): `decode_payload(..., stub=True)` produces a
-deterministic fake feature vector, `stub=False` raises
-NotImplementedError where a real decoder (PIL/librosa/ffmpeg) plugs in.
+PAPERS.md). Everything relational stays in Spark; the per-blob
+Python crosses ONE Arrow seam, `map_rows` (the module's only
+`mapInPandas`), where each row's values go through a module-level
+pure function of decoded pixels or samples (`image_gradient`,
+`phash`, `audio_fingerprint`, ...). Two codecs feed it: the REAL
+WAV/BMP parsers (`codecs.decode_media`, `pixels`, `samples`) and, for
+formats that need PIL/ffmpeg (not in this container), the
+deterministic stub codec `decode_payload` — a fake feature vector
+derived from the content digest that exercises the same seam.
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+import math
+from collections.abc import Callable, Iterable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gmt_dbt_spark.catalog import table
+from gmt_dbt_spark.operators.codecs import (
+    bmp_payload_for,
+    decode_media,
+    parse_bmp,
+    parse_wav,
+    wav_payload_for,
+)
 from gmt_dbt_spark.registry import query
 
 N_FEATURES = 8
@@ -28,6 +40,49 @@ DECODED_SCHEMA = (
     "doc_id bigint, mime string, n_bytes bigint, width int, height int, "
     "features array<float>"
 )
+
+
+def map_rows(
+    df: DataFrame,
+    schema: str,
+    fn: Callable[..., Iterable[tuple]],
+    *cols: str,
+) -> DataFrame:
+    """The one Arrow row seam: ``fn(*values of cols)`` returns the
+    row's output tuples in ``schema`` order — one for a 1→1 map, N for
+    a fan-out (frame sampling). Per-partition Arrow batches, so the
+    per-blob work parallelizes with the scan and payloads never gather
+    to the driver. Batches leave as positional-column frames: Spark
+    takes every name and type from the DDL ``schema`` (an empty batch
+    is a 0-column frame, which Spark accepts)."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                [out for vals in zip(*(pdf[c] for c in cols)) for out in fn(*vals)]
+            )
+
+    return df.select(*cols).mapInPandas(run, schema)
+
+
+def media_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The doc ids whose generated WAV/BMP payloads the real-codec
+    queries decode (their oracles replay the same slice)."""
+    return table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200).select(
+        "doc_id"
+    )
+
+
+def pixels(doc_id: int) -> np.ndarray:
+    """Doc ``doc_id``'s BMP payload decoded by the real parser, as an
+    (h, w, 3) int64 array (widened: uint8 differences wrap)."""
+    return parse_bmp(bmp_payload_for(int(doc_id))).astype(np.int64)
+
+
+def samples(doc_id: int) -> np.ndarray:
+    """Doc ``doc_id``'s WAV payload decoded by the real parser, as
+    int64 PCM samples (widened: int16 products wrap)."""
+    return parse_wav(wav_payload_for(int(doc_id)))["samples"].astype(np.int64)
 
 
 def attach_payload(docs: DataFrame) -> DataFrame:
@@ -48,35 +103,11 @@ def attach_payload(docs: DataFrame) -> DataFrame:
     )
 
 
-def decode_payload(payload: bytes, stub: bool = True) -> dict:
-    """Decode one payload → (width, height, features).
-
-    stub=True: deterministic fake derived from the content digest —
-    exercises every seam (serialization, schema, batching) without a
-    codec. stub=False: REAL decode for WAV/BMP payloads (pure-Python
-    parsers, operators/codecs.py — oracle-checked end-to-end by
-    multimodal_decode_wav/bmp); other formats still raise
-    NotImplementedError (JPEG/MP4 genuinely need PIL/ffmpeg).
-    """
-    if not stub:
-        from gmt_dbt_spark.operators.codecs import decode_media
-
-        d = decode_media(payload)  # raises NotImplementedError for JPEG/MP4
-        if d["kind"] == "image/bmp":
-            n_px = max(1, d["width"] * d["height"])  # 0×0 BMP is legal
-            return {
-                "width": d["width"],
-                "height": d["height"],
-                "features": [
-                    round(d[k] / (255.0 * n_px), 6)
-                    for k in ("sum_r", "sum_g", "sum_b")
-                ],
-            }
-        return {
-            "width": d["n_samples"],
-            "height": 1,
-            "features": [float(d["sample_rate"]), float(d["sumsq"] % 997)],
-        }
+def decode_payload(payload: bytes) -> dict:
+    """The stub codec: one payload → (width, height, features), a
+    deterministic fake derived from the content digest — exercises
+    every seam (serialization, schema, batching) without a codec. The
+    real codec for WAV/BMP is `codecs.decode_media`."""
     digest = hashlib.sha256(payload).digest()
     return {
         "width": 16 + digest[0] % 64,
@@ -85,29 +116,17 @@ def decode_payload(payload: bytes, stub: bool = True) -> dict:
     }
 
 
-def decode_batches(df: DataFrame, stub: bool = True) -> DataFrame:
-    """mapInPandas decode: Arrow batches in, decoded features out.
+def decode_batches(df: DataFrame) -> DataFrame:
+    """Stub decode through the row seam: (doc_id, payload, meta) →
+    DECODED_SCHEMA."""
 
-    Per-partition batch iteration — the decode parallelizes with the
-    scan and never gathers payloads to the driver; at 100 TB this is
-    the pattern for any per-blob CPU work (resize, frame-sample,
-    feature-extract)."""
+    def row(doc_id, meta, payload):
+        d = decode_payload(payload)
+        return [
+            (doc_id, meta["mime"], meta["n_bytes"], d["width"], d["height"], d["features"])
+        ]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [decode_payload(p, stub=stub) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "mime": [m["mime"] for m in pdf["meta"]],
-                    "n_bytes": [m["n_bytes"] for m in pdf["meta"]],
-                    "width": [d["width"] for d in decoded],
-                    "height": [d["height"] for d in decoded],
-                    "features": [d["features"] for d in decoded],
-                }
-            )
-
-    return df.mapInPandas(run, DECODED_SCHEMA)
+    return map_rows(df, DECODED_SCHEMA, row, "doc_id", "meta", "payload")
 
 
 @query(
@@ -191,10 +210,10 @@ FROM d
 
 @query("multimodal_decode", oracle=_decode_oracle())
 def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The mapInPandas decode pipeline with the deterministic stub
+    """The row-seam decode pipeline with the deterministic stub
     codec: payload → (width, height, feature vector). Schema and
-    batch plumbing are the real article; swap stub=False + a codec
-    for production.
+    batch plumbing are the real article; a real codec plugs into
+    `decode_batches` in the stub's place for production.
 
     ORACLE-HASHED since r3 (was rows-only): the stub derives
     everything from sha256 of the payload, and DuckDB's
@@ -213,7 +232,7 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     round(x*1e6) is exact: float32 error ≤6e-8 relative → ≤0.06
     absolute after ×1e6."""
     docs = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    decoded = decode_batches(attach_payload(docs), stub=True)
+    decoded = decode_batches(attach_payload(docs))
     return decoded.select(
         "doc_id",
         "mime",
@@ -238,14 +257,13 @@ RESIZED_SCHEMA = (
 )
 
 
-def resize_payload(payload: bytes, target: int, stub: bool = True) -> dict:
+def resize_payload(payload: bytes, target: int) -> dict:
     """Resize one image payload to fit in a target×target box,
     preserving aspect ratio. Stub codec: dimensions come from the
     content digest (same fake as decode_payload); the 'resized' byte
-    size scales by pixel ratio — deterministic, codec-free."""
-    if not stub:
-        raise NotImplementedError("real resize needs PIL — not in this container")
-    d = decode_payload(payload, stub=True)
+    size scales by pixel ratio — deterministic, codec-free. Keys are
+    in RESIZED_SCHEMA order."""
+    d = decode_payload(payload)
     w, h = d["width"], d["height"]
     scale = min(target / w, target / h, 1.0)
     tw, th = max(1, int(w * scale)), max(1, int(h * scale))
@@ -258,31 +276,25 @@ def resize_payload(payload: bytes, target: int, stub: bool = True) -> dict:
     }
 
 
-def resize_batches(df: DataFrame, target: int = 32, stub: bool = True) -> DataFrame:
-    """mapInPandas resize: 1 row in → 1 row out per payload; batch
-    shape identical to decode (the production pattern for any
-    per-image transform)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rs = [resize_payload(p, target, stub=stub) for p in pdf["payload"]]
-            out = pd.DataFrame(rs)
-            out.insert(0, "doc_id", pdf["doc_id"].astype("int64").values)
-            yield out
-
-    return df.mapInPandas(run, RESIZED_SCHEMA)
+def resize_batches(df: DataFrame, target: int = 32) -> DataFrame:
+    """Resize through the row seam: 1 payload row in → 1 row out."""
+    return map_rows(
+        df,
+        RESIZED_SCHEMA,
+        lambda doc_id, p: [(doc_id, *resize_payload(p, target).values())],
+        "doc_id",
+        "payload",
+    )
 
 
 FRAMES_SCHEMA = "doc_id bigint, frame_idx int, frame_ts_ms bigint, frame_hash string"
 
 
-def sample_frames(payload: bytes, every_ms: int, stub: bool = True) -> list[dict]:
+def sample_frames(payload: bytes, every_ms: int) -> list[dict]:
     """Sample frames from a video payload at a fixed interval.
     Stub codec: duration and per-frame hashes derive deterministically
     from the content digest; a real ffmpeg probe/extract plugs into
     the same signature."""
-    if not stub:
-        raise NotImplementedError("real frame sampling needs ffmpeg")
     digest = hashlib.sha256(payload).digest()
     hexdigest = digest.hex()
     duration_ms = 1000 + int.from_bytes(digest[2:4], "big") % 9000
@@ -296,24 +308,17 @@ def sample_frames(payload: bytes, every_ms: int, stub: bool = True) -> list[dict
     return frames
 
 
-def frame_sample_batches(
-    df: DataFrame, every_ms: int = 1000, stub: bool = True
-) -> DataFrame:
-    """mapInPandas frame sampling: 1 payload row in → N frame rows
-    out (table-function shape through the Arrow boundary) — the
-    per-video fan-out pattern for caption/embedding pipelines."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                for fr in sample_frames(payload, every_ms, stub=stub):
-                    rows.append({"doc_id": int(doc_id), **fr})
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "frame_idx", "frame_ts_ms", "frame_hash"]
-            )
-
-    return df.mapInPandas(run, FRAMES_SCHEMA)
+def frame_sample_batches(df: DataFrame, every_ms: int = 1000) -> DataFrame:
+    """Frame sampling through the row seam: 1 payload row in → N frame
+    rows out (the table-function shape) — the per-video fan-out
+    pattern for caption/embedding pipelines."""
+    return map_rows(
+        df,
+        FRAMES_SCHEMA,
+        lambda doc_id, p: [(doc_id, *f.values()) for f in sample_frames(p, every_ms)],
+        "doc_id",
+        "payload",
+    )
 
 
 def _resize_oracle() -> str:
@@ -351,12 +356,12 @@ FROM t
 @query("multimodal_resize", oracle=_resize_oracle())
 def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aspect-preserving resize over the binary payload column via
-    mapInPandas (stub codec, real plumbing). ORACLE-HASHED since r3:
+    the row seam (stub codec, real plumbing). ORACLE-HASHED since r3:
     DuckDB replays the digest-derived dimensions and the
     scale/truncate arithmetic (both engines truncate doubles the
-    IEEE way), pinning the mapInPandas 1-in-1-out batch seam."""
+    IEEE way), pinning the 1-in-1-out batch seam."""
     docs = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    return resize_batches(attach_payload(docs), target=32, stub=True)
+    return resize_batches(attach_payload(docs), target=32)
 
 
 def _frames_oracle() -> str:
@@ -379,13 +384,13 @@ FROM dur, LATERAL (SELECT unnest(range(0, duration_ms, 1000)) AS ts) g
 
 @query("multimodal_frame_sample", oracle=_frames_oracle())
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-video frame sampling (1 → N rows through mapInPandas),
+    """Per-video frame sampling (1 → N rows through the row seam),
     deterministic stub timeline. ORACLE-HASHED since r3: the stub
     timeline (digest-derived duration, per-frame hash over the hex
     digest + timestamp text) is replayed by DuckDB — pinning the
     1-in-N-out table-function shape through the Arrow boundary."""
     docs = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
-    return frame_sample_batches(attach_payload(docs), every_ms=1000, stub=True)
+    return frame_sample_batches(attach_payload(docs), every_ms=1000)
 
 
 # ------------------------------------------------- REAL codec queries
@@ -427,49 +432,21 @@ def multimodal_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload is a spec-compliant RIFF/WAVE file (PCM16) built from
     deterministic integer samples; a real chunk-walking parser
     (operators/codecs.py:parse_wav — alignment-padded, order-agnostic)
-    decodes it executor-side via mapInPandas, and the emitted stats
+    decodes it executor-side through the row seam, and the emitted stats
     (rate, channels, sample count, duration, energy sum-of-squares)
     are recomputed INDEPENDENTLY by the oracle from range()
     arithmetic — a byte-layout bug in either the writer or the parser
     breaks the hash. The 100 TB shape is the stub pipeline's: Arrow
     batches per partition, payloads never gather to the driver."""
-    from gmt_dbt_spark.operators.codecs import decode_media, wav_payload_for
 
-    docs = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200).select(
-        "doc_id"
-    )
+    def row(doc_id):
+        d = decode_media(wav_payload_for(doc_id))
+        n, rate = d["n_samples"], d["sample_rate"]
+        # duration from the DECODED rate, not a module constant — the
+        # emitted stats must all come from the parse itself
+        return [(doc_id, rate, d["n_channels"], n, n * 1000 // rate, d["sumsq"])]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = decode_media(wav_payload_for(int(doc_id)))
-                rows.append(
-                    (
-                        int(doc_id),
-                        d["sample_rate"],
-                        d["n_channels"],
-                        d["n_samples"],
-                        # duration from the DECODED rate, not a module
-                        # constant — the emitted stats must all come
-                        # from the parse itself
-                        d["n_samples"] * 1000 // d["sample_rate"],
-                        d["sumsq"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "sample_rate",
-                    "n_channels",
-                    "n_samples",
-                    "duration_ms",
-                    "sumsq",
-                ],
-            )
-
-    return docs.mapInPandas(run, WAV_DECODED_SCHEMA)
+    return map_rows(media_docs(spark, sf_dir), WAV_DECODED_SCHEMA, row, "doc_id")
 
 
 BMP_DECODED_SCHEMA = (
@@ -512,33 +489,12 @@ def multimodal_decode_bmp(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the per-channel pixel sums are recomputed INDEPENDENTLY by
     the oracle over range(w)×range(h) — stride or channel-order bugs
     in writer or parser break the hash."""
-    from gmt_dbt_spark.operators.codecs import bmp_payload_for, decode_media
 
-    docs = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200).select(
-        "doc_id"
-    )
+    def row(doc_id):
+        d = decode_media(bmp_payload_for(doc_id))
+        return [(doc_id, d["width"], d["height"], d["sum_r"], d["sum_g"], d["sum_b"])]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = decode_media(bmp_payload_for(int(doc_id)))
-                rows.append(
-                    (
-                        int(doc_id),
-                        d["width"],
-                        d["height"],
-                        d["sum_r"],
-                        d["sum_g"],
-                        d["sum_b"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "width", "height", "sum_r", "sum_g", "sum_b"],
-            )
-
-    return docs.mapInPandas(run, BMP_DECODED_SCHEMA)
+    return map_rows(media_docs(spark, sf_dir), BMP_DECODED_SCHEMA, row, "doc_id")
 
 
 AUDIO_FEATURES_SCHEMA = (
@@ -552,10 +508,6 @@ def audio_features(samples) -> tuple:
     sample vector. Module-level (not closed over) so executors
     re-import it cleanly and property tests can fuzz it directly;
     int64-widens before products (int16 pairwise products wrap)."""
-    import math
-
-    import numpy as np
-
     v = np.asarray(samples).astype(np.int64)
     sumsq = int(np.dot(v, v))
     return (
@@ -602,7 +554,7 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     crossing count (noisiness/voicedness proxy), peak amplitude,
     clipping count (|s| at the rail), and RMS energy. Payloads are
     spec-compliant WAV files round-tripped through the real parser
-    (codecs.py:parse_wav) executor-side via mapInPandas; every
+    (codecs.py:parse_wav) executor-side through the row seam; every
     feature is recomputed INDEPENDENTLY by the oracle from the
     generator's range() arithmetic — parser misalignment, sign, or
     off-by-one sample bugs all break the hash.
@@ -612,37 +564,32 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     conversion, one division, one IEEE sqrt — deterministic on both
     engines. Scale shape: Arrow batches per partition, samples never
     leave the executor, output is 6 scalars per blob."""
-    from gmt_dbt_spark.operators.codecs import parse_wav, wav_payload_for
-
-    docs = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200).select(
-        "doc_id"
+    return map_rows(
+        media_docs(spark, sf_dir),
+        AUDIO_FEATURES_SCHEMA,
+        lambda doc_id: [(doc_id, *audio_features(samples(doc_id)))],
+        "doc_id",
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                v = parse_wav(wav_payload_for(int(doc_id)))["samples"]
-                rows.append((int(doc_id), *audio_features(v)))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "n_samples",
-                    "zero_crossings",
-                    "peak_abs",
-                    "n_clipped",
-                    "rms",
-                ],
-            )
-
-    return docs.mapInPandas(run, AUDIO_FEATURES_SCHEMA)
 
 
 IMAGE_GRADIENT_SCHEMA = (
     "doc_id bigint, width int, height int, grad_h bigint, grad_v bigint, "
     "pix_sum bigint"
 )
+
+
+def image_gradient(px: np.ndarray) -> tuple:
+    """(width, height, grad_h, grad_v, pix_sum) of int64 (h, w, 3)
+    pixels: horizontal and vertical L1 gradient energy and total
+    brightness, all exact integers."""
+    h, w, _ = px.shape
+    return (
+        w,
+        h,
+        int(np.abs(np.diff(px, axis=1)).sum()),
+        int(np.abs(np.diff(px, axis=0)).sum()),
+        int(px.sum()),
+    )
 
 
 @query(
@@ -703,45 +650,26 @@ def multimodal_image_gradient(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactness: uint8 pixels widen to int64 before differencing (the
     uint8 wraparound trap); all features are pure integers. Scale
-    shape: mapInPandas per-partition batches, pixels never leave the
+    shape: row-seam per-partition batches, pixels never leave the
     executor, 6 scalars out per image."""
-    from gmt_dbt_spark.operators.codecs import bmp_payload_for, parse_bmp
-
-    docs = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200).select(
-        "doc_id"
+    return map_rows(
+        media_docs(spark, sf_dir),
+        IMAGE_GRADIENT_SCHEMA,
+        lambda doc_id: [(doc_id, *image_gradient(pixels(doc_id)))],
+        "doc_id",
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                px = parse_bmp(bmp_payload_for(int(doc_id))).astype(np.int64)
-                h, w, _ = px.shape
-                rows.append(
-                    (
-                        int(doc_id),
-                        w,
-                        h,
-                        int(np.abs(np.diff(px, axis=1)).sum()),
-                        int(np.abs(np.diff(px, axis=0)).sum()),
-                        int(px.sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "grad_h", "grad_v", "pix_sum",
-                ],
-            )
-
-    return docs.mapInPandas(run, IMAGE_GRADIENT_SCHEMA)
 
 
 IMAGE_HISTOGRAM_SCHEMA = (
     "doc_id bigint, b0 bigint, b1 bigint, b2 bigint, b3 bigint, n_pix bigint"
 )
+
+
+def image_histogram(px: np.ndarray) -> tuple:
+    """(b0, b1, b2, b3, n_pix): counts of channel values in the four
+    intensity bands of 64, and the channel-value count."""
+    bands = np.bincount(px.ravel() // 64, minlength=4)
+    return (*(int(b) for b in bands[:4]), int(px.size))
 
 
 @query(
@@ -779,43 +707,28 @@ def multimodal_image_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     breaks it — complementing multimodal_image_gradient, whose
     order-sensitive features pin the layout.
 
-    Scale shape: mapInPandas per-partition Arrow batches; one
+    Scale shape: row-seam per-partition Arrow batches; one
     np.bincount per image; 5 scalars out per blob — pixels never
     leave the executor."""
-    from gmt_dbt_spark.operators.codecs import bmp_payload_for, parse_bmp
-
-    docs = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200).select(
-        "doc_id"
+    return map_rows(
+        media_docs(spark, sf_dir),
+        IMAGE_HISTOGRAM_SCHEMA,
+        lambda doc_id: [(doc_id, *image_histogram(pixels(doc_id)))],
+        "doc_id",
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                px = parse_bmp(bmp_payload_for(int(doc_id))).astype(np.int64)
-                bands = np.bincount(px.ravel() // 64, minlength=4)
-                rows.append(
-                    (
-                        int(doc_id),
-                        int(bands[0]),
-                        int(bands[1]),
-                        int(bands[2]),
-                        int(bands[3]),
-                        int(px.size),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "b0", "b1", "b2", "b3", "n_pix"]
-            )
-
-    return docs.mapInPandas(run, IMAGE_HISTOGRAM_SCHEMA)
 
 
 AUDIO_RESAMPLE_SCHEMA = (
     "doc_id bigint, n_out bigint, dec_sum bigint, dec_min bigint, dec_max bigint"
 )
+
+
+def decimate4(s: np.ndarray) -> np.ndarray:
+    """4x boxcar decimation of int64 samples: each output is the mean
+    of 4 consecutive inputs, the sum biased non-negative before the
+    integer division ((sum + 4004) div 4 - 1001) so floor and
+    truncating division agree."""
+    return (s.reshape(-1, 4).sum(axis=1) + 4004) // 4 - 1001
 
 
 @query(
@@ -856,40 +769,15 @@ def multimodal_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     negative sums. Frame counts are always whole (n is a multiple of
     4 by construction; a production resampler pads the tail).
 
-    Scale shape: mapInPandas per-partition Arrow batches; one reshape
+    Scale shape: row-seam per-partition Arrow batches; one reshape
     + mean per blob; 4 scalars out per clip, samples never leave the
     executor."""
-    from gmt_dbt_spark.operators.codecs import parse_wav, wav_payload_for
 
-    docs = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200).select(
-        "doc_id"
-    )
+    def row(doc_id):
+        dec = decimate4(samples(doc_id))
+        return [(doc_id, dec.size, int(dec.sum()), int(dec.min()), int(dec.max()))]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                sm = parse_wav(wav_payload_for(int(doc_id)))["samples"].astype(
-                    np.int64
-                )
-                frames = sm.reshape(-1, 4).sum(axis=1)
-                dec = (frames + 4004) // 4 - 1001
-                rows.append(
-                    (
-                        int(doc_id),
-                        int(dec.size),
-                        int(dec.sum()),
-                        int(dec.min()),
-                        int(dec.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "n_out", "dec_sum", "dec_min", "dec_max"]
-            )
-
-    return docs.mapInPandas(run, AUDIO_RESAMPLE_SCHEMA)
+    return map_rows(media_docs(spark, sf_dir), AUDIO_RESAMPLE_SCHEMA, row, "doc_id")
 
 
 
@@ -935,6 +823,27 @@ def _hamming_band_pairs(sig: DataFrame, hash_col: str) -> DataFrame:
 
 
 PHASH_SCHEMA = "doc_id bigint, phash bigint"
+
+
+def phash(px: np.ndarray) -> int:
+    """63-bit dHash of int64 (h, w, 3) pixels on the 8x8
+    nearest-neighbor grid ((i*w)//8, (j*h)//8) of the exact integer
+    grayscale (3-channel sum): bits 0..55 are the 8 rows' 7
+    horizontal gradient signs, bits 56..62 the 7 vertical gradient
+    signs down sampled column 0 (the orientation pin)."""
+    gray = px.sum(axis=2)
+    h, w = gray.shape
+    xs = [(i * w) // 8 for i in range(8)]
+    ys = [(j * h) // 8 for j in range(8)]
+    ph = 0
+    for j in range(8):
+        for i in range(7):
+            if gray[ys[j], xs[i + 1]] > gray[ys[j], xs[i]]:
+                ph |= 1 << (j * 7 + i)
+    for j in range(7):
+        if gray[ys[j + 1], xs[0]] > gray[ys[j], xs[0]]:
+            ph |= 1 << (56 + j)
+    return ph
 
 _PHASH_ORACLE = """
 WITH d AS (
@@ -1030,46 +939,35 @@ def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold over the full 63-bit hash, because ≤3 total differing
     bits means ≤3 differing bits in any subset.
 
-    Scale shape: mapInPandas per-partition Arrow batches emit 8 bytes
+    Scale shape: row-seam per-partition Arrow batches emit 8 bytes
     per image; banding join + verify is the dedup_simhash plan. At
     production scale the hot-bucket cap (dedup.py:SIMHASH_BUCKET_CAP)
     applies identically — the fixture's 24 geometry classes keep
     buckets tiny, so this surface stays uncapped by design."""
-    from gmt_dbt_spark.operators.codecs import bmp_payload_for, parse_bmp
-
-    docs = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200).select(
-        "doc_id"
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                px = parse_bmp(bmp_payload_for(int(doc_id))).astype(np.int64)
-                h, w, _ = px.shape
-                gray = px.sum(axis=2)
-                xs = [(i * w) // 8 for i in range(8)]
-                ys = [(j * h) // 8 for j in range(8)]
-                ph = 0
-                for j in range(8):
-                    for i in range(7):
-                        if gray[ys[j], xs[i + 1]] > gray[ys[j], xs[i]]:
-                            ph |= 1 << (j * 7 + i)
-                # bits 56..62: vertical gradients down sampled column
-                # 0 — the class-complete orientation pin (r7)
-                for j in range(7):
-                    if gray[ys[j + 1], xs[0]] > gray[ys[j], xs[0]]:
-                        ph |= 1 << (56 + j)
-                rows.append((int(doc_id), ph))
-            yield pd.DataFrame(rows, columns=["doc_id", "phash"])
-
-    sig = docs.mapInPandas(run, PHASH_SCHEMA).localCheckpoint(eager=True)
+    sig = map_rows(
+        media_docs(spark, sf_dir),
+        PHASH_SCHEMA,
+        lambda doc_id: [(doc_id, phash(pixels(doc_id)))],
+        "doc_id",
+    ).localCheckpoint(eager=True)
     return _hamming_band_pairs(sig, "phash")
 
 
 AUDIO_FP_SCHEMA = "doc_id bigint, afp bigint"
+
+
+def audio_fingerprint(s: np.ndarray) -> int:
+    """56-bit energy-contour hash of int64 samples: sample i falls in
+    frame (i*57)//n, bit k is set when frame k+1's exact energy
+    (sum of squares) exceeds frame k's."""
+    n = s.size
+    e = np.zeros(57, dtype=np.int64)
+    np.add.at(e, (np.arange(n) * 57) // n, s * s)
+    fp = 0
+    for i in range(56):
+        if e[i + 1] > e[i]:
+            fp |= 1 << i
+    return fp
 
 _AUDIO_FP_ORACLE = """
 WITH d AS (
@@ -1124,7 +1022,7 @@ def multimodal_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     energy rises from frame k to k+1 — then the same 4×14-bit Manku
     banding + `bit_count(xor)` Hamming ≤ 3 verify as the image path.
     Only 8-byte fingerprints shuffle; samples never leave the
-    mapInPandas batch.
+    row-seam batch.
 
     Energy contours are the RIGHT invariant for near-dup audio: they
     survive the re-encodes and level changes that break byte-level
@@ -1132,31 +1030,10 @@ def multimodal_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer — no FFT, no float, so DuckDB replays the ENTIRE chain
     (waveform → framing → energies → bits → banding → verify) from
     the sample generator's modular arithmetic."""
-    from gmt_dbt_spark.operators.codecs import parse_wav, wav_payload_for
-
-    docs = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200).select(
-        "doc_id"
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                s = parse_wav(wav_payload_for(int(doc_id)))["samples"].astype(
-                    np.int64
-                )
-                n = s.size
-                k = (np.arange(n) * 57) // n
-                e = np.zeros(57, dtype=np.int64)
-                np.add.at(e, k, s * s)
-                fp = 0
-                for i in range(56):
-                    if e[i + 1] > e[i]:
-                        fp |= 1 << i
-                rows.append((int(doc_id), fp))
-            yield pd.DataFrame(rows, columns=["doc_id", "afp"])
-
-    sig = docs.mapInPandas(run, AUDIO_FP_SCHEMA).localCheckpoint(eager=True)
+    sig = map_rows(
+        media_docs(spark, sf_dir),
+        AUDIO_FP_SCHEMA,
+        lambda doc_id: [(doc_id, audio_fingerprint(samples(doc_id)))],
+        "doc_id",
+    ).localCheckpoint(eager=True)
     return _hamming_band_pairs(sig, "afp")

@@ -18,16 +18,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from gmt_dbt_spark.catalog import table
+from gmt_dbt_spark.catalog import sql_over, table
 from gmt_dbt_spark.registry import query
 
 _DSUM = "CAST(CAST(SUM(CAST({x} AS DECIMAL(25,6))) AS {str_t}) AS DOUBLE)"
-
-
-def _sql(spark: SparkSession, sf_dir: str, tables: list[str], sql: str) -> DataFrame:
-    for t in tables:
-        table(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(sql)
 
 
 @query(
@@ -46,7 +40,7 @@ FROM cust_counts GROUP BY n_big
 )
 def sql_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chained CTEs (the shape every nontrivial dbt model uses)."""
-    return _sql(
+    return sql_over(
         spark,
         sf_dir,
         ["orders"],
@@ -79,7 +73,7 @@ GROUP BY p_brand
 def sql_subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Uncorrelated scalar subquery in a predicate (above-average
     filter) — planned as a one-row broadcast, not a driver collect."""
-    return _sql(
+    return sql_over(
         spark,
         sf_dir,
         ["part"],
@@ -110,7 +104,7 @@ GROUP BY o_orderpriority
 def sql_exists_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated EXISTS (TPC-H Q4 shape) — Catalyst decorrelates to
     a left-semi join on l_orderkey; no per-row subquery execution."""
-    return _sql(spark, sf_dir, ["orders", "lineitem"], _Q_EXISTS)
+    return sql_over(spark, sf_dir, ["orders", "lineitem"], _Q_EXISTS)
 
 
 _Q_IN = """
@@ -124,7 +118,7 @@ GROUP BY s_nationkey
 @query("sql_in_subquery", oracle=_Q_IN)
 def sql_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN-subquery → left-semi join after decorrelation."""
-    return _sql(spark, sf_dir, ["supplier", "lineitem"], _Q_IN)
+    return sql_over(spark, sf_dir, ["supplier", "lineitem"], _Q_IN)
 
 
 _Q_PIVOT = """
@@ -143,7 +137,7 @@ GROUP BY l_returnflag
 @query("sql_case_pivot", oracle=_Q_PIVOT)
 def sql_case_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional-aggregation pivot (TPC-H Q12 shape)."""
-    return _sql(spark, sf_dir, ["orders", "lineitem"], _Q_PIVOT)
+    return sql_over(spark, sf_dir, ["orders", "lineitem"], _Q_PIVOT)
 
 
 @query(
@@ -227,7 +221,7 @@ def sql_correlated_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated scalar aggregate subquery (TPC-H Q17 shape:
     below-group-average filter) — Catalyst decorrelates it to one
     aggregate-then-join, not a per-row re-aggregation."""
-    return _sql(spark, sf_dir, ["part"], _q_corr("STRING"))
+    return sql_over(spark, sf_dir, ["part"], _q_corr("STRING"))
 
 
 _Q_NESTED = """
@@ -248,7 +242,7 @@ def sql_nested_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-level nested IN subqueries with a HAVING gate (TPC-H Q20
     shape) — both levels decorrelate to semi-joins around one
     aggregate; nothing executes per-row."""
-    return _sql(spark, sf_dir, ["supplier", "lineitem", "part"], _Q_NESTED)
+    return sql_over(spark, sf_dir, ["supplier", "lineitem", "part"], _Q_NESTED)
 
 
 _Q1_BODY = """
@@ -291,7 +285,7 @@ def tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 pricing summary — the canonical wide-aggregate scan;
     map-side partial aggregation reduces 6 M rows/SF to 4 groups
     before the single shuffle."""
-    return _sql(spark, sf_dir, ["lineitem"], _q1("STRING"))
+    return sql_over(spark, sf_dir, ["lineitem"], _q1("STRING"))
 
 
 _Q3 = """
@@ -324,7 +318,7 @@ def _q3(str_t: str) -> str:
 def tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shipping priority — selective dim filter broadcast
     into the fact join, group-sum, deterministic top-10."""
-    return _sql(spark, sf_dir, ["customer", "orders", "lineitem"], _q3("STRING"))
+    return sql_over(spark, sf_dir, ["customer", "orders", "lineitem"], _q3("STRING"))
 
 
 _Q_RCTE_SPARK = """
@@ -362,7 +356,7 @@ def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     supported (monotone series), not UNION-distinct — so cyclic-graph
     closure stays with the iterative operator (operators/graph.py),
     which is also the right 100 TB plan."""
-    return _sql(spark, sf_dir, ["orders"], _Q_RCTE_SPARK)
+    return sql_over(spark, sf_dir, ["orders"], _Q_RCTE_SPARK)
 
 
 
@@ -391,7 +385,7 @@ def sql_reuse_exchange(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumers to ReusedExchange nodes (pinned in tests) — the
     plan-level sharing that keeps multi-consumer CTEs from
     re-scanning the fact table once per reference at 100 TB."""
-    return _sql(spark, sf_dir, ["customer"], _Q_REUSE.format(str_t="STRING"))
+    return sql_over(spark, sf_dir, ["customer"], _Q_REUSE.format(str_t="STRING"))
 
 
 _Q_GBA = """
@@ -410,7 +404,7 @@ def sql_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     select items) — the modern-SQL ergonomic both Spark and DuckDB
     ship; one less way for a 40-column rollup model to silently
     drift from its select list."""
-    return _sql(spark, sf_dir, ["orders"], _Q_GBA.format(str_t="STRING"))
+    return sql_over(spark, sf_dir, ["orders"], _Q_GBA.format(str_t="STRING"))
 
 
 _Q_LCA = """
@@ -436,7 +430,7 @@ def sql_lateral_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
     by `gross_dbl`, all in ONE select — the expression-pipeline
     style dbt models use heavily (vs nested subselects). The final
     projection keeps only the oracle-stable double."""
-    df = _sql(spark, sf_dir, ["lineitem"], _Q_LCA.format(str_t="STRING"))
+    df = sql_over(spark, sf_dir, ["lineitem"], _Q_LCA.format(str_t="STRING"))
     return df.select("l_orderkey", "l_linenumber", "gross_dbl")
 
 
@@ -462,7 +456,7 @@ def sql_lateral_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-shuffle plan as the explicit row_number() form, so the
     ergonomic spelling costs nothing at scale. Ties broken by
     c_name so both engines pick identical rows."""
-    return _sql(spark, sf_dir, ["nation", "customer"], _Q_LATERAL)
+    return sql_over(spark, sf_dir, ["nation", "customer"], _Q_LATERAL)
 
 
 @query(
@@ -485,8 +479,6 @@ def sql_udf_sql_body(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-at-a-time Python UDF it is free at 100 TB. Body does the
     exact-decimal net-price arithmetic; oracle inlines the same
     expression."""
-    for t in ["lineitem"]:
-        table(spark, sf_dir, t).createOrReplaceTempView(t)
     spark.sql(
         """
         CREATE OR REPLACE TEMPORARY FUNCTION net_price(ep DOUBLE, d DOUBLE)
@@ -495,7 +487,10 @@ def sql_udf_sql_body(spark: SparkSession, sf_dir: str) -> DataFrame:
                     * CAST(1 - d AS DECIMAL(18,6)) AS DECIMAL(25,6))
         """
     )
-    return spark.sql(
+    return sql_over(
+        spark,
+        sf_dir,
+        ["lineitem"],
         """
         SELECT l_returnflag,
                CAST(CAST(SUM(net_price(l_extendedprice, l_discount)) AS STRING)
@@ -503,7 +498,7 @@ def sql_udf_sql_body(spark: SparkSession, sf_dir: str) -> DataFrame:
                COUNT(*) AS n_lines
         FROM lineitem
         GROUP BY l_returnflag
-        """
+        """,
     )
 
 

@@ -22,19 +22,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from gmt_dbt_spark.catalog import table
+from gmt_dbt_spark.catalog import sql_over
 from gmt_dbt_spark.registry import query
 
 _DSUM = "CAST(CAST(SUM(CAST({x} AS DECIMAL(25,6))) AS {str_t}) AS DOUBLE)"
 _REV = (
     "CAST(l_extendedprice AS DECIMAL(18,6)) * CAST(1 - l_discount AS DECIMAL(18,6))"
 )
-
-
-def _sql(spark: SparkSession, sf_dir: str, tables: list[str], sql: str) -> DataFrame:
-    for t in tables:
-        table(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(sql)
 
 
 # --- Q2 shape: correlated MIN over a join (min-cost supplier) -------------
@@ -61,7 +55,7 @@ def tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the fact join — Catalyst decorrelates to one per-part
     aggregate joined back, not a per-row rescan; the p_size filter
     pushes into the part scan and prunes before the join."""
-    return _sql(spark, sf_dir, ["part", "lineitem", "supplier"], _Q2)
+    return sql_over(spark, sf_dir, ["part", "lineitem", "supplier"], _Q2)
 
 
 # --- Q14: conditional-aggregation ratio (promo revenue %) -----------------
@@ -90,7 +84,7 @@ def tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     one pass over a month of lineitem joined to part (broadcast —
     part is a dimension). Both sums take the exact-DECIMAL route;
     the final ratio is one deterministic double division."""
-    return _sql(spark, sf_dir, ["lineitem", "part"], _q14("STRING"))
+    return sql_over(spark, sf_dir, ["lineitem", "part"], _q14("STRING"))
 
 
 # --- Q16 shape: NOT IN subquery + COUNT(DISTINCT) -------------------------
@@ -113,7 +107,7 @@ def tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join (broadcast: the blacklist is tiny), then a two-phase
     distinct aggregation. partsupp is substituted by the lineitem
     part↔supplier bridge (TESTDATA.md has no partsupp)."""
-    return _sql(spark, sf_dir, ["part", "lineitem", "supplier"], _Q16)
+    return sql_over(spark, sf_dir, ["part", "lineitem", "supplier"], _Q16)
 
 
 # --- Q18: HAVING-IN mega-orders -------------------------------------------
@@ -139,7 +133,7 @@ def tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate with HAVING — planned as agg→filter→semi-join feeding
     the 3-way join, so only qualifying orderkeys reach the wide
     grouping. The semi-join side is small after HAVING → broadcast."""
-    return _sql(spark, sf_dir, ["customer", "orders", "lineitem"], _q18("STRING"))
+    return sql_over(spark, sf_dir, ["customer", "orders", "lineitem"], _q18("STRING"))
 
 
 # --- Q19: disjunctive multi-predicate join --------------------------------
@@ -167,7 +161,7 @@ def tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-side conjuncts (p_brand/p_size → part scan, l_quantity →
     lineitem scan) as pushed-down filters, leaving only the residual
     OR to evaluate post-join."""
-    return _sql(spark, sf_dir, ["lineitem", "part"], _q19("STRING"))
+    return sql_over(spark, sf_dir, ["lineitem", "part"], _q19("STRING"))
 
 
 # --- Q22 shape: NOT EXISTS + scalar-avg gate ------------------------------
@@ -205,7 +199,7 @@ def tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar average (one-row broadcast), a NOT EXISTS anti-join
     against orders, and a substring-derived grouping key — the
     customers-without-orders anti-pattern at its classic worst."""
-    return _sql(spark, sf_dir, ["customer", "orders"], _q22("STRING"))
+    return sql_over(spark, sf_dir, ["customer", "orders"], _q22("STRING"))
 
 
 # --- Q7: nation-pair trade volume by year ---------------------------------
@@ -239,7 +233,7 @@ def tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation (supplier's and customer's) and a symmetric nation-pair
     disjunction. nation broadcasts twice under distinct aliases; the
     pair filter prunes both broadcast sides before the fact join."""
-    return _sql(
+    return sql_over(
         spark,
         sf_dir,
         ["supplier", "lineitem", "orders", "customer", "nation"],
@@ -273,7 +267,7 @@ def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     into a 4-way join, per-customer revenue, deterministic top-20
     (revenue desc, custkey tiebreak → TakeOrderedAndProject, no
     global sort)."""
-    return _sql(
+    return sql_over(
         spark, sf_dir, ["customer", "orders", "lineitem", "nation"], _q10("STRING")
     )
 
@@ -302,7 +296,7 @@ def tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside ON — pushed to the orders scan, never dropping customers),
     COUNT of the nullable side, then a histogram re-aggregation. Two
     shuffles: custkey, then c_count (tiny)."""
-    return _sql(spark, sf_dir, ["customer", "orders"], _Q13)
+    return sql_over(spark, sf_dir, ["customer", "orders"], _Q13)
 
 
 # --- Q15: top supplier via CTE reused twice -------------------------------
@@ -331,7 +325,7 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar-MAX subquery). The equality-on-aggregate predicate is safe
     because both engines compute the revenue through the exact
     DECIMAL route — identical doubles, identical argmax set."""
-    return _sql(spark, sf_dir, ["supplier", "lineitem"], _q15("STRING"))
+    return sql_over(spark, sf_dir, ["supplier", "lineitem"], _q15("STRING"))
 
 
 # --- Q21 shape: EXISTS + NOT EXISTS double-correlation --------------------
@@ -366,4 +360,4 @@ def tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     decorrelation pattern in the classic suite. Catalyst plans both
     subqueries as joins on l_orderkey (no per-row re-scan);
     deterministic top-10 via the numwait/s_name total order."""
-    return _sql(spark, sf_dir, ["supplier", "lineitem", "orders"], _Q21)
+    return sql_over(spark, sf_dir, ["supplier", "lineitem", "orders"], _Q21)

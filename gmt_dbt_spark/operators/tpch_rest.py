@@ -27,19 +27,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from gmt_dbt_spark.catalog import table
+from gmt_dbt_spark.catalog import sql_over
 from gmt_dbt_spark.registry import query
 
 _DSUM = "CAST(CAST(SUM(CAST({x} AS DECIMAL(25,6))) AS {str_t}) AS DOUBLE)"
 _REV = (
     "CAST(l_extendedprice AS DECIMAL(18,6)) * CAST(1 - l_discount AS DECIMAL(18,6))"
 )
-
-
-def _sql(spark: SparkSession, sf_dir: str, tables: list[str], sql: str) -> DataFrame:
-    for t in tables:
-        table(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(sql)
 
 
 # --- Q4: order-priority checking (EXISTS semi-join) -----------------------
@@ -62,7 +56,7 @@ def tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 order-priority checking: correlated EXISTS planned as
     a left semi-join (lineitem side aggregated away — no row
     multiplication), quarter filter pushed to the orders scan."""
-    return _sql(spark, sf_dir, ["orders", "lineitem"], _Q4)
+    return sql_over(spark, sf_dir, ["orders", "lineitem"], _Q4)
 
 
 # --- Q5: local-supplier volume (6-way join, nation = both roles) ----------
@@ -92,7 +86,7 @@ def tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     the supplier join. region→nation→supplier all broadcast; the
     region filter prunes the nation broadcast before the fact join,
     so only ASIA suppliers ever probe lineitem."""
-    return _sql(
+    return sql_over(
         spark,
         sf_dir,
         ["customer", "orders", "lineitem", "supplier", "nation", "region"],
@@ -127,7 +121,7 @@ def tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate — the purest pushdown test in the suite. All three
     predicates reach the parquet scan (min/max row-group skipping on
     l_shipdate); no shuffle beyond the final 1-row reduce."""
-    return _sql(spark, sf_dir, ["lineitem"], _q6("STRING"))
+    return sql_over(spark, sf_dir, ["lineitem"], _q6("STRING"))
 
 
 # --- Q8: national market share (two-role nation, conditional ratio) -------
@@ -172,7 +166,7 @@ def tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both sums ride one aggregation pass; the ratio divides two
     exact doubles. Note the inner volume stays DECIMAL until the
     outer aggregate — no intermediate double rounding."""
-    return _sql(
+    return sql_over(
         spark,
         sf_dir,
         ["part", "lineitem", "supplier", "orders", "customer", "nation", "region"],
@@ -214,7 +208,7 @@ def tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact DECIMAL, aggregated by (supplier nation, order year). The
     '%gear%' contains-filter can't use stats but still prunes part
     before the join (filter below join in the plan)."""
-    return _sql(
+    return sql_over(
         spark,
         sf_dir,
         ["part", "lineitem", "supplier", "orders", "nation"],
@@ -259,7 +253,7 @@ def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     total). The scalar side reduces to one row and broadcasts; both
     aggregates take the exact-DECIMAL route so the > compare is
     deterministic across engines."""
-    return _sql(
+    return sql_over(
         spark, sf_dir, ["lineitem", "supplier", "nation"], _q11("STRING")
     )
 
@@ -288,7 +282,7 @@ def tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     with an inter-column join predicate (shipped after ordered) that
     must evaluate post-join while the IN-list and date range push to
     the lineitem scan. Integer counts — exact everywhere."""
-    return _sql(spark, sf_dir, ["orders", "lineitem"], _Q12)
+    return sql_over(spark, sf_dir, ["orders", "lineitem"], _Q12)
 
 
 # --- Q17: small-quantity-order revenue (correlated AVG gate) --------------
@@ -321,7 +315,7 @@ def tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no per-row rescan of lineitem); the brand/size filter prunes
     part to a handful of keys that then gate BOTH the fact probe and
     the decorrelated aggregate via the join."""
-    return _sql(spark, sf_dir, ["lineitem", "part"], _q17("STRING"))
+    return sql_over(spark, sf_dir, ["lineitem", "part"], _q17("STRING"))
 
 
 # --- Q20: potential part promotion (nested IN with grouped HAVING) --------
@@ -350,6 +344,6 @@ def tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     of small-parts this year") — planned as agg→filter→semi-join,
     with the tiny qualifying-supplier set broadcast against the
     nation-filtered supplier dim. SUM(l_quantity) is integer-exact."""
-    return _sql(
+    return sql_over(
         spark, sf_dir, ["supplier", "nation", "lineitem", "part"], _Q20
     )

@@ -120,21 +120,6 @@ def test_decode_stub_deterministic():
     assert len(one["features"]) == 8
 
 
-def test_decode_stub_false_raises_for_unknown_formats():
-    """stub=False now REALLY decodes WAV/BMP (codecs.py) but must
-    still refuse to fake formats it cannot parse."""
-    with pytest.raises(NotImplementedError):
-        decode_payload(b"x", stub=False)
-
-    from gmt_dbt_spark.operators.codecs import bmp_payload_for, wav_payload_for
-
-    img = decode_payload(bmp_payload_for(5), stub=False)
-    assert (img["width"], img["height"]) == (13, 11)
-    assert len(img["features"]) == 3
-    aud = decode_payload(wav_payload_for(5), stub=False)
-    assert aud["width"] == 800  # n_samples (5 % 5 == 0)
-
-
 def test_decode_batches_plumbing(spark, reviews):
     docs = reviews.limit(20).select(
         F.monotonically_increasing_id().alias("doc_id"), F.col("text")
@@ -427,7 +412,8 @@ def test_decode_media_sniffs_and_rejects():
 def test_codec_edge_contracts():
     """r2 review fixes pinned: truncated data chunks fail loudly,
     non-WAVE RIFF containers raise NotImplementedError (the stub
-    seam's skip signal), and a 0-dim BMP cannot divide by zero."""
+    seam's skip signal), and a 0×0 BMP decodes to width 0 and zero
+    channel sums."""
     import struct
 
     import pytest as _pytest
@@ -438,7 +424,6 @@ def test_codec_edge_contracts():
         parse_wav,
         wav_samples_for,
     )
-    from gmt_dbt_spark.operators.multimodal import decode_payload
 
     raw = make_wav(wav_samples_for(1))
     with _pytest.raises(ValueError, match="truncated"):
@@ -453,8 +438,9 @@ def test_codec_edge_contracts():
     from gmt_dbt_spark.operators.codecs import make_bmp
 
     empty = make_bmp(np.zeros((0, 0, 3), dtype=np.uint8))
-    d = decode_payload(empty, stub=False)
-    assert d["width"] == 0 and d["features"] == [0.0, 0.0, 0.0]
+    d = decode_media(empty)
+    assert d["width"] == 0
+    assert (d["sum_r"], d["sum_g"], d["sum_b"]) == (0, 0, 0)
 
 
 def test_pca_power_invariant_to_partitioning(spark):
@@ -2897,3 +2883,37 @@ def test_one_trained_tokenizer_contract():
                         offenders.append(f"{fn.name} calls {callee}")
     assert len(builders) == 9, sorted(builders)
     assert not offenders, offenders
+
+
+def test_one_media_row_seam():
+    """Source-level gate: every per-blob computation in multimodal.py
+    crosses the one Arrow seam `map_rows` (its only `mapInPandas(`),
+    whose batches carry positional columns named by the DDL schema (no
+    `columns=` list restating them), and no function in the package
+    takes the test-only `stub` switch (the stub codec is
+    `decode_payload`, the real one `codecs.decode_media`)."""
+    import ast
+
+    package = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "gmt_dbt_spark"
+    )
+    with open(os.path.join(package, "operators", "multimodal.py")) as f:
+        text = f.read()
+    assert text.count("mapInPandas(") == 1
+    assert "columns=" not in text
+    stub_params = []
+    for root, _, files in os.walk(package):
+        for name in files:
+            if name.endswith(".py"):
+                with open(os.path.join(root, name)) as f:
+                    tree = ast.parse(f.read())
+                stub_params += [
+                    f"{name}:{fn.name}"
+                    for fn in ast.walk(tree)
+                    if isinstance(fn, ast.FunctionDef)
+                    and any(
+                        a.arg == "stub"
+                        for a in fn.args.args + fn.args.kwonlyargs + fn.args.posonlyargs
+                    )
+                ]
+    assert not stub_params, stub_params

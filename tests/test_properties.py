@@ -249,8 +249,8 @@ def test_phash_is_orientation_sensitive():
     """multimodal_phash_dedup's headline claim — the dHash pins image
     ORIENTATION (the order-free sum/histogram oracles can't) — must
     not be vacuous: a vertical flip of the decoded pixels has to
-    change the hash for EVERY fixture image. Pure-Python mirror of
-    the op's hash loop.
+    change the hash for EVERY fixture image. Calls the op's own
+    `phash` over the op's own decoded `pixels`.
 
     r7 made the pin CLASS-COMPLETE: the 56 horizontal-gradient bits
     alone were flip-sensitive on only 19/48 geometry classes (the
@@ -260,34 +260,18 @@ def test_phash_is_orientation_sensitive():
     flip reverses that comparison chain and survives only under an
     anti-symmetric tie pattern. Measured: 48/48 classes AND 200/200
     fixture images flip-sensitive, both asserted exactly."""
-    import numpy as np
-
-    from gmt_dbt_spark.operators.codecs import bmp_payload_for, parse_bmp
-
-    def phash(gray):
-        h, w = gray.shape
-        xs = [(i * w) // 8 for i in range(8)]
-        ys = [(j * h) // 8 for j in range(8)]
-        ph = 0
-        for j in range(8):
-            for i in range(7):
-                if gray[ys[j], xs[i + 1]] > gray[ys[j], xs[i]]:
-                    ph |= 1 << (j * 7 + i)
-        for j in range(7):
-            if gray[ys[j + 1], xs[0]] > gray[ys[j], xs[0]]:
-                ph |= 1 << (56 + j)
-        return ph
+    from gmt_dbt_spark.operators.multimodal import phash, pixels
 
     changed_classes = 0
     for doc_id in range(0, 48):  # covers every (w, h) geometry class
-        gray = parse_bmp(bmp_payload_for(doc_id)).astype(np.int64).sum(axis=2)
-        if phash(gray) != phash(gray[::-1]):
+        px = pixels(doc_id)
+        if phash(px) != phash(px[::-1]):
             changed_classes += 1
     assert changed_classes == 48, f"flip changed only {changed_classes}/48"
     changed_imgs = 0
     for doc_id in range(0, 200):  # the full registered fixture slice
-        gray = parse_bmp(bmp_payload_for(doc_id)).astype(np.int64).sum(axis=2)
-        if phash(gray) != phash(gray[::-1]):
+        px = pixels(doc_id)
+        if phash(px) != phash(px[::-1]):
             changed_imgs += 1
     assert changed_imgs == 200, f"flip changed only {changed_imgs}/200"
 
